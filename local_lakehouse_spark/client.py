@@ -174,19 +174,13 @@ class LakehouseClient:
             raise UnsupportedOperationError(
                 f"Table {tbl.full_name} is not a DELTA table"
             )
-        if not _io.HAVE_DELTA:
-            # Pure-Python Delta log facade (sources/delta_py.py):
-            # toDF/history/detail/vacuum over the real _delta_log.
-            from .sources.delta_py import PyDeltaTable
+        # Pure-Python Delta log facade (sources/delta_py.py):
+        # toDF/history/detail/vacuum over the real _delta_log.
+        from .sources.delta_py import PyDeltaTable
 
-            return PyDeltaTable(
-                self._require_spark(),
-                _io.strip_file_scheme(tbl.storage_location or ""),
-            )
-        from delta.tables import DeltaTable  # type: ignore
-
-        return DeltaTable.forPath(
-            self._require_spark(), _io.strip_file_scheme(tbl.storage_location or "")
+        return PyDeltaTable(
+            self._require_spark(),
+            _io.strip_file_scheme(tbl.storage_location or ""),
         )
 
     def sync_delta_properties(self, catalog: str, schema: str, name: str) -> Table:
@@ -270,11 +264,10 @@ class LakehouseClient:
         the metadata-cost profile of Delta's log-retained versions;
         in-place mutations (partitioned append / dynamic partition
         overwrite) are not snapshotted (that granularity is what a
-        commit log buys — DELTA tables use delta-spark's own time
-        travel)."""
+        commit log buys — DELTA tables list their log versions)."""
         tbl = self.get_table(catalog, schema, name)
         path = tbl.storage_location.removeprefix("file://")
-        if tbl.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+        if tbl.file_type == FileType.DELTA:
             from .sources.delta_py import DeltaLog
 
             return DeltaLog(path).versions()
@@ -493,10 +486,9 @@ class LakehouseClient:
             )
             return
         if timestamp is not None:
-            if tbl.file_type != FileType.DELTA or _io.HAVE_DELTA:
+            if tbl.file_type != FileType.DELTA:
                 raise UnsupportedOperationError(
-                    "RESTORE TO TIMESTAMP requires a DELTA table "
-                    "(python log)"
+                    "RESTORE TO TIMESTAMP requires a DELTA table"
                 )
             from .sources import delta_py
 
@@ -506,7 +498,7 @@ class LakehouseClient:
         df = self.read_table(catalog, schema, name, version=version)
         self._check_constraints(df, tbl)
         path = tbl.storage_location.removeprefix("file://")
-        if tbl.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+        if tbl.file_type == FileType.DELTA:
             # Delta RESTORE is a metadata-only commit (files re-added
             # by reference) — no data rewrite at all.
             from .sources import delta_py
@@ -686,7 +678,7 @@ class LakehouseClient:
         deleted = df.filter(predicate).count()
         if not deleted:
             return 0
-        if tbl.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+        if tbl.file_type == FileType.DELTA:
             # DV fast path: bitmap-only commit, zero data rewritten
             from .sources import delta_py
 
@@ -734,7 +726,7 @@ class LakehouseClient:
                 for c in df.columns
             ]
         )
-        if tbl.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+        if tbl.file_type == FileType.DELTA:
             # DV fast path: matched rows are bitmap-deleted and only
             # their post-images append — untouched rows (already
             # gated at their own write) are never rewritten.
@@ -839,7 +831,7 @@ class LakehouseClient:
         driver. ``to_version=None`` means the current contents.
         """
         tbl = self.get_table(catalog, schema, name)
-        if tbl.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+        if tbl.file_type == FileType.DELTA:
             from urllib.parse import unquote
 
             from .sources import delta_py
@@ -1320,7 +1312,6 @@ class LakehouseClient:
         path = tbl.storage_location.removeprefix("file://")
         if (
             tbl.file_type == FileType.DELTA
-            and not _io.HAVE_DELTA
             and not zorder_by
             and target_files is None
         ):
@@ -1383,9 +1374,9 @@ class LakehouseClient:
         deletes, OPTIMIZE, time travel of its own). Registers the
         clone in the metastore and returns its Table."""
         src = self.get_table(src_catalog, src_schema, src_name)
-        if src.file_type != FileType.DELTA or _io.HAVE_DELTA:
+        if src.file_type != FileType.DELTA:
             raise UnsupportedOperationError(
-                "SHALLOW CLONE requires a DELTA table (python log)"
+                "SHALLOW CLONE requires a DELTA table"
             )
         from .sources import delta_py
 
@@ -1413,9 +1404,6 @@ class LakehouseClient:
             )
         spark = self._require_spark()
         path = _io.strip_file_scheme(tbl.storage_location or "")
-        if _io.HAVE_DELTA:
-            spark.sql(f"REORG TABLE delta.`{path}` APPLY (PURGE)")
-            return 0
         from .sources import delta_py
 
         purged = len(
@@ -1768,7 +1756,7 @@ class LakehouseClient:
                 self._unquote_name(tbl),
             )
             path = _io.strip_file_scheme(table.storage_location or "")
-            if table.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+            if table.file_type == FileType.DELTA:
                 from .sources import delta_py
 
                 deleted = delta_py.vacuum(
@@ -2075,10 +2063,10 @@ class LakehouseClient:
                 self._unquote_name(g) for g in (cat, sch, tbl)
             )
             table = self.get_table(cat, sch, tbl)
-            if table.file_type != FileType.DELTA or _io.HAVE_DELTA:
+            if table.file_type != FileType.DELTA:
                 raise UnsupportedOperationError(
                     "ALTER COLUMN ... SET/DROP DEFAULT requires a "
-                    "DELTA table (allowColumnDefaults; python log)"
+                    "DELTA table (allowColumnDefaults)"
                 )
             from .sources import delta_py
 
@@ -2174,7 +2162,7 @@ class LakehouseClient:
                 self._unquote_name(g) for g in (cat, sch, tbl)
             )
             table = self.get_table(cat, sch, tbl)
-            if table.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+            if table.file_type == FileType.DELTA:
                 # Delta-native: validate existing data, then commit the
                 # constraint INTO the log (delta.constraints.<name>) so
                 # it travels with the table and binds every writer.
@@ -2203,7 +2191,7 @@ class LakehouseClient:
                 self._unquote_name(g) for g in (cat, sch, tbl)
             )
             table = self.get_table(cat, sch, tbl)
-            if table.file_type == FileType.DELTA and not _io.HAVE_DELTA:
+            if table.file_type == FileType.DELTA:
                 from .sources import delta_py
 
                 delta_py.set_properties(

@@ -5,14 +5,13 @@ scan_table, write_table, merge_table). The reference delegates to
 Polars/delta-rs; here every path is a Spark DataFrame read/write so
 Catalyst handles pushdown, pruning, and partition discovery.
 
-Delta specifics: this container has no ``delta-spark`` package, so
-DELTA tables run through a pure-Python implementation of the public
-Delta transaction-log protocol (sources/delta_py.py — JSON commits,
-add/remove replay, per-file stats, native time travel). When
-``delta-spark`` is importable the Delta paths use it directly. The
-Delta-only row-level operations (MERGE, replaceWhere, schema-evolving
-append) are ALSO implemented natively over Parquet tables using an
-atomic directory-swap rewrite.
+Delta and Avro always run on the package's pure-Python
+implementations: DELTA tables on the public Delta transaction-log
+protocol (sources/delta_py.py — JSON commits, add/remove replay,
+per-file stats, native time travel), AVRO on the object container
+codec (sources/avro_py.py). The Delta-only row-level operations
+(MERGE, replaceWhere, schema-evolving append) are ALSO implemented
+natively over Parquet tables using an atomic directory-swap rewrite.
 
 Scale notes (100 TB design):
 - Reads are plain ``spark.read`` → full predicate pushdown + partition
@@ -51,34 +50,7 @@ from .types_map import (
     uc_columns_to_spark_schema,
 )
 
-try:  # pragma: no cover - environment-dependent
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except ImportError:  # pragma: no cover
-    DeltaTable = None  # type: ignore
-    HAVE_DELTA = False
-
-# None = not probed yet; the JVM spark-avro source is preferred when
-# its jar is on the classpath (block-splittable scans), with the
-# pure-Python container codec (sources/avro_py.py) as the fallback.
-_JVM_AVRO: Optional[bool] = None
-
-
-def _have_jvm_avro(spark: SparkSession) -> bool:
-    global _JVM_AVRO
-    if _JVM_AVRO is None:
-        try:
-            spark.read.format("avro").load("/__nonexistent_avro_probe__")
-            _JVM_AVRO = True  # pragma: no cover - jar present
-        except Exception as exc:
-            # source exists but path doesn't → PATH_NOT_FOUND;
-            # source missing → FAILED_FIND_DATA_SOURCE/ClassNotFound
-            msg = str(exc)
-            _JVM_AVRO = (
-                "Failed to find" not in msg and "ClassNotFound" not in msg
-            )
-    return _JVM_AVRO
+HAVE_DELTA = False  # no JVM Delta source; kept for callers that report it
 
 
 def strip_file_scheme(path: str) -> str:
@@ -120,8 +92,6 @@ def read_format_path(
     harden_runtime(spark)
     path = strip_file_scheme(path)
     if file_type == FileType.DELTA:
-        if HAVE_DELTA:  # pragma: no cover - jar not in sandbox
-            return spark.read.format("delta").load(path)
         from .sources import delta_py
 
         return delta_py.read_delta(spark, path)
@@ -160,8 +130,6 @@ def read_format_path(
     if file_type == FileType.TEXT:
         return spark.read.text(path)
     if file_type == FileType.AVRO:
-        if _have_jvm_avro(spark):  # pragma: no cover - jar not in sandbox
-            return spark.read.format("avro").load(path)
         from .sources import avro_py
 
         return avro_py.read_avro(
@@ -211,7 +179,7 @@ def read_table(
             f"{table.full_name} is {table.file_type.value}"
         )
     location = table.storage_location
-    if table.file_type == FileType.DELTA and not HAVE_DELTA:
+    if table.file_type == FileType.DELTA:
         # Python Delta log: time travel is native log replay, not the
         # snapshot store (sources/delta_py.py).
         from .session import harden_runtime
@@ -273,7 +241,7 @@ def read_table(
 # disables). Coarse-grained by design: in-place mutations
 # (directory-parquet append, dynamic partition overwrite) do not
 # snapshot — that finer granularity is exactly what a commit log
-# buys, and DELTA tables get it from delta-spark's own time travel.
+# buys, and DELTA tables get it from their transaction log.
 # ---------------------------------------------------------------------------
 
 SNAPSHOT_KEEP = 3
@@ -434,7 +402,6 @@ _FORMAT_NAME = {
     FileType.ORC: "orc",
     FileType.AVRO: "avro",
     FileType.TEXT: "text",
-    FileType.DELTA: "delta",
 }
 
 
@@ -566,42 +533,26 @@ def write_table(
 def _write_delta(
     spark, df, table, mode, schema_evolution, replace_where, df_cols
 ) -> Optional[list[Column]]:
-    """Native Delta path. Parity dataframe.py:305-354. Prefers the
-    delta-spark JVM source when importable; otherwise runs the same
+    """Native Delta path. Parity dataframe.py:305-354: the
     (mode × evolution × replaceWhere) matrix through the pure-Python
-    transaction log (sources/delta_py.py — public PROTOCOL.md subset),
-    so DELTA tables are executable in-sandbox end-to-end."""
+    transaction log (sources/delta_py.py — public PROTOCOL.md subset)."""
+    from .sources import delta_py
+
     path = strip_file_scheme(table.storage_location or "")
     part_cols = [c.name for c in table.partition_columns()]
     if schema_evolution == SchemaEvolution.STRICT:
         check_schemas_equal(df_cols, table.columns)
-    if not HAVE_DELTA:
-        from .sources import delta_py
-
-        snap = delta_py.write_delta(
-            spark,
-            df,
-            path,
-            mode=mode.value.lower(),
-            partition_by=part_cols or None,
-            replace_where=replace_where,
-            merge_schema=schema_evolution == SchemaEvolution.MERGE,
-            overwrite_schema=schema_evolution == SchemaEvolution.OVERWRITE,
-        )
-        new_cols = spark_schema_to_uc_columns(snap.schema, part_cols or None)
-        return None if schemas_equal(new_cols, table.columns) else new_cols
-    writer = df.write.format("delta").mode(mode.value.lower())
-    if schema_evolution == SchemaEvolution.MERGE:
-        writer = writer.option("mergeSchema", "true")
-    elif schema_evolution == SchemaEvolution.OVERWRITE:
-        writer = writer.option("overwriteSchema", "true")
-    if replace_where:
-        writer = writer.option("replaceWhere", replace_where)
-    if part_cols and not os.path.exists(path):
-        writer = writer.partitionBy(*part_cols)
-    writer.save(path)
-    new_schema = spark.read.format("delta").load(path).schema
-    new_cols = spark_schema_to_uc_columns(new_schema, part_cols or None)
+    snap = delta_py.write_delta(
+        spark,
+        df,
+        path,
+        mode=mode.value.lower(),
+        partition_by=part_cols or None,
+        replace_where=replace_where,
+        merge_schema=schema_evolution == SchemaEvolution.MERGE,
+        overwrite_schema=schema_evolution == SchemaEvolution.OVERWRITE,
+    )
+    new_cols = spark_schema_to_uc_columns(snap.schema, part_cols or None)
     return None if schemas_equal(new_cols, table.columns) else new_cols
 
 
@@ -691,7 +642,7 @@ def _write_flat(
         check_schemas_equal(df_cols, table.columns)
     fmt = _FORMAT_NAME[ft]
     options = {"header": "true"} if ft == FileType.CSV else {}
-    if ft == FileType.AVRO and not _have_jvm_avro(spark):
+    if ft == FileType.AVRO:
         from .sources import avro_py
 
         if _is_single_file(path):

@@ -8,12 +8,12 @@ the reference tests (tests/test_dataframes.py:658-837) are:
 ``when_not_matched_by_source_update(updates=...)``,
 ``when_not_matched_by_source_delete``.
 
-This implementation is Spark-native and works on PARQUET directory
-tables (no delta-spark needed): one full-outer join classifies every
-row as matched / not-matched-by-target / not-matched-by-source, each
-clause maps to a projection over the join, and ``execute()`` commits
-the rewritten table with an atomic directory swap. With delta-spark
-installed, DELTA tables delegate 1:1 to ``DeltaTable.merge`` instead.
+This implementation is Spark-native: one full-outer join classifies
+every row as matched / not-matched-by-target / not-matched-by-source,
+each clause maps to a projection over the join, and ``execute()``
+commits the rewritten PARQUET table with an atomic directory swap;
+DELTA tables commit deletion vectors plus appended rows through the
+Python Delta log instead.
 
 Scale notes: the join shuffles on the merge keys exactly like Delta's
 own MERGE; small sources are broadcast automatically by AQE. No
@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from .exceptions import MergeAmbiguityError, UnsupportedOperationError
 from .io import (
-    HAVE_DELTA,
     _is_single_file,
     _rewrite_table_dir,
     _write_single_file,
@@ -603,18 +602,6 @@ def merge_table(
     if condition is None:
         condition = default_merge_condition(table, source_alias, target_alias)
 
-    if table.file_type == FileType.DELTA and HAVE_DELTA:
-        from delta.tables import DeltaTable  # type: ignore
-
-        path = strip_file_scheme(table.storage_location or "")
-        merger = (
-            DeltaTable.forPath(spark, path)
-            .alias(target_alias)
-            .merge(source.alias(source_alias), condition)
-        )
-        if schema_evolution:
-            merger = merger.withSchemaEvolution()
-        return merger
     merger = SparkMerger(
         spark, table, source, condition, source_alias, target_alias,
         validate=validate,

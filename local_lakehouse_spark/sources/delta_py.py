@@ -35,9 +35,9 @@ implements the subset the reference exercises
   BLIND APPENDS (an append that read no table data commutes with any
   concurrent data commit) and for row-level / rearrangement commits
   past DISJOINT concurrent commits (WriteSerializable's commute
-  rule, ``_commit_dml``); overlapping files, read-dependent
-  overwrites, and concurrent schema changes raise
-  ``ConcurrentModificationError``;
+  rule). Every commit goes through ``commit_actions``: overlapping
+  files, read-dependent overwrites, and concurrent metadata or
+  protocol changes raise ``ConcurrentModificationError``;
 - row-level surface (round 6): deletion-vector + column-mapping
   BATCH reads (delta_dv codec), DV ``delete_where``/``update_where``
   with stats-pruned scans, ``apply_row_changes`` (the DV MERGE
@@ -50,8 +50,8 @@ implements the subset the reference exercises
 
 Remaining documented limits (loud refusals, not silent gaps):
 writes into column-mapped layouts, streaming replay of mapped
-tables, and purge/compact of mapped tables. When ``delta-spark``
-is importable, io.py prefers it and this module is never used.
+tables, and purge/compact of mapped tables. Every DELTA path of the
+package runs on this module; there is no JVM Delta source.
 
 Scale notes: data files are written DISTRIBUTED by Spark (the move
 into place is a per-file rename, metadata cost only); reads hand
@@ -238,6 +238,9 @@ class Snapshot:
     # dropped) — the protocol's named metadata domains (row tracking
     # watermark, clustering columns, ...)
     domains: dict = field(default_factory=dict)
+    # appId -> version of the latest ``txn`` action (the protocol's
+    # transaction identifiers; idempotent streaming sinks read them)
+    txns: dict = field(default_factory=dict)
 
     @property
     def schema(self) -> T.StructType:
@@ -305,8 +308,7 @@ def _check_reader_support(
             "rows (e.g. deletion vectors mark rows the scan must "
             "drop). Batch reads (read_delta) DO support "
             f"{sorted(BATCH_READ_FEATURES)}; for other operations "
-            "install delta-spark (io.py auto-prefers it) or rewrite "
-            "the table without these features."
+            "rewrite the table without these features."
         )
 
 
@@ -430,6 +432,12 @@ class DeltaLog:
             )
             yield from parquet_rows(sc_path)
 
+    def read_commit(self, version: int) -> list[dict]:
+        """The actions of commit ``version``, in file order."""
+        fname = os.path.join(self.log_dir, f"{version:020d}.json")
+        with open(fname) as f:
+            return [json.loads(line) for line in f if line.strip()]
+
     def commit_timestamp(self, version: int) -> int:
         """Commit time in epoch ms. Precedence per the public
         protocol: ``commitInfo.inCommitTimestamp`` when present (the
@@ -518,6 +526,7 @@ class DeltaLog:
         proto: dict = dict(PROTOCOL)
         adds: dict = {}
         domains: dict = {}
+        txns: dict = {}
         # Start from the newest checkpoint at/below the target version
         # (bounded replay — the log-scale path: O(commits since
         # checkpoint), not O(table history)).
@@ -572,38 +581,39 @@ class DeltaLog:
                         domains.pop(d["domain"], None)
                     else:
                         domains[d["domain"]] = d
+                elif row.get("txn"):
+                    txns[row["txn"]["appId"]] = int(row["txn"]["version"])
             start_after = cp
         for v in vs:
             if v > version:
                 break
             if v <= start_after:
                 continue
-            fname = os.path.join(self.log_dir, f"{v:020d}.json")
-            with open(fname) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action:
-                        meta = action["metaData"]
-                    elif "protocol" in action:
-                        proto = action["protocol"]
-                    elif "add" in action:
-                        adds[action["add"]["path"]] = action["add"]
-                    elif "remove" in action:
-                        adds.pop(action["remove"]["path"], None)
-                    elif "domainMetadata" in action:
-                        d = action["domainMetadata"]
-                        if d.get("removed"):
-                            domains.pop(d["domain"], None)
-                        else:
-                            domains[d["domain"]] = d
+            for action in self.read_commit(v):
+                if "metaData" in action:
+                    meta = action["metaData"]
+                elif "protocol" in action:
+                    proto = action["protocol"]
+                elif "add" in action:
+                    adds[action["add"]["path"]] = action["add"]
+                elif "remove" in action:
+                    adds.pop(action["remove"]["path"], None)
+                elif "domainMetadata" in action:
+                    d = action["domainMetadata"]
+                    if d.get("removed"):
+                        domains.pop(d["domain"], None)
+                    else:
+                        domains[d["domain"]] = d
+                elif "txn" in action:
+                    t = action["txn"]
+                    txns[t["appId"]] = int(t["version"])
         snap = Snapshot(
             version=version,
             metadata=meta,
             protocol=proto,
             adds=adds,
             domains=domains,
+            txns=txns,
         )
         _check_reader_support(snap, self.path, allow)
         return snap
@@ -703,7 +713,7 @@ class DeltaLog:
 
     def write_checkpoint(self, version: Optional[int] = None) -> str:
         """Materialize the snapshot state (protocol + metaData + live
-        adds) as ``{v:020}.checkpoint.parquet`` and point
+        adds + domains + txn identifiers) as ``{v:020}.checkpoint.parquet`` and point
         ``_last_checkpoint`` at it. Replays after this version start
         from the checkpoint instead of commit 0 — at a commit-heavy
         table this is the difference between O(1) and O(history)
@@ -773,12 +783,18 @@ class DeltaLog:
                 ("removed", pa.bool_()),
             ]
         )
+        txn_t = pa.struct([("appId", pa.string()), ("version", pa.int64())])
+        txn_rows = [
+            {"txn": {"appId": app, "version": v}}
+            for app, v in sorted(snap.txns.items())
+        ]
         schema = pa.schema(
             [
                 ("protocol", proto_t),
                 ("metaData", meta_t),
                 ("add", add_t),
                 ("domainMetadata", domain_t),
+                ("txn", txn_t),
             ]
         )
         meta = dict(snap.metadata)
@@ -815,6 +831,7 @@ class DeltaLog:
                     ("protocol", proto_t),
                     ("metaData", meta_t),
                     ("domainMetadata", domain_t),
+                    ("txn", txn_t),
                     (
                         "checkpointMetadata",
                         pa.struct([("version", pa.int64())]),
@@ -836,6 +853,7 @@ class DeltaLog:
                 {"protocol": snap.protocol},
                 {"metaData": meta},
                 *({"domainMetadata": d} for d in snap.domains.values()),
+                *txn_rows,
                 {
                     "sidecar": {
                         "path": sc_rel,
@@ -865,6 +883,7 @@ class DeltaLog:
         ]
         for d in snap.domains.values():
             rows.append({"domainMetadata": d})
+        rows.extend(txn_rows)
         for a in snap.adds.values():
             rows.append({"protocol": None, "metaData": None, "add": a})
         fname = os.path.join(
@@ -1071,26 +1090,32 @@ def partition_keep(
         return True
 
 
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
 def candidate_files(
     snap: Snapshot, col: str, op: str, value: object
 ) -> list[str]:
     """Stats-based file skipping: relative paths of files whose
     [min, max] range for ``col`` can satisfy ``col <op> value``
-    (ops: = < <= > >=). Files without stats for the column are kept
-    (skipping must never drop a possible match). Partition columns
-    are pruned from partitionValues exactly."""
+    (ops: = < <= > >=). ``col`` is the PHYSICAL name (the key of
+    stats and partitionValues; equal to the logical name unless the
+    table is column-mapped). Files without stats for the column, and
+    null (``__HIVE_DEFAULT_PARTITION__``) partition values, are kept:
+    skipping must never drop a possible match. Partition values are
+    compared typed (partition_keep)."""
     out = []
-    part_cols = snap.partition_columns
-    dtypes = {f.name: f.dataType for f in snap.schema.fields}
+    phys = _snapshot_physical_names(snap)
+    dtypes = {phys.get(f.name, f.name): f.dataType for f in snap.schema.fields}
+    if col in snap.partition_columns:
+        for rel, add in sorted(snap.adds.items()):
+            pv = (add.get("partitionValues") or {}).get(col)
+            if pv is None or pv == _HIVE_NULL or partition_keep(
+                pv, op, value, dtypes.get(col)
+            ):
+                out.append(rel)
+        return out
     for rel, add in sorted(snap.adds.items()):
-        if col in part_cols:
-            pv = add.get("partitionValues", {}).get(col)
-            if pv is None:
-                out.append(rel)
-                continue
-            if partition_keep(pv, op, value, dtypes.get(col)):
-                out.append(rel)
-            continue
         stats = json.loads(add.get("stats") or "{}")
         lo = (stats.get("minValues") or {}).get(col)
         hi = (stats.get("maxValues") or {}).get(col)
@@ -1113,6 +1138,19 @@ def candidate_files(
         if keep:
             out.append(rel)
     return out
+
+
+def pruned_adds(snap: Snapshot, filters: list[tuple]) -> dict:
+    """The snapshot's add actions that survive a conjunction of
+    ``(logical col, op, value)`` filters — each filter renamed to its
+    physical column and pruned by :func:`candidate_files`. Every Delta
+    read entry point (read_delta, the pydelta reader, the DV
+    delete/update scans) prunes through here."""
+    phys = _snapshot_physical_names(snap)
+    keep = set(snap.adds)
+    for col, op, value in filters:
+        keep &= set(candidate_files(snap, phys.get(col, col), op, value))
+    return {p: a for p, a in snap.adds.items() if p in keep}
 
 
 # ---------------------------------------------------------------------------
@@ -1177,6 +1215,14 @@ def _physical_names(schema: T.StructType) -> dict:
         )
         for f in schema.fields
     }
+
+
+def _snapshot_physical_names(snap: Snapshot) -> dict:
+    """Logical -> physical map of a column-mapped snapshot; empty
+    (names are physical) when column mapping is off."""
+    if snap.column_mapping_mode in ("", "none"):
+        return {}
+    return _physical_names(snap.schema)
 
 
 def _mapping_field_ids(schema: T.StructType) -> dict:
@@ -1361,16 +1407,11 @@ def read_delta(
     mapping = snap.column_mapping_mode not in ("", "none")
     phys = _physical_names(log_schema) if mapping else {}
     if filters:
-        keep = set(snap.adds)
-        for col, op, value in filters:
-            keep &= set(
-                candidate_files(snap, phys.get(col, col), op, value)
-            )
         snap = Snapshot(
             version=snap.version,
             metadata=snap.metadata,
             protocol=snap.protocol,
-            adds={p: a for p, a in snap.adds.items() if p in keep},
+            adds=pruned_adds(snap, filters),
         )
     out_schema = schema or log_schema
     if not snap.adds:
@@ -1620,8 +1661,7 @@ def cluster_by(path: str, cols: list) -> Snapshot:
             }
         }
     )
-    version = snap.version + 1
-    log.commit(version, actions, config=snap.configuration)
+    version = commit_actions(log, snap, actions)
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
@@ -1731,9 +1771,7 @@ def optimize_clustered(
             }
         }
     )
-    version = _commit_dml(log, snap, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    commit_actions(log, snap, actions, reads=touched_paths(actions))
     return {"numFilesRemoved": len(victims), "numFilesAdded": added}
 
 
@@ -2069,18 +2107,19 @@ def write_delta(
                 "DataFrame has columns not in the table schema "
                 "(pass merge_schema=True to evolve)"
             )
-        meta_changed = (
+        if (
             schema.json() != snap.schema.json()
             or configuration != snap.configuration
-        )
-        meta_id = snap.metadata.get("id", str(uuid.uuid4()))
-        version = snap.version + 1
-        if meta_changed:
+        ):
             actions.append(
-                _meta_action(schema, partition_by, meta_id, configuration)
+                _meta_action(
+                    schema,
+                    partition_by,
+                    snap.metadata.get("id", str(uuid.uuid4())),
+                    configuration,
+                )
             )
     else:
-        version = 0
         proto = dict(PROTOCOL)
         if generated:
             for c, expr in generated.items():
@@ -2198,17 +2237,6 @@ def write_delta(
     # watermark is lifted from the written files' stats after the
     # data lands — tables without identity columns pay nothing.
     df, identity_assigned = _assign_identity(df, schema, path)
-    # Fail fast on append-only violations BEFORE the distributed data
-    # write (the late _check_append_only below still guards every
-    # other remove source).
-    if (
-        snap is not None
-        and snap.adds
-        and (mode == "overwrite" or replace_where is not None)
-    ):
-        _check_append_only(
-            snap, [{"remove": {"dataChange": True}}], path
-        )
     # Column-mapped append: rename logical -> physical right before
     # the data write (struct casts rename nested fields by position —
     # the exact inverse of read_delta's physical -> logical cast).
@@ -2278,108 +2306,95 @@ def write_delta(
             }
         }
     )
-    # Optimistic concurrency (the protocol's conflict-resolution
-    # model): losing a version race re-reads the log and decides by
-    # operation semantics. A BLIND APPEND (no reads of table data: no
-    # overwrite, no replaceWhere, no schema change) commutes with any
-    # concurrent data commit, so it retries with the next version —
-    # this is exactly how delta writers let N appenders make progress.
-    # Read-dependent writes (overwrite/replaceWhere based on OUR base
-    # snapshot) and metadata changes must surface the conflict.
-    _check_append_only(snap, actions, path)
-    # row tracking: fresh baseRowId ranges above the watermark, the
-    # advanced watermark committed in the same transaction
-    row_ids_stamped = (
+    # A blind append read no table data: it commutes with concurrent
+    # data commits. Overwrite / replaceWhere read the whole table, and
+    # identity / row-id allocation read the base watermark — a lost
+    # race must surface, not re-commit stale results or duplicate ids.
+    blind_append = (
+        mode == "append"
+        and replace_where is None
+        and not identity_assigned
+        and not (snap is not None and row_tracking_enabled(snap.configuration))
+    )
+    version = commit_actions(
+        log, snap, actions, reads=set() if blind_append else WHOLE_TABLE
+    )
+    return log.snapshot(version, allow=BATCH_READ_FEATURES)
+
+
+# Read set of a commit whose outcome depends on the whole table
+# (overwrite, replaceWhere, id allocation, metadata-only DDL): it
+# never retries past a concurrent commit.
+WHOLE_TABLE = None
+
+
+def touched_paths(actions: list[dict]) -> set:
+    """Paths a commit adds or removes — the read set of a row-level
+    or rearrangement commit."""
+    return {a[k]["path"] for a in actions for k in ("add", "remove") if k in a}
+
+
+def commit_actions(
+    log: DeltaLog,
+    snap: Optional[Snapshot],
+    actions: list[dict],
+    reads: Optional[set] = WHOLE_TABLE,
+) -> int:
+    """The one committer every Delta write goes through: enforce
+    ``delta.appendOnly``, stamp row-tracking ids, publish the actions
+    at ``snap.version + 1`` (version 0 when ``snap`` is None), write
+    the CHECKPOINT_INTERVAL checkpoint, and return the committed
+    version.
+
+    Optimistic concurrency (Delta's WriteSerializable rule): a loser
+    of the put-if-absent version race re-reads the intervening
+    commits and retries at the next version IFF none of them touched
+    a path in ``reads``, carried ``metaData`` or ``protocol``, carried
+    a ``txn`` for one of this commit's appIds, or — when this commit
+    stamped row ids — advanced a metadata domain. A blind append
+    passes an empty read set, so it commutes with any concurrent data
+    commit; ``WHOLE_TABLE`` (and table creation) never retries."""
+    _check_append_only(snap, actions, log.path)
+    version = 0 if snap is None else snap.version + 1
+    config = {} if snap is None else snap.configuration
+    for a in actions:
+        if "metaData" in a:
+            config = dict(a["metaData"].get("configuration") or {})
+    stamped = (
         _assign_base_row_ids(snap, actions, version)
         if snap is not None
         else []
     )
-    blind_append = (
-        mode == "append"
-        and snap is not None
-        and replace_where is None
-        and not meta_changed
-        # identity/row-id allocation reads the base watermark: a lost
-        # race must surface, not silently re-commit duplicate ids
-        and not identity_assigned
-        and not row_ids_stamped
-    )
+    apps = {a["txn"]["appId"] for a in actions if "txn" in a}
     for _attempt in range(64):
         try:
-            log.commit(version, actions, config=configuration)
+            log.commit(version, actions, config=config)
             break
         except ConcurrentModificationError:
-            if not blind_append:
+            if reads is WHOLE_TABLE or snap is None:
                 raise
-            newest = log.snapshot(allow=BATCH_READ_FEATURES)
-            if newest.schema.json() != snap.schema.json() or (
-                newest.metadata.get("id") != meta_id
-            ):
-                # concurrent schema evolution / table replacement —
-                # the append's target no longer exists as written
-                raise
-            version = newest.version + 1
+            newest_v = log.versions()[-1]
+            for v in range(version, newest_v + 1):
+                for a in log.read_commit(v):
+                    if "metaData" in a or "protocol" in a:
+                        raise
+                    if "domainMetadata" in a and stamped:
+                        raise
+                    if (a.get("txn") or {}).get("appId") in apps:
+                        raise
+                    p = (a.get("add") or a.get("remove") or {}).get("path")
+                    if p and p in reads:
+                        raise
+            version = newest_v + 1
+            for add in stamped:
+                add["defaultRowCommitVersion"] = version
     else:
         raise ConcurrentModificationError(
-            f"append to {path} lost {64} version races; giving up"
+            f"commit to {log.path} lost 64 version races; giving up"
         )
     if version > 0 and version % CHECKPOINT_INTERVAL == 0:
         log.write_checkpoint(version)
-    return log.snapshot(version, allow=BATCH_READ_FEATURES)
-
-
-def _commit_dml(
-    log: DeltaLog, base_snap: Snapshot, actions: list[dict]
-) -> int:
-    """Optimistic conflict resolution for row-level / rearrangement
-    commits — the protocol's WriteSerializable matrix: a loser of the
-    put-if-absent version race re-reads the log and re-commits at the
-    next version IFF every intervening commit is DISJOINT — it
-    touched none of the files this commit adds or removes and made no
-    metadata/protocol change. A concurrent blind append commutes with
-    a DELETE/UPDATE/OPTIMIZE of other files (delta-spark allows the
-    same); overlapping files or structural changes surface
-    ConcurrentModificationError because this commit's read is stale.
-    Returns the committed version."""
-    ours = {
-        a[k]["path"]
-        for a in actions
-        for k in ("add", "remove")
-        if k in a
-    }
-    version = base_snap.version + 1
-    row_ids_stamped = _assign_base_row_ids(base_snap, actions, version)
-    for _attempt in range(64):
-        try:
-            log.commit(version, actions, config=base_snap.configuration)
-            return version
-        except ConcurrentModificationError:
-            newest_v = log.versions()[-1]
-            for v in range(version, newest_v + 1):
-                fname = os.path.join(log.log_dir, f"{v:020d}.json")
-                with open(fname) as fh:
-                    for line in fh:
-                        line = line.strip()
-                        if not line:
-                            continue
-                        a = json.loads(line)
-                        if "metaData" in a or "protocol" in a:
-                            raise
-                        if "domainMetadata" in a and row_ids_stamped:
-                            # a competing commit advanced the row-id
-                            # watermark our ranges were based on
-                            raise
-                        p = (a.get("add") or a.get("remove") or {}).get(
-                            "path"
-                        )
-                        if p and p in ours:
-                            raise
-            version = newest_v + 1
-            for add in row_ids_stamped:
-                add["defaultRowCommitVersion"] = version
-    raise ConcurrentModificationError(
-        f"DML commit to {log.path} lost 64 version races; giving up"
-    )
+    return version
 
 
 def _check_log_constraints(
@@ -2454,10 +2469,17 @@ def _check_append_only(
     existing data — a ``remove`` with ``dataChange=true`` (DELETE /
     UPDATE / MERGE / overwrite / replaceWhere). Pure rearrangements
     (OPTIMIZE / REORG, ``dataChange=false``) stay allowed, matching
-    delta-spark's enforcement."""
+    delta-spark's enforcement, and so does RESTORE: it re-publishes a
+    version the table already held, the recovery path from a bad
+    append."""
     if snap is None:
         return
     if snap.configuration.get("delta.appendOnly", "").lower() != "true":
+        return
+    if any(
+        (a.get("commitInfo") or {}).get("operation") == "RESTORE"
+        for a in actions
+    ):
         return
     for a in actions:
         r = a.get("remove")
@@ -2607,10 +2629,7 @@ def set_properties(
             }
         },
     ])
-    version = snap.version + 1
-    log.commit(version, actions, config=conf)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    version = commit_actions(log, snap, actions)
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
@@ -2754,13 +2773,7 @@ def _grown_dvs(
     from pyspark.sql import functions as F
 
     mapped = snap.column_mapping_mode not in ("", "none")
-    phys = _physical_names(snap.schema) if mapped else {}
-    rels = sorted(snap.adds)
-    for col, op, value in _predicate_conjuncts(predicate)[0]:
-        # the predicate speaks logical names; stats keys and
-        # partitionValues are physical on a mapped table
-        keep = set(candidate_files(snap, phys.get(col, col), op, value))
-        rels = [r for r in rels if r in keep]
+    rels = sorted(pruned_adds(snap, _predicate_conjuncts(predicate)[0]))
     if not rels:
         return {}, []  # no file's range can match: metadata-only no-op
     scan = _scan_reader(spark, snap, path).parquet(
@@ -2898,9 +2911,8 @@ def delete_where(
 
     Existing DVs are unioned in (deleting an already-deleted row is
     a no-op — repeated DELETEs of the same predicate commit
-    nothing), and the commit is read-dependent: losing a version
-    race surfaces ConcurrentModificationError rather than retrying
-    blindly."""
+    nothing), and the commit reads the files it touches: losing a
+    version race retries only past commits disjoint from them."""
     log = DeltaLog(path)
     # Column-mapped tables are fully supported here: the predicate
     # scan translates physical names (_grown_dvs) and the commit
@@ -2909,9 +2921,6 @@ def delete_where(
     _check_writer_support(snap, path)
     if not snap.adds:
         return snap
-    _check_append_only(
-        snap, [{"remove": {"dataChange": True}}], path
-    )  # fail fast, before any bitmap work
     base_to_rel, built = _grown_dvs(spark, snap, path, predicate)
     if not built:
         return snap  # predicate matched nothing new: no commit
@@ -2941,9 +2950,7 @@ def delete_where(
             }
         }
     )
-    version = _commit_dml(log, snap, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    version = commit_actions(log, snap, actions, reads=touched_paths(actions))
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
@@ -2993,7 +3000,6 @@ def update_where(
         raise UnsupportedOperationError(
             f"UPDATE may not assign IDENTITY columns {sorted(idents)}"
         )
-    _check_append_only(snap, [{"remove": {"dataChange": True}}], path)
     base_to_rel, built = _grown_dvs(spark, snap, path, predicate)
     if not built:
         return snap
@@ -3002,7 +3008,7 @@ def update_where(
     # is PINNED to the snapshot the DVs were grown from — reading
     # LATEST would let a concurrent append's predicate-matching rows
     # leak into the post-images with no DV on their originals
-    # (duplicates after _commit_dml's disjoint-file retry).
+    # (duplicates after commit_actions' disjoint-file retry).
     updated = (
         read_delta(spark, path, version=snap.version)
         .filter(F.expr(predicate))
@@ -3052,9 +3058,7 @@ def update_where(
             }
         }
     )
-    version = _commit_dml(log, snap, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    version = commit_actions(log, snap, actions, reads=touched_paths(actions))
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
@@ -3380,7 +3384,6 @@ def apply_row_changes(
         cdc_actions = _write_cdc_files(spark, path, snap, changes)
     now_ms = int(time.time() * 1000)
     actions = _dv_commit_actions(snap, base_to_rel, built, now_ms)
-    _check_append_only(snap, actions, path)  # insert-only merges pass
     for rel, parts in moved:
         act = _add_action(path, rel, parts)
         if not json.loads(act["add"]["stats"]).get("numRecords"):
@@ -3401,9 +3404,7 @@ def apply_row_changes(
         }
     )
     log = DeltaLog(path)
-    version = _commit_dml(log, snap, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    version = commit_actions(log, snap, actions, reads=touched_paths(actions))
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
@@ -3934,9 +3935,7 @@ def purge(spark: SparkSession, path: str) -> Snapshot:
             }
         }
     )
-    version = _commit_dml(log, snap, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    version = commit_actions(log, snap, actions, reads=touched_paths(actions))
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
@@ -4074,9 +4073,7 @@ def compact(
             }
         }
     )
-    version = _commit_dml(log, snap, actions)
-    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-        log.write_checkpoint(version)
+    commit_actions(log, snap, actions, reads=touched_paths(actions))
     return {"numFilesRemoved": len(victims), "numFilesAdded": added}
 
 
@@ -4149,7 +4146,7 @@ def shallow_clone(src: str, dest: str) -> Snapshot:
         }
     )
     log = DeltaLog(dest)
-    log.commit(0, actions)
+    commit_actions(log, None, actions)
     return log.snapshot(allow=BATCH_READ_FEATURES)
 
 
@@ -4375,7 +4372,7 @@ def convert_to_delta(
             }
         }
     )
-    log.commit(0, actions)
+    commit_actions(log, None, actions)
     return log.snapshot(0)
 
 
@@ -4429,8 +4426,7 @@ def restore(spark: SparkSession, path: str, version: int) -> Snapshot:
             }
         }
     )
-    log.commit(cur.version + 1, actions, config=cur.configuration)
-    return log.snapshot(cur.version + 1)
+    return log.snapshot(commit_actions(log, cur, actions))
 
 
 def evolve_delta_schema(
@@ -4444,7 +4440,9 @@ def evolve_delta_schema(
     names and bump maxColumnId (_assign_mapping_ids), so old footers
     simply lack the new physical column and read NULL. Returns True
     when a commit happened (False: nothing new). Conflicts resolve
-    through the WriteSerializable retry (_commit_dml)."""
+    through the WriteSerializable retry of commit_actions: a
+    concurrent data commit commutes, a concurrent metadata change
+    does not."""
     log = DeltaLog(path)
     snap = log.snapshot(allow=BATCH_READ_FEATURES)
     _check_writer_support(snap, path)
@@ -4476,7 +4474,7 @@ def evolve_delta_schema(
             schema, snap.partition_columns, meta_id, configuration
         ),
     ]
-    _commit_dml(log, snap, actions)
+    commit_actions(log, snap, actions, reads=set())
     return True
 
 
@@ -4547,7 +4545,7 @@ def set_delta_column_default(
             snap.configuration,
         )
     )
-    log.commit(snap.version + 1, actions, config=snap.configuration)
+    commit_actions(log, snap, actions)
     return log.snapshot(allow=BATCH_READ_FEATURES)
 
 
@@ -4570,8 +4568,9 @@ def drop_delta_column_default(path: str, column: str) -> "Snapshot":
         raise UnsupportedOperationError(
             f"column {column!r} not found"
         )
-    log.commit(
-        snap.version + 1,
+    commit_actions(
+        log,
+        snap,
         [
             _meta_action(
                 T.StructType(fields),
@@ -4580,7 +4579,6 @@ def drop_delta_column_default(path: str, column: str) -> "Snapshot":
                 snap.configuration,
             )
         ],
-        config=snap.configuration,
     )
     return log.snapshot(allow=BATCH_READ_FEATURES)
 

@@ -9,17 +9,23 @@ dispatch instead of only the client read_table path:
   ``versionAsOf`` time travel via option, and FILE SKIPPING wired
   into Catalyst's filter pushdown: ``pushFilters`` receives the
   compiled predicates and prunes the file list with the log's
-  per-file min/max stats + partition values (delta_py.candidate_files
-  semantics). All filters are returned as unhandled so Spark still
-  applies exact row-level filtering — the pushdown is a monotone
-  file-set reduction, never a correctness dependency.
-- batch write: ``DataSourceArrowWriter`` — each task writes its Arrow
-  batches as one parquet part file directly into the table directory,
-  the driver-side ``commit`` turns the task messages into one
-  transactional Delta commit (add actions with footer stats, removes
-  for overwrite), and ``abort`` deletes the orphan files. Appends go
-  through the same optimistic blind-append retry as
-  delta_py.write_delta.
+  per-file min/max stats + partition values through
+  delta_py.pruned_adds, the same pruning read_delta uses. All filters
+  are returned as unhandled so Spark still applies exact row-level
+  filtering — the pushdown is a monotone file-set reduction, never a
+  correctness dependency.
+- batch write and streaming sink: ``DataSourceArrowWriter`` /
+  ``DataSourceStreamArrowWriter`` sharing one body — each task writes
+  its Arrow batches as one parquet part file directly into the table
+  directory, the driver-side ``commit`` turns the task messages into
+  add actions (plus removes for overwrite, a ``txn`` for the stream)
+  and lands them through delta_py.commit_actions, the committer every
+  Delta write uses (append-only check, conflict rule, checkpoints),
+  and ``abort`` deletes the orphan files. Both sinks refuse tables
+  whose invariants a raw-add commit cannot keep: row-tracked tables
+  (baseRowId assignment) and tables with CHECK constraints (the
+  driver-side commit has no Spark session to evaluate them); use
+  delta_py.write_delta for those.
 - streaming read: ``DataSourceStreamReader`` — Delta-as-a-stream
   (the ``readStream.format("delta")`` analog): offsets are log
   versions, each microbatch reads the files ADDED in (start, end]
@@ -45,8 +51,8 @@ metadata only — no data file is opened to plan the scan.
 
 from __future__ import annotations
 
-import json
 import os
+import time
 import uuid
 from typing import TYPE_CHECKING, Iterable, List, Sequence
 
@@ -72,20 +78,32 @@ from pyspark.sql.datasource import (
 
 from ..exceptions import UnsupportedOperationError
 from .delta_py import (
+    BATCH_READ_FEATURES,
+    FEATURE_DELETION_VECTORS,
     PROTOCOL,
-    CHECKPOINT_INTERVAL,
+    WHOLE_TABLE,
     ConcurrentModificationError,
     DeltaLog,
-    partition_keep,
+    _HIVE_NULL,
     _add_action,
-    _file_stats,
+    _check_writer_support,
     _mapping_field_ids,
     _meta_action,
     _physical_names,
     _physical_type,
+    commit_actions,
+    pruned_adds,
+    row_tracking_enabled,
 )
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# pushed Filter classes -> the comparison ops candidate_files prunes on
+_OPS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+}
 
 
 def _arrow_schema(spark_schema: T.StructType):
@@ -322,76 +340,8 @@ def _read_file_as_batches(
     yield from out.to_batches(max_chunksize=1 << 16)
 
 
-def _prune(
-    adds: dict,
-    part_cols: list,
-    filters: List[Filter],
-    schema: "T.StructType | None" = None,
-    rename: "dict | None" = None,
-) -> dict:
-    """Monotone file-set reduction from pushed filters: a file
-    survives unless its stats range / partition value PROVES no row
-    can match. Unknown filter shapes and missing stats keep the file.
-    Partition values (STRING in the log) are parsed to the column's
-    declared type before comparing — lexicographic pv < str(value)
-    would wrongly drop e.g. p='10' for p > 9 ('10' < '9' as strings),
-    and a dropped file is unrecoverable by Spark's row-level filter.
-    """
-    ops = {
-        EqualTo: "=",
-        GreaterThan: ">",
-        GreaterThanOrEqual: ">=",
-        LessThan: "<",
-        LessThanOrEqual: "<=",
-    }
-    # column-mapped tables: filters speak LOGICAL names, stats and
-    # partitionValues are keyed PHYSICAL — translate before lookup
-    # (dtypes stay keyed by the translated name for partition_keep)
-    rename = rename or {}
-    dtypes = (
-        {rename.get(f.name, f.name): f.dataType for f in schema.fields}
-        if schema
-        else {}
-    )
-
-    def file_ok(add: dict, col: str, op: str, value) -> bool:
-        if col in part_cols:
-            pv = (add.get("partitionValues") or {}).get(col)
-            if pv is None or pv == _HIVE_NULL:
-                return True
-            return partition_keep(pv, op, value, dtypes.get(col))
-        stats = json.loads(add.get("stats") or "{}")
-        lo = (stats.get("minValues") or {}).get(col)
-        hi = (stats.get("maxValues") or {}).get(col)
-        if lo is None or hi is None:
-            return True
-        try:
-            return {
-                "=": lo <= value <= hi,
-                "<": lo < value,
-                "<=": lo <= value,
-                ">": hi > value,
-                ">=": hi >= value,
-            }.get(op, True)
-        except TypeError:  # incomparable literal type: keep the file
-            return True
-
-    out = dict(adds)
-    for f in filters:
-        op = ops.get(type(f))
-        if op is None or len(f.attribute) != 1:
-            continue
-        col = rename.get(f.attribute[0], f.attribute[0])
-        out = {
-            rel: add for rel, add in out.items() if file_ok(add, col, op, f.value)
-        }
-    return out
-
-
 class _PyDeltaReader(DataSourceReader):
     def __init__(self, options: dict):
-        from .delta_py import BATCH_READ_FEATURES
-
         self._path = _required_path(options)
         v = options.get("versionasof")
         # batch reads apply deletion vectors per file in read() and
@@ -418,15 +368,14 @@ class _PyDeltaReader(DataSourceReader):
         )
 
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
-        before = len(self._adds)
-        self._adds = _prune(
-            self._adds,
-            self._snap.partition_columns,
-            filters,
-            self._schema,
-            rename=self._phys,
+        self._adds = pruned_adds(
+            self._snap,
+            [
+                (f.attribute[0], _OPS[type(f)], f.value)
+                for f in filters
+                if type(f) in _OPS and len(f.attribute) == 1
+            ],
         )
-        self._files_pruned = before - len(self._adds)
         # every filter is re-applied row-level by Spark: pruning is
         # an optimization, never the correctness mechanism
         return filters
@@ -475,16 +424,16 @@ class _FileCommit(WriterCommitMessage):
         self.rel = rel
 
 
-class _PyDeltaWriter(DataSourceArrowWriter):
-    """Distributed transactional write: N tasks write N part files
-    into the table dir, ONE driver commit publishes them. Supports
-    unpartitioned tables (partitioned writes go through
-    delta_py.write_delta, which owns the hive-layout move)."""
+class _PyDeltaSink:
+    """The body both pydelta sinks share: N tasks write N part files
+    into the table dir, ONE driver commit publishes them through
+    delta_py.commit_actions. Unpartitioned tables only (partitioned
+    writes go through delta_py.write_delta, which owns the
+    hive-layout move)."""
 
-    def __init__(self, options: dict, schema: T.StructType, overwrite: bool):
+    def __init__(self, options: dict, schema: T.StructType):
         self._path = _required_path(options)
         self._schema = schema
-        self._overwrite = overwrite
 
     def write(self, iterator) -> _FileCommit:
         import pyarrow as pa
@@ -502,104 +451,120 @@ class _PyDeltaWriter(DataSourceArrowWriter):
         )
         return _FileCommit(rel)
 
-    def commit(self, messages) -> None:
-        import time as _time
-
-        log = DeltaLog(self._path)
-        vs = log.versions()
-        # blind appends / wholesale overwrites never READ table data,
-        # so a DV-bearing snapshot is safe (appends add files;
-        # overwrite removes the DV'd adds wholesale). Column-mapped
-        # tables stay refused: this writer emits the caller's logical
-        # column names raw (use delta_py.write_delta, which renames).
-        from .delta_py import FEATURE_DELETION_VECTORS as _DV
-        from .delta_py import _check_writer_support
-
-        snap = log.snapshot(allow=frozenset({_DV})) if vs else None
-        if snap is not None:
-            # raw-add commits cannot honor per-row writer features
-            # (row tracking's baseRowId completeness, identity
-            # watermarks handled by delta_py.write_delta)
-            _check_writer_support(snap, self._path)
-            from .delta_py import row_tracking_enabled
-
-            if row_tracking_enabled(snap.configuration):
-                raise ValueError(
-                    "pydelta writer cannot assign baseRowId ranges on "
-                    "a row-tracked table; use delta_py.write_delta"
-                )
-        if snap is not None and snap.partition_columns:
-            raise ValueError(
-                "pydelta writer supports unpartitioned tables; "
-                "partitioned writes go through delta_py.write_delta"
-            )
-        rels = [m.rel for m in messages if m is not None and m.rel]
-        actions: list[dict] = []
-        if snap is None:
-            version = 0
-            actions.append({"protocol": dict(PROTOCOL)})
-            actions.append(_meta_action(self._schema, [], str(uuid.uuid4())))
-        else:
-            version = snap.version + 1
-            if self._schema.json() != snap.schema.json():
-                raise ValueError(
-                    "schema mismatch with existing table (pydelta writer "
-                    "does not evolve schemas; use delta_py.write_delta)"
-                )
-        if self._overwrite and snap is not None:
-            now_ms = int(_time.time() * 1000)
-            for rel in sorted(snap.adds):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                        }
-                    }
-                )
-        actions.extend(_add_action(self._path, rel, {}) for rel in rels)
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": int(_time.time() * 1000),
-                    "operation": "WRITE",
-                    "operationParameters": {
-                        "mode": "OVERWRITE" if self._overwrite else "APPEND",
-                        "partitionBy": "[]",
-                    },
-                    "engineInfo": "local-lakehouse-spark pydelta",
-                }
-            }
-        )
-        # blind-append retry (same model as delta_py.write_delta):
-        # an append read no table data, so it commutes past version
-        # races; overwrite must surface the conflict.
-        for _ in range(64):
-            try:
-                log.commit(version, actions)
-                break
-            except ConcurrentModificationError:
-                if self._overwrite or snap is None:
-                    raise
-                newest = log.snapshot(allow=frozenset({_DV}))
-                if newest.schema.json() != snap.schema.json():
-                    raise
-                version = newest.version + 1
-        else:
-            raise ConcurrentModificationError(
-                f"append to {self._path} lost 64 version races; giving up"
-            )
-        if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-            log.write_checkpoint(version)
-
-    def abort(self, messages) -> None:
+    def abort(self, messages, batchId: "int | None" = None) -> None:
         for m in messages or []:
             if m is not None and m.rel:
                 try:
                     os.unlink(os.path.join(self._path, m.rel))
                 except FileNotFoundError:
                     pass
+
+    def _base(self):
+        """(log, snapshot or None for a new table), refusing tables
+        whose invariants a raw-add commit cannot keep: unsupported
+        writer features, row tracking (baseRowId ranges come from
+        write_delta's rewrite paths), CHECK constraints (``commit``
+        runs without the user's Spark session, so it cannot evaluate
+        a SQL predicate) and hive partitioning. Appends and wholesale
+        overwrites never read table data, so deletion vectors are
+        fine; column-mapped tables stay refused by the snapshot gate
+        (this sink writes logical column names raw)."""
+        log = DeltaLog(self._path)
+        if not log.versions():
+            return log, None
+        snap = log.snapshot(allow=frozenset({FEATURE_DELETION_VECTORS}))
+        _check_writer_support(snap, self._path)
+        conf = snap.configuration
+        if row_tracking_enabled(conf):
+            raise ValueError(
+                "pydelta writer cannot assign baseRowId ranges on a "
+                "row-tracked table; use delta_py.write_delta"
+            )
+        if any(k.startswith("delta.constraints.") for k in conf):
+            raise ValueError(
+                "pydelta writer cannot evaluate the CHECK constraints "
+                "(delta.constraints.*) of this table; use "
+                "delta_py.write_delta"
+            )
+        if snap.partition_columns:
+            raise ValueError(
+                "pydelta writer supports unpartitioned tables; "
+                "partitioned writes go through delta_py.write_delta"
+            )
+        return log, snap
+
+    def _actions(self, snap, messages, lead: list) -> list:
+        """Table-creation actions when ``snap`` is None, then ``lead``,
+        then one add per written part file."""
+        create = (
+            [
+                {"protocol": dict(PROTOCOL)},
+                _meta_action(self._schema, [], str(uuid.uuid4())),
+            ]
+            if snap is None
+            else []
+        )
+        adds = [
+            _add_action(self._path, m.rel, {})
+            for m in messages
+            if m is not None and m.rel
+        ]
+        return create + lead + adds
+
+
+def _commit_info(operation: str, parameters: dict) -> dict:
+    return {
+        "commitInfo": {
+            "timestamp": int(time.time() * 1000),
+            "operation": operation,
+            "operationParameters": parameters,
+            "engineInfo": "local-lakehouse-spark pydelta",
+        }
+    }
+
+
+class _PyDeltaWriter(_PyDeltaSink, DataSourceArrowWriter):
+    """Distributed transactional batch write: append is a blind
+    append (commutes with concurrent data commits), overwrite removes
+    every live file and never retries past a concurrent commit."""
+
+    def __init__(self, options: dict, schema: T.StructType, overwrite: bool):
+        super().__init__(options, schema)
+        self._overwrite = overwrite
+
+    def commit(self, messages) -> None:
+        log, snap = self._base()
+        if snap is not None and self._schema.json() != snap.schema.json():
+            raise ValueError(
+                "schema mismatch with existing table (pydelta writer "
+                "does not evolve schemas; use delta_py.write_delta)"
+            )
+        removes = []
+        if self._overwrite and snap is not None:
+            now_ms = int(time.time() * 1000)
+            removes = [
+                {
+                    "remove": {
+                        "path": rel,
+                        "deletionTimestamp": now_ms,
+                        "dataChange": True,
+                    }
+                }
+                for rel in sorted(snap.adds)
+            ]
+        actions = self._actions(snap, messages, removes)
+        actions.append(
+            _commit_info(
+                "WRITE",
+                {
+                    "mode": "OVERWRITE" if self._overwrite else "APPEND",
+                    "partitionBy": "[]",
+                },
+            )
+        )
+        commit_actions(
+            log, snap, actions, reads=WHOLE_TABLE if self._overwrite else set()
+        )
 
 
 class _PyDeltaStreamReader(DataSourceStreamReader):
@@ -620,7 +585,7 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
     reads)."""
 
     def __init__(self, options: dict, schema: T.StructType):
-        from .delta_py import BATCH_READ_FEATURES, cdf_enabled
+        from .delta_py import cdf_enabled
 
         self._path = _required_path(options)
         self._schema = schema
@@ -703,11 +668,7 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         for v in self._log.versions():
             if v <= start or v > end:
                 continue
-            fname = os.path.join(self._log.log_dir, f"{v:020d}.json")
-            with open(fname) as f:
-                actions = [
-                    json.loads(line) for line in f if line.strip()
-                ]
+            actions = self._log.read_commit(v)
             # A commit that CHANGES existing data — removes with
             # dataChange=true, or a deletion vector attached to an
             # already-live file — cannot be replayed incrementally
@@ -762,17 +723,11 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         from datetime import datetime, timezone
         from urllib.parse import unquote
 
-        from .delta_py import BATCH_READ_FEATURES
-
         out = []
         for v in self._log.versions():
             if v <= start or v > end:
                 continue
-            fname = os.path.join(self._log.log_dir, f"{v:020d}.json")
-            with open(fname) as f:
-                actions = [
-                    json.loads(line) for line in f if line.strip()
-                ]
+            actions = self._log.read_commit(v)
             ts = self._log.commit_timestamp(v)
             meta = {
                 "_commit_version": str(v),
@@ -884,144 +839,49 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         pass
 
 
-class _PyDeltaStreamWriter(DataSourceStreamArrowWriter):
+class _PyDeltaStreamWriter(_PyDeltaSink, DataSourceStreamArrowWriter):
     """Streaming SINK: every microbatch commits one Delta version
     carrying a ``txn`` action ``{appId, version=batchId}`` — the
     protocol's transaction identifier. On restart, a replayed
     microbatch whose batchId is ≤ the appId's last committed version
-    is SKIPPED (its freshly written part files are deleted), which is
-    exactly how Delta's own streaming sink achieves idempotent
-    exactly-once appends on top of an at-least-once engine. Set
+    (``Snapshot.txns``, carried through checkpoints) is SKIPPED (its
+    freshly written part files are deleted), which is exactly how
+    Delta's own streaming sink achieves idempotent exactly-once
+    appends on top of an at-least-once engine. Set
     ``.option("txnAppId", ...)`` to scope idempotency per query
     (default "pydelta-stream")."""
 
     def __init__(self, options: dict, schema: T.StructType):
-        self._path = _required_path(options)
-        self._schema = schema
+        super().__init__(options, schema)
         self._app = options.get("txnappid", "pydelta-stream")
 
-    # executors: identical part-file write as the batch arrow writer
-    def write(self, iterator) -> _FileCommit:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        batches = list(iterator)
-        if not batches or sum(b.num_rows for b in batches) == 0:
-            return _FileCommit("")
-        rel = f"part-{uuid.uuid4().hex}.snappy.parquet"
-        os.makedirs(self._path, exist_ok=True)
-        pq.write_table(
-            pa.Table.from_batches(batches),
-            os.path.join(self._path, rel),
-            compression="snappy",
-        )
-        return _FileCommit(rel)
-
-    def _last_txn_version(self, log: DeltaLog) -> int:
-        last = -1
-        for v in log.versions():
-            fname = os.path.join(log.log_dir, f"{v:020d}.json")
-            with open(fname) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    txn = action.get("txn")
-                    if txn and txn.get("appId") == self._app:
-                        last = max(last, int(txn.get("version", -1)))
-        return last
-
     def commit(self, messages, batchId: int) -> None:
-        import time as _time
-
-        log = DeltaLog(self._path)
-        vs = log.versions()
-        # exactly-once sink appends are blind writes: DV snapshots
-        # are safe (same reasoning as the batch writer above)
-        from .delta_py import FEATURE_DELETION_VECTORS as _DV
-        from .delta_py import _check_writer_support
-
-        snap = log.snapshot(allow=frozenset({_DV})) if vs else None
-        if snap is not None:
-            # raw-add commits cannot honor per-row writer features
-            # (row tracking's baseRowId completeness, identity
-            # watermarks handled by delta_py.write_delta)
-            _check_writer_support(snap, self._path)
-            from .delta_py import row_tracking_enabled
-
-            if row_tracking_enabled(snap.configuration):
-                raise ValueError(
-                    "pydelta writer cannot assign baseRowId ranges on "
-                    "a row-tracked table; use delta_py.write_delta"
-                )
-        rels = [m.rel for m in messages if m is not None and m.rel]
-        if snap is not None and batchId <= self._last_txn_version(log):
+        log, snap = self._base()
+        if snap is not None and batchId <= snap.txns.get(self._app, -1):
             # replayed microbatch after restart: already committed —
             # drop the duplicate files, commit nothing
-            for rel in rels:
-                try:
-                    os.unlink(os.path.join(self._path, rel))
-                except FileNotFoundError:
-                    pass
+            self.abort(messages)
             return
-        actions: list[dict] = []
-        if snap is None:
-            version = 0
-            actions.append({"protocol": dict(PROTOCOL)})
-            actions.append(_meta_action(self._schema, [], str(uuid.uuid4())))
-        else:
-            if snap.partition_columns:
-                raise ValueError(
-                    "pydelta stream sink supports unpartitioned tables"
-                )
-            version = snap.version + 1
-        actions.append(
-            {"txn": {"appId": self._app, "version": int(batchId)}}
+        actions = self._actions(
+            snap,
+            messages,
+            [{"txn": {"appId": self._app, "version": int(batchId)}}],
         )
-        actions.extend(_add_action(self._path, rel, {}) for rel in rels)
         actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": int(_time.time() * 1000),
-                    "operation": "STREAMING UPDATE",
-                    "operationParameters": {
-                        "outputMode": "Append",
-                        "epochId": int(batchId),
-                    },
-                    "engineInfo": "local-lakehouse-spark pydelta",
-                }
-            }
-        )
-        # blind-append retry past concurrent writers (batch appends or
-        # other streams); the txn check re-runs after losing a race
-        for _ in range(64):
-            try:
-                log.commit(version, actions)
-                break
-            except ConcurrentModificationError:
-                newest = log.snapshot(allow=frozenset({_DV}))
-                if batchId <= self._last_txn_version(log):
-                    for rel in rels:
-                        try:
-                            os.unlink(os.path.join(self._path, rel))
-                        except FileNotFoundError:
-                            pass
-                    return
-                version = newest.version + 1
-        else:
-            raise ConcurrentModificationError(
-                f"stream append to {self._path} lost 64 version races"
+            _commit_info(
+                "STREAMING UPDATE",
+                {"outputMode": "Append", "epochId": int(batchId)},
             )
-        if version > 0 and version % CHECKPOINT_INTERVAL == 0:
-            log.write_checkpoint(version)
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            if m is not None and m.rel:
-                try:
-                    os.unlink(os.path.join(self._path, m.rel))
-                except FileNotFoundError:
-                    pass
+        )
+        try:
+            commit_actions(log, snap, actions, reads=set())
+        except ConcurrentModificationError:
+            # a concurrent commit of the same appId refuses the retry:
+            # if it landed this very batch, the replay is a no-op
+            newest = log.snapshot(allow=BATCH_READ_FEATURES)
+            if batchId > newest.txns.get(self._app, -1):
+                raise
+            self.abort(messages)
 
 
 def _required_path(options: dict) -> str:
@@ -1042,8 +902,6 @@ class PyDeltaDataSource(DataSource):
         return "pydelta"
 
     def schema(self):
-        from .delta_py import BATCH_READ_FEATURES
-
         v = self.options.get("versionasof")
         # metadata-only: the logical schema is feature-independent;
         # each reader (batch vs stream) enforces its own capability

@@ -1203,6 +1203,33 @@ def test_dml_conflicts_on_concurrent_metadata_change(spark, tbl, monkeypatch):
     monkeypatch.undo()
 
 
+def test_blind_append_conflicts_on_concurrent_metadata_change(
+    spark, tbl, monkeypatch
+):
+    """A blind append losing the version race to a concurrent ADD
+    CONSTRAINT (a metaData commit) must not retry: its rows were never
+    checked against the new constraint."""
+    write_delta(spark, spark.createDataFrame([(1,), (2,)], "id long"), tbl)
+    meta = dict(DeltaLog(tbl).snapshot().metadata)
+    meta["configuration"] = {"delta.constraints.pos": "id >= 0"}
+    _race_once(
+        monkeypatch,
+        [
+            {"metaData": meta},
+            {"commitInfo": {"operation": "ADD CONSTRAINT"}},
+        ],
+    )
+    with pytest.raises(ConcurrentModificationError):
+        write_delta(
+            spark,
+            spark.createDataFrame([(-9,)], "id long"),
+            tbl,
+            mode="append",
+        )
+    monkeypatch.undo()
+    assert sorted(r.id for r in read_delta(spark, tbl).collect()) == [1, 2]
+
+
 def test_concurrent_disjoint_deletes_from_threads(spark, tbl):
     """Two real threads DV-delete rows living in DIFFERENT files at
     the same time: whoever loses the version race retries past the

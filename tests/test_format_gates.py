@@ -1,27 +1,11 @@
-"""DELTA execution paths + AVRO fallback-source selection.
+"""DELTA execution paths + AVRO execution.
 
-The environment ships neither delta-spark nor the spark-avro jar
-(reference parity requires both formats —
-/root/reference/uchelper/dataframe.py:197-226,414-425). Both formats
-are EXECUTABLE regardless: io.py probes for the JVM sources
-(preferred when present) and otherwise uses pure-Python
-implementations of the public container formats — the Avro object
-container codec (sources/avro_py.py, tests/test_avro_codec.py) and
-the Delta transaction log (sources/delta_py.py,
-tests/test_delta_py.py). The tests here pin the selection logic and
-the client-level DELTA lifecycle.
-
-Vendored-activation attempt (round 3), documented so the finding is
-reproducible:
-  - no connector jars anywhere on disk: ``find / -name '*delta*jar'``
-    and ``... -name 'spark-avro*'`` return nothing (pyspark/jars has
-    only avro-1.12.1 core, NOT the spark-avro DataSource);
-  - no python package: ``importlib.util.find_spec('delta')`` → None;
-  - no ivy cache: ``~/.ivy2`` absent;
-  - no network: DNS resolution of repo1.maven.org fails (Errno -2),
-    so ``spark.jars.packages`` cannot fetch and pip cannot install.
-JVM activation is therefore impossible in-sandbox, which is why the
-pure-Python protocol implementations exist. The delta-specific
+Both formats always run on the package's pure-Python implementations
+of the public container formats — the Avro object container codec
+(sources/avro_py.py, tests/test_avro_codec.py) and the Delta
+transaction log (sources/delta_py.py, tests/test_delta_py.py); there
+is no JVM Delta or spark-avro source to select. The tests here pin
+the client-level AVRO and DELTA lifecycle. The delta-specific
 *semantics* (replaceWhere, partition_filters, schema modes, MERGE,
 time travel) are additionally pinned parquet-natively by
 tests/test_dataframes.py and tests/test_merge.py, mirroring the
@@ -35,36 +19,17 @@ import os
 import pytest
 
 from local_lakehouse_spark import UnsupportedOperationError
-from local_lakehouse_spark.io import HAVE_DELTA, read_format_path
+from local_lakehouse_spark.io import read_format_path
 from local_lakehouse_spark.models import FileType
-
-from conftest import SF_DIR
-
-
-def _have_avro(spark) -> bool:
-    try:
-        spark.read.format("avro").load(f"{SF_DIR}/region.parquet")
-        return True
-    except Exception as exc:
-        # jar missing → FAILED_FIND_DATA_SOURCE / ClassNotFound;
-        # anything else (e.g. wrong-format parse error) means the
-        # source EXISTS.
-        return "Failed to find" not in str(exc) and "ClassNotFound" not in str(exc)
 
 
 # -- AVRO --------------------------------------------------------------------
 # Positive coverage lives in tests/test_avro_codec.py (codec + client
-# lifecycle); here we pin the JVM-vs-python source selection.
-
-
-def test_avro_source_selection_matches_probe(spark):
-    from local_lakehouse_spark.io import _have_jvm_avro
-
-    assert _have_jvm_avro(spark) == _have_avro(spark)
+# lifecycle).
 
 
 def test_avro_always_executable(unity, random_df, tmp_path):
-    """AVRO works with or without the jar — no gate anymore."""
+    """AVRO writes and reads through the Python codec."""
     df = random_df(3)
     unity.create_as_table(
         df, "unity", "default", "av_gate", file_type="avro",
@@ -106,13 +71,12 @@ def test_delta_create_read_append_time_travel(unity, random_df, tmp_path):
         random_df(2), "unity", "default", "dt", mode="append"
     )
     assert unity.read_table("unity", "default", "dt").count() == 5
-    if not HAVE_DELTA:
-        assert unity.read_table("unity", "default", "dt", version=0).count() == 3
+    assert unity.read_table("unity", "default", "dt", version=0).count() == 3
 
 
 def test_delta_helpers(unity, random_df, tmp_path):
-    """get_delta_table + sync_delta_properties work without the jar
-    (PyDeltaTable facade over the python log)."""
+    """get_delta_table + sync_delta_properties (PyDeltaTable facade
+    over the python log)."""
     unity.create_as_table(
         random_df(3), "unity", "default", "dt2", file_type="delta",
         location=f"file://{tmp_path}/d2",
@@ -157,12 +121,11 @@ def test_delta_merge_commits_log_version(unity, spark, tmp_path):
         for r in unity.read_table("unity", "default", "dm").collect()
     }
     assert out == {(1, "a"), (2, "B"), (3, "c")}
-    if not HAVE_DELTA:
-        v0 = {
-            (r.id, r.val)
-            for r in unity.read_table("unity", "default", "dm", version=0).collect()
-        }
-        assert v0 == {(1, "a"), (2, "b")}
+    v0 = {
+        (r.id, r.val)
+        for r in unity.read_table("unity", "default", "dm", version=0).collect()
+    }
+    assert v0 == {(1, "a"), (2, "b")}
 
 
 def test_delta_replace_where(unity, spark, tmp_path):

@@ -9,10 +9,12 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from local_lakehouse_spark.sources import delta_py, pydelta_source
 from local_lakehouse_spark.sources.pydelta_source import (
     _PyDeltaReader,
+    _PyDeltaStreamWriter,
     PyDeltaDataSource,
 )
 
@@ -56,27 +58,47 @@ def test_version_as_of_time_travel(spark, tbl):
     assert spark.read.format("pydelta").load(tbl).count() == 30
 
 
-def test_push_filters_prune_files(spark, tbl):
+def _kept_files(spark, tbl, how, col, op, value) -> int:
+    """Files that survive the pushed ``col op value`` filter through
+    one of the two read entry points."""
+    if how == "read_delta":
+        df = delta_py.read_delta(spark, tbl, filters=[(col, op, value)])
+        return len(df.inputFiles())
+    cls = {v: k for k, v in pydelta_source._OPS.items()}[op]
+    r = _PyDeltaReader({"path": tbl})
+    returned = list(r.pushFilters([cls((col,), value)]))
+    assert len(returned) == 1  # every filter handed back for row-level apply
+    return len(r._adds)
+
+
+def _filtered_rows(spark, tbl, how, col, op, value):
+    """Rows matching ``col op value``: pruned by the entry point, then
+    filtered row-level (the caller's job for read_delta)."""
+    if how == "read_delta":
+        df = delta_py.read_delta(spark, tbl, filters=[(col, op, value)])
+    else:
+        df = spark.read.format("pydelta").load(tbl)
+    return df.filter(f"{col} {op} {value}").collect()
+
+
+READ_ENTRY_POINTS = ["read_delta", "pydelta"]
+
+
+@pytest.mark.parametrize("how", READ_ENTRY_POINTS)
+def test_push_filters_prune_files(spark, tbl, how):
     """8 part files of disjoint id ranges: a point filter must prune
-    the file list on the driver (stats-based skipping), and the full
-    row-level answer stays exact."""
+    the file list on the driver (stats-based skipping) through both
+    read entry points, and the full row-level answer stays exact."""
     spark.range(0, 10000).select(
         "id", (F.col("id") % 7).alias("v")
     ).repartitionByRange(8, "id").write.format("pydelta").mode("append").save(
         tbl
     )
-    from pyspark.sql.datasource import GreaterThanOrEqual
-
-    r = _PyDeltaReader({"path": tbl})
-    n_before = len(r._adds)
-    assert n_before == 8
-    returned = list(r.pushFilters([GreaterThanOrEqual(("id",), 9990)]))
-    assert len(returned) == 1  # every filter handed back for row-level apply
-    assert len(r._adds) == 1  # 7 of 8 files skipped from log stats alone
-    # end-to-end exactness through the real scan
-    got = spark.read.format("pydelta").load(tbl).filter("id >= 9990")
-    assert got.count() == 10
-    assert spark.read.format("pydelta").load(tbl).filter("id < 0").count() == 0
+    assert len(delta_py.DeltaLog(tbl).snapshot().adds) == 8
+    # 7 of 8 files skipped from log stats alone
+    assert _kept_files(spark, tbl, how, "id", ">=", 9990) == 1
+    assert len(_filtered_rows(spark, tbl, how, "id", ">=", 9990)) == 10
+    assert _filtered_rows(spark, tbl, how, "id", "<", 0) == []
 
 
 def test_read_partitioned_and_evolved_table(spark, tbl):
@@ -271,19 +293,32 @@ def test_stream_sink_rejects_overwrite_mode(spark, tbl, tmp_path):
         raise RuntimeError("complete-mode sink write should have failed")
 
 
-def test_numeric_partition_pruning_is_typed(spark, tbl):
+@pytest.mark.parametrize("how", READ_ENTRY_POINTS)
+def test_numeric_partition_pruning_is_typed(spark, tbl, how):
     """Regression (round-5 ADVICE): partition values live as STRINGS
     in the Delta log, and a lexicographic compare prunes wrongly on
     numeric columns ('10' > '9' is False as strings) — p > 9 on an
     int column partitioned 0..12 returned 0 rows instead of 3. The
-    pushed range filter must compare typed values."""
-    df = spark.createDataFrame([(i, i * 10) for i in range(13)], "p int, v int")
+    pushed range filter must compare typed values, through both read
+    entry points. A null partition (``__HIVE_DEFAULT_PARTITION__``)
+    file is always kept by pruning and never matches a comparison."""
+    df = spark.createDataFrame(
+        [(i, i * 10) for i in range(13)] + [(None, -1)], "p int, v int"
+    )
     delta_py.write_delta(spark, df, tbl, partition_by=["p"])
-    got = spark.read.format("pydelta").load(tbl).filter("p > 9")
-    assert sorted(r.p for r in got.collect()) == [10, 11, 12]
+    adds = delta_py.DeltaLog(tbl).snapshot().adds
+    assert len(adds) == 14
+    assert any(
+        a["partitionValues"]["p"] in (None, "__HIVE_DEFAULT_PARTITION__")
+        for a in adds.values()
+    )
+    assert _kept_files(spark, tbl, how, "p", ">", 9) == 3 + 1
+    got = _filtered_rows(spark, tbl, how, "p", ">", 9)
+    assert sorted(r.p for r in got) == [10, 11, 12]
     # point + range on the other side, and equality, all stay exact
-    assert spark.read.format("pydelta").load(tbl).filter("p < 2").count() == 2
-    assert spark.read.format("pydelta").load(tbl).filter("p = 10").count() == 1
+    assert len(_filtered_rows(spark, tbl, how, "p", "<", 2)) == 2
+    assert len(_filtered_rows(spark, tbl, how, "p", "=", 10)) == 1
+    assert _kept_files(spark, tbl, how, "p", "=", 10) == 1 + 1
 
 
 def test_typed_partition_value_parsing():
@@ -572,3 +607,67 @@ def test_stream_refuses_expired_starting_version(spark, tbl):
         .load(tbl)
     )
     assert df.isStreaming
+
+
+def _sink_message(sink, ids):
+    """One executor-side part file written by a pydelta sink."""
+    import pyarrow as pa
+
+    batch = pa.record_batch([pa.array(ids, pa.int64())], names=["id"])
+    return sink.write(iter([batch]))
+
+
+_ID_SCHEMA = T.StructType([T.StructField("id", T.LongType())])
+
+
+def test_batch_overwrite_refused_on_append_only_table(spark, tbl):
+    """delta.appendOnly binds the pydelta batch sink too: an
+    overwrite refuses (it removes live files) and the table keeps its
+    rows; appends still land."""
+    spark.range(3).write.format("pydelta").mode("append").save(tbl)
+    delta_py.set_properties(tbl, {"delta.appendOnly": "true"})
+    with pytest.raises(Exception, match="append-only"):
+        spark.range(1).write.format("pydelta").mode("overwrite").save(tbl)
+    spark.range(3, 5).write.format("pydelta").mode("append").save(tbl)
+    got = sorted(r.id for r in spark.read.format("pydelta").load(tbl).collect())
+    assert got == [0, 1, 2, 3, 4]
+
+
+def test_sinks_refuse_check_constrained_table(spark, tbl):
+    """Both pydelta sinks commit on the driver without the user's
+    Spark session, so they cannot evaluate a CHECK constraint: a
+    constrained table refuses instead of landing violating rows."""
+    spark.range(3).write.format("pydelta").mode("append").save(tbl)
+    delta_py.set_properties(
+        tbl, {"delta.constraints.pos": "id >= 0"}, allow_constraint_keys=True
+    )
+    with pytest.raises(Exception, match="CHECK constraints"):
+        spark.range(-5, -4).write.format("pydelta").mode("append").save(tbl)
+    sink = _PyDeltaStreamWriter({"path": tbl}, _ID_SCHEMA)
+    with pytest.raises(ValueError, match="CHECK constraints"):
+        sink.commit([_sink_message(sink, [-7])], 0)
+    got = sorted(r.id for r in delta_py.read_delta(spark, tbl).collect())
+    assert got == [0, 1, 2]
+
+
+def test_stream_sink_exactly_once_survives_log_cleanup(spark, tbl):
+    """The sink's last committed batch per appId lives in the
+    snapshot (log replay + checkpoints), so a replayed microbatch is
+    still skipped after metadata cleanup expired the commit JSONs
+    that carried its txn action."""
+    sink = _PyDeltaStreamWriter({"path": tbl, "txnappid": "q"}, _ID_SCHEMA)
+    for b in range(3):
+        sink.commit([_sink_message(sink, [100 + b])], b)
+    delta_py.write_delta(
+        spark, spark.createDataFrame([(1,)], "id long"), tbl, mode="append"
+    )
+    delta_py.set_properties(
+        tbl, {"delta.logRetentionDuration": "interval 0 seconds"}
+    )
+    log = delta_py.DeltaLog(tbl)
+    log.write_checkpoint()
+    assert log.cleanup_metadata()
+    sink.commit([_sink_message(sink, [101])], 1)  # engine-side replay
+    got = sorted(r.id for r in delta_py.read_delta(spark, tbl).collect())
+    assert got == [1, 100, 101, 102]
+    assert log.snapshot().txns == {"q": 2}
