@@ -832,56 +832,16 @@ class LakehouseClient:
         """
         tbl = self.get_table(catalog, schema, name)
         if tbl.file_type == FileType.DELTA:
-            from urllib.parse import unquote
-
             from .sources import delta_py
 
-            spark = self._require_spark()
-            path = _io.strip_file_scheme(tbl.storage_location or "")
-            appended = delta_py.appended_files_between(
-                path, from_version, to_version
+            fast = delta_py.appended_changes(
+                self._require_spark(),
+                _io.strip_file_scheme(tbl.storage_location or ""),
+                from_version,
+                to_version,
             )
-            if appended is not None:
-                snap = delta_py.DeltaLog(path).snapshot(
-                    to_version, allow=delta_py.BATCH_READ_FEATURES
-                )
-                ct_col = F.lit("insert").alias("_change_type")
-                if not appended:
-                    return spark.createDataFrame([], snap.schema).select(
-                        "*", ct_col
-                    )
-                mapped = snap.column_mapping_mode not in ("", "none")
-                scan_schema = (
-                    delta_py._physical_type(
-                        snap.schema,
-                        field_ids=snap.column_mapping_mode == "id",
-                    )
-                    if mapped
-                    else snap.schema
-                )
-                reader = spark.read.option("basePath", path).schema(
-                    scan_schema
-                )
-                df = reader.parquet(
-                    *[os.path.join(path, unquote(p)) for p in appended]
-                )
-                if mapped:
-                    # physical-named files -> logical columns (same
-                    # cast-rename as read_delta; binding the logical
-                    # schema directly would read silent NULLs)
-                    phys = delta_py._physical_names(snap.schema)
-                    return df.select(
-                        *[
-                            F.col(phys[f.name])
-                            .cast(f.dataType)
-                            .alias(f.name)
-                            for f in snap.schema.fields
-                        ],
-                        ct_col,
-                    )
-                return df.select(
-                    *[f.name for f in snap.schema.fields], ct_col
-                )
+            if fast is not None:
+                return fast
         keys = tbl.default_merge_columns()
         if tbl.file_type == FileType.ICEBERG and not keys:
             # Iceberg fast path: NET changes from the changelog scan —

@@ -57,7 +57,12 @@ Scale notes: data files are written DISTRIBUTED by Spark (the move
 into place is a per-file rename, metadata cost only); reads hand
 Spark the full file list + schema so scan parallelism, predicate
 pushdown, and partition-dir derivation (``basePath``) all behave
-exactly as a native Delta scan would.
+exactly as a native Delta scan would. Every JVM-side read of data
+files — the readers, DML scans, rewrites, the change feed and the
+constraint gate — is planned from the snapshot by three helpers:
+``_file_scan`` (file list + scan schema + ``basePath``),
+``_drop_deleted`` (row positions + the deletion-vector anti-join)
+and ``_to_logical`` (the column-mapping physical -> logical rename).
 """
 
 from __future__ import annotations
@@ -68,7 +73,7 @@ import re
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 from urllib.parse import quote, unquote
 
@@ -254,12 +259,46 @@ class Snapshot:
     def configuration(self) -> dict:
         return dict(self.metadata.get("configuration") or {})
 
-    def files(self, base: str) -> list[str]:
-        return [os.path.join(base, unquote(p)) for p in sorted(self.adds)]
+    def files(self, base: str, rels) -> list[str]:
+        """Absolute paths of ``rels`` (add-action paths), sorted."""
+        return [os.path.join(base, unquote(p)) for p in sorted(rels)]
 
     @property
     def column_mapping_mode(self) -> str:
         return self.configuration.get("delta.columnMapping.mode", "none")
+
+    @property
+    def physical_names(self) -> dict:
+        """Top-level logical -> physical column names of a
+        column-mapped table; ``{}`` (names are physical) when column
+        mapping is off."""
+        if self.column_mapping_mode in ("", "none"):
+            return {}
+        return _physical_names(self.schema)
+
+    @property
+    def field_ids(self) -> dict:
+        """Top-level logical name -> ``delta.columnMapping.id`` under
+        ``delta.columnMapping.mode=id`` (footer field ids bind the
+        columns; names are only the fallback); ``{}`` otherwise."""
+        if self.column_mapping_mode != "id":
+            return {}
+        return {
+            f.name: int(f.metadata["delta.columnMapping.id"])
+            for f in self.schema.fields
+            if f.metadata and "delta.columnMapping.id" in f.metadata
+        }
+
+    @property
+    def scan_schema(self) -> T.StructType:
+        """The schema data files are scanned with: the log schema, or
+        on a column-mapped table its physical-name twin (stamped with
+        parquet field ids in id mode)."""
+        if not self.physical_names:
+            return self.schema
+        return _physical_type(
+            self.schema, field_ids=self.column_mapping_mode == "id"
+        )
 
     @property
     def dv_adds(self) -> dict:
@@ -291,7 +330,7 @@ def _check_reader_support(
     # perfectly readable data. A version that DOES carry them trips
     # the demand regardless of the protocol listing (legacy
     # pre-feature tables signal via configuration only).
-    if snap.column_mapping_mode not in ("", "none"):
+    if snap.physical_names:
         demanded.add(FEATURE_COLUMN_MAPPING)
     else:
         demanded.discard(FEATURE_COLUMN_MAPPING)
@@ -1105,7 +1144,7 @@ def candidate_files(
     skipping must never drop a possible match. Partition values are
     compared typed (partition_keep)."""
     out = []
-    phys = _snapshot_physical_names(snap)
+    phys = snap.physical_names
     dtypes = {phys.get(f.name, f.name): f.dataType for f in snap.schema.fields}
     if col in snap.partition_columns:
         for rel, add in sorted(snap.adds.items()):
@@ -1146,7 +1185,7 @@ def pruned_adds(snap: Snapshot, filters: list[tuple]) -> dict:
     physical column and pruned by :func:`candidate_files`. Every Delta
     read entry point (read_delta, the pydelta reader, the DV
     delete/update scans) prunes through here."""
-    phys = _snapshot_physical_names(snap)
+    phys = snap.physical_names
     keep = set(snap.adds)
     for col, op, value in filters:
         keep &= set(candidate_files(snap, phys.get(col, col), op, value))
@@ -1214,25 +1253,6 @@ def _physical_names(schema: T.StructType) -> dict:
             "delta.columnMapping.physicalName", f.name
         )
         for f in schema.fields
-    }
-
-
-def _snapshot_physical_names(snap: Snapshot) -> dict:
-    """Logical -> physical map of a column-mapped snapshot; empty
-    (names are physical) when column mapping is off."""
-    if snap.column_mapping_mode in ("", "none"):
-        return {}
-    return _physical_names(snap.schema)
-
-
-def _mapping_field_ids(schema: T.StructType) -> dict:
-    """Top-level logical name -> ``delta.columnMapping.id`` — the
-    binding key under ``delta.columnMapping.mode=id`` (footer field
-    ids resolve columns; names are only the fallback)."""
-    return {
-        f.name: int(f.metadata["delta.columnMapping.id"])
-        for f in schema.fields
-        if f.metadata and "delta.columnMapping.id" in f.metadata
     }
 
 
@@ -1345,6 +1365,125 @@ def _deleted_positions_df(
     return desc_df.mapInPandas(expand, out_schema)
 
 
+# ---------------------------------------------------------------------------
+# Scan planning: every JVM-side read of Delta data files is built from
+# these three steps — _file_scan (files + scan schema), _drop_deleted
+# (positions + deletion-vector anti-join), _to_logical (column mapping).
+# ---------------------------------------------------------------------------
+
+
+def _file_scan(
+    spark: SparkSession,
+    snap: Snapshot,
+    base: str,
+    paths: list,
+    extra_fields=(),
+) -> DataFrame:
+    """The one parquet scan over Delta data files: ``paths``
+    (absolute) bound to ``snap.scan_schema`` plus ``extra_fields``
+    (the materialized row-id columns), so nothing is inferred from a
+    footer or a directory name. ``basePath`` anchors hive partition-
+    column derivation and is set only on a partitioned table, so
+    absolute add paths (shallow clones) scan cleanly from outside the
+    table dir. The scan carries PHYSICAL names; _to_logical renames."""
+    schema = snap.scan_schema
+    if extra_fields:
+        schema = T.StructType(list(schema.fields) + list(extra_fields))
+    reader = spark.read.schema(schema)
+    if snap.partition_columns:
+        reader = reader.option("basePath", base)
+    return reader.parquet(*paths)
+
+
+def _drop_deleted(scan: DataFrame, dv_adds: dict, path: str) -> DataFrame:
+    """Attach each row's position (``__llh_fn`` data-file basename,
+    ``__llh_ri`` row index — read from ``_metadata``, so ``scan`` must
+    be a raw _file_scan) and LEFT-ANTI join away the positions the
+    deletion vectors of ``dv_adds`` mark deleted: broadcast when the
+    total cardinality is small (no shuffle of the scan), executor-side
+    decode + shuffle join above the threshold. With no ``dv_adds``
+    only the positions are attached."""
+    from pyspark.sql import functions as F
+
+    scan = scan.withColumns(
+        {
+            "__llh_fn": F.col("_metadata.file_name"),
+            "__llh_ri": F.col("_metadata.row_index"),
+        }
+    )
+    if not dv_adds:
+        return scan
+    total_card = sum(
+        int(a["deletionVector"].get("cardinality") or 0)
+        for a in dv_adds.values()
+    )
+    deleted = _deleted_positions_df(
+        scan.sparkSession, dv_adds, path, total_card
+    )
+    if total_card <= _DV_BROADCAST_MAX_ROWS:
+        deleted = F.broadcast(deleted)
+    return scan.join(
+        deleted,
+        (scan["__llh_fn"] == deleted["file_name"])
+        & (scan["__llh_ri"] == deleted["row_index"]),
+        "left_anti",
+    )
+
+
+def _to_logical(df: DataFrame, schema: T.StructType, *keep) -> DataFrame:
+    """Physical -> logical projection, the inverse of _to_physical:
+    ``schema``'s columns in declared order (Spark appends
+    dir-derived partition columns after the data columns), then
+    ``keep``. A column-mapped field is read by its physical name and
+    cast to its logical type — struct casts rename nested fields by
+    position, so the rename is wholly JVM-side."""
+    from pyspark.sql import functions as F
+
+    cols = []
+    for f in schema.fields:
+        phys = (f.metadata or {}).get("delta.columnMapping.physicalName")
+        cols.append(
+            F.col(f.name)
+            if phys is None
+            else F.col(phys).cast(f.dataType).alias(f.name)
+        )
+    return df.select(*cols, *keep)
+
+
+def _to_physical(df: DataFrame, schema: T.StructType, *keep) -> DataFrame:
+    """Logical -> physical rename right before a data write on a
+    column-mapped table: struct casts rename nested fields by
+    position — the exact inverse of _to_logical. Shared by write_delta
+    appends, DV UPDATE post-images, DV MERGE appended rows and change
+    data files (which ``keep`` their ``_change_type``).
+
+    Each top-level alias also carries ``parquet.field.id`` metadata
+    (from ``delta.columnMapping.id``), so Spark's parquet writer
+    (``spark.sql.parquet.fieldId.write.enabled``, default on) stamps
+    field ids into the footers — delta-spark does the same in BOTH
+    mapping modes, and under ``mode=id`` it is the writer obligation
+    that lets foreign readers resolve our files by id."""
+    from pyspark.sql import functions as F
+
+    phys = _physical_names(schema)
+    cols = []
+    for f in schema.fields:
+        if f.name not in df.columns:
+            continue
+        meta = f.metadata or {}
+        kw = (
+            {"metadata": {"parquet.field.id": int(meta["delta.columnMapping.id"])}}
+            if "delta.columnMapping.id" in meta
+            else {}
+        )
+        cols.append(
+            F.col(f.name)
+            .cast(_physical_type(f.dataType))
+            .alias(phys[f.name], **kw)
+        )
+    return df.select(*cols, *keep)
+
+
 def _ts_ms(value: object) -> int:
     """Epoch ms from an int/float (already ms) or an ISO-8601 string
     (naive strings are read as UTC, matching Spark's session default
@@ -1368,10 +1507,11 @@ def read_delta(
     timestamp: Optional[object] = None,
 ) -> DataFrame:
     """Snapshot → DataFrame: full file list + log schema handed to the
-    parquet scan; ``basePath`` re-derives hive partition columns, and
-    files written before a mergeSchema evolution surface the missing
-    columns as NULL (Spark's explicit-schema parquet semantics —
-    exactly Delta's).
+    parquet scan (_file_scan); ``basePath`` re-derives hive partition
+    columns, and files written before a mergeSchema evolution surface
+    the missing columns as NULL (Spark's explicit-schema parquet
+    semantics — exactly Delta's). ``schema``, when given, casts the
+    result's columns to it.
 
     ``filters``: optional ``[(col, op, value), ...]`` conjunction used
     for stats-based data skipping — files whose min/max range (or
@@ -1385,15 +1525,12 @@ def read_delta(
 
     - **Column mapping** (name/id modes): the parquet scan binds the
       PHYSICAL schema (``delta.columnMapping.physicalName``, present
-      in both modes), then one projection casts each top-level column
-      back to its logical-named type — struct casts rename nested
-      fields by position, so the rename is wholly JVM-side.
-    - **Deletion vectors**: files carrying a DV are scanned with
-      ``_metadata.file_name/row_index`` and LEFT-ANTI joined against
-      the decoded deleted positions (broadcast when the total
-      cardinality is small — no shuffle of the scan; executor-side
-      decode + shuffle anti-join above the threshold). DV-free files
-      bypass the join entirely."""
+      in both modes), then _to_logical casts each top-level column
+      back to its logical-named type.
+    - **Deletion vectors**: files carrying a DV are scanned through
+      _drop_deleted (positional LEFT-ANTI join against the decoded
+      deleted positions). DV-free files bypass the join entirely: a
+      bare scan, no ``_metadata`` columns."""
     from pyspark.sql import functions as F
 
     if timestamp is not None:
@@ -1403,85 +1540,29 @@ def read_delta(
             )
         version = DeltaLog(path).version_at_timestamp(_ts_ms(timestamp))
     snap = DeltaLog(path).snapshot(version, allow=BATCH_READ_FEATURES)
-    log_schema = snap.schema
-    mapping = snap.column_mapping_mode not in ("", "none")
-    phys = _physical_names(log_schema) if mapping else {}
     if filters:
-        snap = Snapshot(
-            version=snap.version,
-            metadata=snap.metadata,
-            protocol=snap.protocol,
-            adds=pruned_adds(snap, filters),
-        )
-    out_schema = schema or log_schema
+        snap = replace(snap, adds=pruned_adds(snap, filters))
     if not snap.adds:
-        return spark.createDataFrame([], out_schema)
-    scan_schema = (
-        _physical_type(
-            log_schema,
-            field_ids=snap.column_mapping_mode == "id",
-        )
-        if mapping
-        else out_schema
-    )
-    # basePath exists only to derive hive partition columns from dir
-    # names; unpartitioned scans omit it so absolute add paths
-    # (shallow clones) scan cleanly from outside the table dir.
-    reader = spark.read.schema(scan_schema)
-    if snap.partition_columns:
-        reader = reader.option("basePath", path)
-
+        return spark.createDataFrame([], schema or snap.schema)
     dv_adds = snap.dv_adds
-    plain = [
-        os.path.join(path, unquote(p))
-        for p in sorted(snap.adds)
-        if p not in dv_adds
-    ]
+    plain = [p for p in snap.adds if p not in dv_adds]
     parts: list[DataFrame] = []
     if plain:
-        parts.append(reader.parquet(*plain))
+        parts.append(_file_scan(spark, snap, path, snap.files(path, plain)))
     if dv_adds:
-        total_card = sum(
-            int(a["deletionVector"].get("cardinality") or 0)
-            for a in dv_adds.values()
+        dv_scan = _file_scan(spark, snap, path, snap.files(path, dv_adds))
+        parts.append(
+            _drop_deleted(dv_scan, dv_adds, path).drop("__llh_fn", "__llh_ri")
         )
-        deleted = _deleted_positions_df(spark, dv_adds, path, total_card)
-        if total_card <= _DV_BROADCAST_MAX_ROWS:
-            deleted = F.broadcast(deleted)
-        dv_scan = reader.parquet(
-            *[os.path.join(path, unquote(p)) for p in sorted(dv_adds)]
-        ).withColumns(
-            {
-                "__dv_fn": F.col("_metadata.file_name"),
-                "__dv_ri": F.col("_metadata.row_index"),
-            }
-        )
-        survivors = dv_scan.join(
-            deleted,
-            (dv_scan["__dv_fn"] == deleted["file_name"])
-            & (dv_scan["__dv_ri"] == deleted["row_index"]),
-            "left_anti",
-        ).drop("__dv_fn", "__dv_ri")
-        parts.append(survivors)
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
-    if mapping:
-        # physical -> logical: alias + positional struct-cast rename
+    df = _to_logical(df, snap.schema)
+    if schema is not None:
         df = df.select(
-            *[
-                F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-                for f in log_schema.fields
-            ]
+            *[F.col(f.name).cast(f.dataType) for f in schema.fields]
         )
-        if schema is not None:
-            df = df.select(
-                *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-            )
-        return df
-    # Spark appends dir-derived partition columns after the data
-    # columns; restore the log schema's declared order.
-    return df.select(*[f.name for f in out_schema.fields])
+    return df
 
 
 def _move_parts(tmp: str, path: str) -> list[tuple[str, dict]]:
@@ -1715,16 +1796,9 @@ def optimize_clustered(
     )
     if len(victims) < 2:
         return {"numFilesRemoved": 0, "numFilesAdded": 0}
-    mapped = snap.column_mapping_mode not in ("", "none")
-    phys = _physical_names(snap.schema)
-    zcols = [phys[c] for c in cols] if mapped else list(cols)
-    rt_scan = _row_tracked_rewrite_scan(spark, snap, path, victims)
-    if rt_scan is not None:
-        scan = rt_scan.drop("__llh_fn", "__llh_ri")
-    else:
-        scan = _scan_reader(spark, snap, path).parquet(
-            *[os.path.join(path, unquote(r)) for r in victims]
-        )
+    phys = snap.physical_names
+    zcols = [phys.get(c, c) for c in cols]
+    scan = _rewrite_scan(spark, snap, path, victims, {})
     total = sum(int(snap.adds[r].get("size") or 0) for r in victims)
     bins = max(1, -(-total // target_file_bytes))  # ceil
     out = zorder_layout(scan, zcols, num_files=bins)
@@ -2026,10 +2100,7 @@ def write_delta(
     snap = log.snapshot(allow=BATCH_READ_FEATURES) if vs else None
     if snap is not None:
         _check_writer_support(snap, path)
-    mapped = (
-        snap is not None
-        and snap.column_mapping_mode not in ("", "none")
-    )
+    mapped = snap is not None and bool(snap.physical_names)
     actions: list[dict] = []
 
     if snap is not None and generated:
@@ -2252,7 +2323,14 @@ def write_delta(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
-    _enforce_constraints_on_tmp(spark, snap, tmp, path)
+    # the constraint gate reads tmp with the schema this commit publishes
+    meta = [a["metaData"] for a in actions if "metaData" in a]
+    _enforce_constraints_on_tmp(
+        spark,
+        replace(snap, metadata=meta[0]) if snap is not None and meta else snap,
+        tmp,
+        path,
+    )
     os.makedirs(path, exist_ok=True)
     moved = _move_parts(tmp, path)
     if mode == "overwrite" and snap is not None:
@@ -2433,28 +2511,16 @@ def _enforce_constraints_on_tmp(
 ) -> None:
     """Run the CHECK-constraint gate over a commit's just-written tmp
     files; on violation the tmp dir is cleaned up before the raise so
-    a refused commit leaves nothing behind."""
+    a refused commit leaves nothing behind. ``snap`` carries the
+    metadata the commit publishes: tmp is scanned with its schema
+    (partition values keep their declared types — a string key
+    ``'07'`` is never read back as the integer 7) and projected to
+    logical names, the names constraint expressions speak."""
     conf = snap.configuration if snap is not None else {}
     if not any(k.startswith("delta.constraints.") for k in conf):
         return
     try:
-        df = spark.read.parquet(tmp)
-        if snap is not None and snap.column_mapping_mode not in (
-            "",
-            "none",
-        ):
-            # tmp files carry PHYSICAL names; constraint expressions
-            # speak logical — project back before evaluating.
-            from pyspark.sql import functions as F
-
-            phys = _physical_names(snap.schema)
-            df = df.select(
-                *[
-                    F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-                    for f in snap.schema.fields
-                    if phys[f.name] in df.columns
-                ]
-            )
+        df = _to_logical(_file_scan(spark, snap, tmp, [tmp]), snap.schema)
         _check_log_constraints(conf, df, path)
     except Exception:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2633,78 +2699,6 @@ def set_properties(
     return log.snapshot(version, allow=BATCH_READ_FEATURES)
 
 
-def _scan_reader(spark: SparkSession, snap: Snapshot, path: str):
-    """Parquet reader bound to the snapshot schema — the PHYSICAL
-    schema on a column-mapped table (file columns carry physical
-    names; callers that need logical names project afterwards);
-    ``basePath`` (the hive partition-dir derivation anchor) only when
-    the table is partitioned, so absolute add paths (shallow clones)
-    scan cleanly from outside the table dir."""
-    schema = snap.schema
-    if snap.column_mapping_mode not in ("", "none"):
-        schema = _physical_type(
-            schema, field_ids=snap.column_mapping_mode == "id"
-        )
-    reader = spark.read.schema(schema)
-    if snap.partition_columns:
-        reader = reader.option("basePath", path)
-    return reader
-
-
-def _to_physical(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Logical -> physical rename right before a data write on a
-    column-mapped table: struct casts rename nested fields by
-    position — the exact inverse of read_delta's physical -> logical
-    cast. Shared by write_delta appends, DV UPDATE post-images, and
-    DV MERGE appended rows.
-
-    Each top-level alias also carries ``parquet.field.id`` metadata
-    (from ``delta.columnMapping.id``), so Spark's parquet writer
-    (``spark.sql.parquet.fieldId.write.enabled``, default on) stamps
-    field ids into the footers — delta-spark does the same in BOTH
-    mapping modes, and under ``mode=id`` it is the writer obligation
-    that lets foreign readers resolve our files by id."""
-    from pyspark.sql import functions as F
-
-    phys = _physical_names(schema)
-    cols = []
-    for f in schema.fields:
-        if f.name not in df.columns:
-            continue
-        meta = f.metadata or {}
-        kw = (
-            {"metadata": {"parquet.field.id": int(meta["delta.columnMapping.id"])}}
-            if "delta.columnMapping.id" in meta
-            else {}
-        )
-        cols.append(
-            F.col(f.name)
-            .cast(_physical_type(f.dataType))
-            .alias(phys[f.name], **kw)
-        )
-    return df.select(*cols)
-
-
-def _logical_positions_scan(
-    scan: DataFrame, snap: Snapshot
-) -> DataFrame:
-    """Project a PHYSICAL-schema scan of a column-mapped table to
-    logical column names plus ``__llh_fn``/``__llh_ri`` positional
-    identity (captured BEFORE the projection — `_metadata` is only
-    reachable on the raw scan)."""
-    from pyspark.sql import functions as F
-
-    phys = _physical_names(snap.schema)
-    return scan.select(
-        F.col("_metadata.file_name").alias("__llh_fn"),
-        F.col("_metadata.row_index").alias("__llh_ri"),
-        *[
-            F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-            for f in snap.schema.fields
-        ],
-    )
-
-
 _CMP_RE = re.compile(
     r"^([A-Za-z_]\w*)\s*(==|=|<=|>=|<|>)\s*"
     r"('(?:[^']|'')*'|-?\d+(?:\.\d+)?)$"
@@ -2772,24 +2766,20 @@ def _grown_dvs(
     correctness mechanism)."""
     from pyspark.sql import functions as F
 
-    mapped = snap.column_mapping_mode not in ("", "none")
-    rels = sorted(pruned_adds(snap, _predicate_conjuncts(predicate)[0]))
+    rels = pruned_adds(snap, _predicate_conjuncts(predicate)[0])
     if not rels:
         return {}, []  # no file's range can match: metadata-only no-op
-    scan = _scan_reader(spark, snap, path).parquet(
-        *[os.path.join(path, unquote(r)) for r in rels]
-    )
-    if mapped:
-        view = _logical_positions_scan(scan, snap)
-        hits = view.filter(F.expr(predicate)).select(
+    scan = _file_scan(spark, snap, path, snap.files(path, rels))
+    hits = (
+        _to_logical(
+            _drop_deleted(scan, {}, path), snap.schema, "__llh_fn", "__llh_ri"
+        )
+        .filter(F.expr(predicate))
+        .select(
             F.col("__llh_fn").alias("file_name"),
             F.col("__llh_ri").alias("row_index"),
         )
-    else:
-        hits = scan.filter(F.expr(predicate)).select(
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.row_index").alias("row_index"),
-        )
+    )
     return _grown_dvs_from_hits(spark, snap, path, hits)
 
 
@@ -3033,7 +3023,7 @@ def update_where(
         cdc_actions = _write_cdc_files(
             spark, path, snap, pre.unionByName(post)
         )
-    if snap.column_mapping_mode not in ("", "none"):
+    if snap.physical_names:
         updated = _to_physical(updated, snap.schema)
     tmp = path + f".__delta_tmp_{uuid.uuid4().hex}"
     writer = updated.write.mode("overwrite")
@@ -3076,10 +3066,6 @@ def read_delta_with_positions(
     from pyspark.sql import functions as F
 
     snap = DeltaLog(path).snapshot(allow=BATCH_READ_FEATURES)
-    pos_cols = {
-        "__llh_fn": F.col("_metadata.file_name"),
-        "__llh_ri": F.col("_metadata.row_index"),
-    }
     if not snap.adds:
         empty = spark.createDataFrame([], snap.schema).withColumns(
             {
@@ -3088,29 +3074,9 @@ def read_delta_with_positions(
             }
         )
         return snap, empty
-    raw = _scan_reader(spark, snap, path).parquet(*snap.files(path))
-    if snap.column_mapping_mode not in ("", "none"):
-        scan = _logical_positions_scan(raw, snap)
-    else:
-        scan = raw.withColumns(pos_cols)
-    dv_adds = snap.dv_adds
-    if dv_adds:
-        total_card = sum(
-            int(a["deletionVector"].get("cardinality") or 0)
-            for a in dv_adds.values()
-        )
-        deleted = _deleted_positions_df(spark, dv_adds, path, total_card)
-        if total_card <= _DV_BROADCAST_MAX_ROWS:
-            deleted = F.broadcast(deleted)
-        scan = scan.join(
-            deleted,
-            (scan["__llh_fn"] == deleted["file_name"])
-            & (scan["__llh_ri"] == deleted["row_index"]),
-            "left_anti",
-        )
-    return snap, scan.select(
-        *[f.name for f in snap.schema.fields], "__llh_fn", "__llh_ri"
-    )
+    scan = _file_scan(spark, snap, path, snap.files(path, snap.adds))
+    live = _drop_deleted(scan, snap.dv_adds, path)
+    return snap, _to_logical(live, snap.schema, "__llh_fn", "__llh_ri")
 
 
 def _materialized_row_id_cols(configuration: dict):
@@ -3147,61 +3113,51 @@ def _base_row_id_map(spark: SparkSession, snap: Snapshot) -> DataFrame:
     )
 
 
-def _row_tracked_rewrite_scan(
-    spark: SparkSession, snap: Snapshot, path: str, rels: list
-) -> Optional[DataFrame]:
-    """Rewrite obligation under row tracking: an OPTIMIZE/PURGE that
-    repacks rows must carry each row's STABLE id into the new files
-    via the materialized columns (positions change, baseRowId
-    derivation would break). Returns the scan of ``rels`` with
-    ``__llh_fn``/``__llh_ri`` positional identity plus the two
-    materialized columns attached — values already materialized by an
+def _rewrite_scan(
+    spark: SparkSession,
+    snap: Snapshot,
+    path: str,
+    rels: list,
+    dv_adds: dict,
+) -> DataFrame:
+    """Input of a rewrite that repacks the rows of ``rels`` (OPTIMIZE,
+    PURGE): their PHYSICAL columns, with the rows ``dv_adds`` marks
+    deleted dropped. Under row tracking the rewrite must carry each
+    row's STABLE id into the new files via the materialized columns
+    (positions change, baseRowId derivation would break), so those
+    two columns are attached — values already materialized by an
     earlier rewrite win over the fresh baseRowId+position derivation.
-    None when row tracking is off (callers keep the plain scan)."""
-    if not row_tracking_enabled(snap.configuration):
-        return None
-    mat = _materialized_row_id_cols(snap.configuration)
-    if not mat:
-        return None
+    Without row tracking or DVs this is the bare file scan."""
     from pyspark.sql import functions as F
 
-    mapped = snap.column_mapping_mode not in ("", "none")
-    scan_schema = (
-        _physical_type(
-            snap.schema, field_ids=snap.column_mapping_mode == "id"
-        )
-        if mapped
-        else snap.schema
+    mat = (
+        _materialized_row_id_cols(snap.configuration)
+        if row_tracking_enabled(snap.configuration)
+        else None
     )
-    scan_schema = T.StructType(
-        list(scan_schema.fields)
-        + [
-            T.StructField(mat[0], T.LongType()),
-            T.StructField(mat[1], T.LongType()),
-        ]
+    scan = _file_scan(
+        spark,
+        snap,
+        path,
+        snap.files(path, rels),
+        [T.StructField(c, T.LongType()) for c in mat or ()],
     )
-    reader = spark.read.schema(scan_schema)
-    if snap.partition_columns:
-        reader = reader.option("basePath", path)
-    scan = reader.parquet(
-        *[os.path.join(path, unquote(r)) for r in rels]
-    ).withColumns(
-        {
-            "__llh_fn": F.col("_metadata.file_name"),
-            "__llh_ri": F.col("_metadata.row_index"),
-        }
-    )
+    if not mat and not dv_adds:
+        return scan
+    scan = _drop_deleted(scan, dv_adds, path)
+    keep = [f.name for f in snap.scan_schema.fields]
+    if not mat:
+        return scan.select(*keep)
     scan = scan.join(F.broadcast(_base_row_id_map(spark, snap)), "__llh_fn")
-    return scan.withColumns(
-        {
-            mat[0]: F.coalesce(
-                F.col(mat[0]), F.col("__base_rid") + F.col("__llh_ri")
-            ).cast("bigint"),
-            mat[1]: F.coalesce(F.col(mat[1]), F.col("__base_rcv")).cast(
-                "bigint"
-            ),
-        }
-    ).drop("__base_rid", "__base_rcv")
+    return scan.select(
+        *keep,
+        F.coalesce(F.col(mat[0]), F.col("__base_rid") + F.col("__llh_ri"))
+        .cast("bigint")
+        .alias(mat[0]),
+        F.coalesce(F.col(mat[1]), F.col("__base_rcv"))
+        .cast("bigint")
+        .alias(mat[1]),
+    )
 
 
 def read_delta_with_row_ids(
@@ -3227,21 +3183,6 @@ def read_delta_with_row_ids(
             "delta.enableRowTracking=true"
         )
     mat = _materialized_row_id_cols(snap.configuration)
-    mapped = snap.column_mapping_mode not in ("", "none")
-    scan_schema = (
-        _physical_type(
-            snap.schema, field_ids=snap.column_mapping_mode == "id"
-        )
-        if mapped
-        else snap.schema
-    )
-    extra: list = []
-    if mat:
-        extra = [
-            T.StructField(mat[0], T.LongType()),
-            T.StructField(mat[1], T.LongType()),
-        ]
-    scan_schema = T.StructType(list(scan_schema.fields) + extra)
     out_schema = T.StructType(
         list(snap.schema.fields)
         + [
@@ -3251,46 +3192,22 @@ def read_delta_with_row_ids(
     )
     if not snap.adds:
         return spark.createDataFrame([], out_schema)
-    reader = spark.read.schema(scan_schema)
-    if snap.partition_columns:
-        reader = reader.option("basePath", path)
-    raw = reader.parquet(*snap.files(path))
-    scan = raw.withColumns(
-        {
-            "__llh_fn": F.col("_metadata.file_name"),
-            "__llh_ri": F.col("_metadata.row_index"),
-        }
+    raw = _file_scan(
+        spark,
+        snap,
+        path,
+        snap.files(path, snap.adds),
+        [T.StructField(c, T.LongType()) for c in mat or ()],
     )
-    dv_adds = snap.dv_adds
-    if dv_adds:
-        total_card = sum(
-            int(a["deletionVector"].get("cardinality") or 0)
-            for a in dv_adds.values()
-        )
-        deleted = _deleted_positions_df(spark, dv_adds, path, total_card)
-        if total_card <= _DV_BROADCAST_MAX_ROWS:
-            deleted = F.broadcast(deleted)
-        scan = scan.join(
-            deleted,
-            (scan["__llh_fn"] == deleted["file_name"])
-            & (scan["__llh_ri"] == deleted["row_index"]),
-            "left_anti",
-        )
+    scan = _drop_deleted(raw, snap.dv_adds, path)
     scan = scan.join(F.broadcast(_base_row_id_map(spark, snap)), "__llh_fn")
     fresh_id = F.col("__base_rid") + F.col("__llh_ri")
     fresh_cv = F.col("__base_rcv")
     rid = F.coalesce(F.col(mat[0]), fresh_id) if mat else fresh_id
     rcv = F.coalesce(F.col(mat[1]), fresh_cv) if mat else fresh_cv
-    if mapped:
-        phys = _physical_names(snap.schema)
-        cols = [
-            F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-            for f in snap.schema.fields
-        ]
-    else:
-        cols = [F.col(f.name) for f in snap.schema.fields]
-    return scan.select(
-        *cols,
+    return _to_logical(
+        scan,
+        snap.schema,
         rid.cast("bigint").alias("_row_id"),
         rcv.cast("bigint").alias("_row_commit_version"),
     )
@@ -3338,7 +3255,7 @@ def apply_row_changes(
             cdc_frames.append(
                 new_rows.withColumn(CDF_TYPE_COL, F.lit("insert"))
             )
-        if snap.column_mapping_mode not in ("", "none"):
+        if snap.physical_names:
             new_rows = _to_physical(new_rows, snap.schema)
         tmp = path + f".__delta_tmp_{uuid.uuid4().hex}"
         writer = new_rows.write.mode("overwrite")
@@ -3352,19 +3269,11 @@ def apply_row_changes(
         # semi-join the positions being marked deleted. MERGE changes
         # are recorded as delete+insert pairs (the rewrite's own
         # representation); update_where records update_pre/postimage.
-        rels = sorted({base_to_rel[row.file_name] for row in built})
-        raw = _scan_reader(spark, snap, path).parquet(
-            *[os.path.join(path, unquote(r)) for r in rels]
+        rels = {base_to_rel[row.file_name] for row in built}
+        scan = _file_scan(spark, snap, path, snap.files(path, rels))
+        view = _to_logical(
+            _drop_deleted(scan, {}, path), snap.schema, "__llh_fn", "__llh_ri"
         )
-        if snap.column_mapping_mode not in ("", "none"):
-            view = _logical_positions_scan(raw, snap)
-        else:
-            view = raw.withColumns(
-                {
-                    "__llh_fn": F.col("_metadata.file_name"),
-                    "__llh_ri": F.col("_metadata.row_index"),
-                }
-            )
         d = dead_positions.select(
             F.col("file_name").alias("__llh_fn"),
             F.col("row_index").alias("__llh_ri"),
@@ -3372,7 +3281,6 @@ def apply_row_changes(
         dead_vals = (
             view.join(d, ["__llh_fn", "__llh_ri"], "left_semi")
             .drop("__llh_fn", "__llh_ri")
-            .select(*[f.name for f in snap.schema.fields])
             .withColumn(CDF_TYPE_COL, F.lit("delete"))
         )
         cdc_frames.append(dead_vals)
@@ -3471,20 +3379,8 @@ def _write_cdc_files(
     actions reach the driver."""
     import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
-    if snap.column_mapping_mode not in ("", "none"):
-        phys = _physical_names(snap.schema)
-        changes = changes.select(
-            *[
-                F.col(f.name)
-                .cast(_physical_type(f.dataType))
-                .alias(phys[f.name])
-                for f in snap.schema.fields
-                if f.name in changes.columns
-            ],
-            F.col(CDF_TYPE_COL),
-        )
+    if snap.physical_names:
+        changes = _to_physical(changes, snap.schema, CDF_TYPE_COL)
     tmp = path + f".__delta_cdc_{uuid.uuid4().hex}"
     changes.write.mode("overwrite").parquet(tmp)
     os.makedirs(os.path.join(path, _CDC_DIR), exist_ok=True)
@@ -3592,14 +3488,6 @@ def read_change_feed(
             "delta.enableChangeDataFeed=true; change feed reads "
             "require the CDF table property"
         )
-    mapped = snap.column_mapping_mode not in ("", "none")
-    phys_schema = (
-        _physical_type(
-            snap.schema, field_ids=snap.column_mapping_mode == "id"
-        )
-        if mapped
-        else snap.schema
-    )
     cdc_group: list[tuple[str, int, int]] = []
     ins_group: list[tuple[str, int, int]] = []
     del_group: list[tuple[str, int, int]] = []
@@ -3658,24 +3546,7 @@ def read_change_feed(
                         )
                     )
 
-    def _project(df: DataFrame) -> DataFrame:
-        meta_cols = [
-            F.col(CDF_TYPE_COL),
-            F.col("_commit_version"),
-            F.col("_commit_timestamp"),
-        ]
-        if mapped:
-            phys = _physical_names(snap.schema)
-            return df.select(
-                *[
-                    F.col(phys[f.name]).cast(f.dataType).alias(f.name)
-                    for f in snap.schema.fields
-                ],
-                *meta_cols,
-            )
-        return df.select(
-            *[f.name for f in snap.schema.fields], *meta_cols
-        )
+    meta_cols = (CDF_TYPE_COL, "_commit_version", "_commit_timestamp")
 
     def _attach(df: DataFrame, group: list) -> DataFrame:
         basenames = [os.path.basename(p) for p, _v, _t in group]
@@ -3708,52 +3579,35 @@ def read_change_feed(
 
     frames: list[DataFrame] = []
     if cdc_group:
+        # change data files are unpartitioned and carry _change_type:
+        # a direct read, not a data-file scan
         cdc_schema = T.StructType(
-            list(phys_schema.fields)
+            list(snap.scan_schema.fields)
             + [T.StructField(CDF_TYPE_COL, T.StringType())]
         )
         df = spark.read.schema(cdc_schema).parquet(
             *sorted({p for p, _v, _t in cdc_group})
         )
-        frames.append(_project(_attach(df, cdc_group)))
+        frames.append(
+            _to_logical(_attach(df, cdc_group), snap.schema, *meta_cols)
+        )
     for group, ctype in ((ins_group, "insert"), (del_group, "delete")):
         if not group:
             continue
-        reader = spark.read.schema(phys_schema)
-        if snap.partition_columns:
-            reader = reader.option("basePath", path)
-        df = _attach(
-            reader.parquet(*sorted({p for p, _v, _t in group})), group
-        ).withColumn(CDF_TYPE_COL, F.lit(ctype))
-        frames.append(_project(df))
+        scan = _file_scan(
+            spark, snap, path, sorted({p for p, _v, _t in group})
+        )
+        df = _attach(scan, group).withColumn(CDF_TYPE_COL, F.lit(ctype))
+        frames.append(_to_logical(df, snap.schema, *meta_cols))
     for prev_add, v, ts in dv_deletes:
         # a dataChange remove of a DV-bearing file deletes its LIVE
         # rows: anti-join the positions its previous DV had marked
-        reader = spark.read.schema(phys_schema)
-        if snap.partition_columns:
-            reader = reader.option("basePath", path)
-        scan = reader.parquet(
-            os.path.join(path, unquote(prev_add["path"]))
-        ).withColumns(
-            {
-                "__fn": F.col("_metadata.file_name"),
-                "__ri": F.col("_metadata.row_index"),
-            }
-        )
-        dv_pos = _deleted_positions_df(
-            spark,
-            {prev_add["path"]: prev_add},
-            path,
-            int(prev_add["deletionVector"].get("cardinality") or 0),
+        scan = _file_scan(
+            spark, snap, path, snap.files(path, [prev_add["path"]])
         )
         live = (
-            scan.join(
-                dv_pos,
-                (scan["__fn"] == dv_pos["file_name"])
-                & (scan["__ri"] == dv_pos["row_index"]),
-                "left_anti",
-            )
-            .drop("__fn", "__ri")
+            _drop_deleted(scan, {prev_add["path"]: prev_add}, path)
+            .drop("__llh_fn", "__llh_ri")
             .withColumns(
                 {
                     CDF_TYPE_COL: F.lit("delete"),
@@ -3764,7 +3618,7 @@ def read_change_feed(
                 }
             )
         )
-        frames.append(_project(live))
+        frames.append(_to_logical(live, snap.schema, *meta_cols))
     if not frames:
         out_schema = T.StructType(
             list(snap.schema.fields)
@@ -3825,6 +3679,27 @@ def appended_files_between(
     return out
 
 
+def appended_changes(
+    spark: SparkSession, path: str, start: int, end: Optional[int]
+) -> Optional[DataFrame]:
+    """Change rows of an append-only range ``(start, end]`` (``end``
+    None: the latest version): the files appended_files_between
+    returns, scanned as inserts (the table's logical columns +
+    ``_change_type``). None when the range changed existing rows (the
+    caller diffs snapshots instead)."""
+    from pyspark.sql import functions as F
+
+    appended = appended_files_between(path, start, end)
+    if appended is None:
+        return None
+    snap = DeltaLog(path).snapshot(end, allow=BATCH_READ_FEATURES)
+    change_type = F.lit("insert").alias(CDF_TYPE_COL)
+    if not appended:
+        return spark.createDataFrame([], snap.schema).select("*", change_type)
+    scan = _file_scan(spark, snap, path, snap.files(path, appended))
+    return _to_logical(scan, snap.schema, change_type)
+
+
 def purge(spark: SparkSession, path: str) -> Snapshot:
     """``REORG TABLE ... APPLY (PURGE)`` parity — the final step of
     the deletion-vector lifecycle: physically rewrite ONLY the data
@@ -3845,62 +3720,17 @@ def purge(spark: SparkSession, path: str) -> Snapshot:
     scanned with the same anti-join read path as read_delta, and
     Spark writes the survivors; only file-rename metadata crosses the
     driver."""
-    from pyspark.sql import functions as F
-
     log = DeltaLog(path)
     snap = log.snapshot(allow=BATCH_READ_FEATURES)
     _check_writer_support(snap, path)
     dv_adds = snap.dv_adds
     if not dv_adds:
         return snap
-    total_card = sum(
-        int(a["deletionVector"].get("cardinality") or 0)
-        for a in dv_adds.values()
-    )
-    deleted = _deleted_positions_df(spark, dv_adds, path, total_card)
-    if total_card <= _DV_BROADCAST_MAX_ROWS:
-        deleted = F.broadcast(deleted)
-    rt_scan = _row_tracked_rewrite_scan(
-        spark, snap, path, sorted(dv_adds)
-    )
-    if rt_scan is not None:
-        dv_scan = rt_scan.withColumnsRenamed(
-            {"__llh_fn": "__dv_fn", "__llh_ri": "__dv_ri"}
-        )
-    else:
-        reader = _scan_reader(spark, snap, path)
-        dv_scan = reader.parquet(
-            *[os.path.join(path, unquote(p)) for p in sorted(dv_adds)]
-        ).withColumns(
-            {
-                "__dv_fn": F.col("_metadata.file_name"),
-                "__dv_ri": F.col("_metadata.row_index"),
-            }
-        )
-    keep_cols = [
-        f.name
-        for f in (
-            _physical_type(snap.schema)
-            if snap.column_mapping_mode not in ("", "none")
-            else snap.schema
-        ).fields
-    ]
-    if rt_scan is not None:
-        # rewrites under row tracking persist the materialized ids
-        keep_cols += list(_materialized_row_id_cols(snap.configuration))
-    survivors = (
-        dv_scan.join(
-            deleted,
-            (dv_scan["__dv_fn"] == deleted["file_name"])
-            & (dv_scan["__dv_ri"] == deleted["row_index"]),
-            "left_anti",
-        )
-        .drop("__dv_fn", "__dv_ri")
-        # a mapped table rewrites physical -> physical: no renaming,
-        # just restore the declared column order
-        .select(*keep_cols)
-        .coalesce(max(1, len(dv_adds)))
-    )
+    # a mapped table rewrites physical -> physical: no renaming;
+    # row-tracked rewrites persist the materialized ids
+    survivors = _rewrite_scan(
+        spark, snap, path, sorted(dv_adds), dv_adds
+    ).coalesce(max(1, len(dv_adds)))
     tmp = path + f".__delta_tmp_{uuid.uuid4().hex}"
     writer = survivors.write.mode("overwrite")
     if snap.partition_columns:
@@ -4015,14 +3845,8 @@ def compact(
     if not groups:
         return {"numFilesRemoved": 0, "numFilesAdded": 0}
     victims = sorted(r for rels in groups.values() for r in rels)
-    rt_scan = _row_tracked_rewrite_scan(spark, snap, path, victims)
-    if rt_scan is not None:
-        # bin-packing preserves row ids via the materialized columns
-        scan = rt_scan.drop("__llh_fn", "__llh_ri")
-    else:
-        scan = _scan_reader(spark, snap, path).parquet(
-            *[os.path.join(path, unquote(r)) for r in victims]
-        )
+    # bin-packing preserves row ids via the materialized columns
+    scan = _rewrite_scan(spark, snap, path, victims, {})
     total = sum(
         int(snap.adds[r].get("size") or 0) for r in victims
     )
@@ -4455,7 +4279,7 @@ def evolve_delta_schema(
     if not add:
         return False
     configuration = snap.configuration
-    if snap.column_mapping_mode not in ("", "none"):
+    if snap.physical_names:
         add, configuration = _assign_mapping_ids(add, configuration)
     schema = T.StructType(list(snap.schema.fields) + add)
     meta_id = snap.metadata.get("id", str(uuid.uuid4()))

@@ -36,11 +36,13 @@ dispatch instead of only the client read_table path:
 
 The reference reads/writes Delta through delta-rs behind a format
 enum (/root/reference/uchelper/dataframe.py:197-204, 305-354); this
-module is the Spark-native equivalent of that dispatch. io.py's
-JVM-side path (explicit file list + basePath) remains the default
-for client.read_table — it keeps the whole scan in the JVM parquet
-reader; this source is the format-string API and the ONLY streaming
-read path for Delta tables in this sandbox.
+module is the Spark-native equivalent of that dispatch.
+client.read_table reads through delta_py.read_delta, which keeps the
+whole scan in the JVM parquet reader; this source is the
+format-string API and the ONLY streaming read path for Delta tables
+in this sandbox. Both plan from the same ``Snapshot``: its file list,
+pruning (pruned_adds), deletion vectors and column mapping
+(``physical_names`` / ``field_ids``); only the executor differs.
 
 Scale notes: the per-file Python read adds Arrow (de)serialization
 versus the JVM scan, so the 100 TB posture is: native path for bulk
@@ -87,9 +89,7 @@ from .delta_py import (
     _HIVE_NULL,
     _add_action,
     _check_writer_support,
-    _mapping_field_ids,
     _meta_action,
-    _physical_names,
     _physical_type,
     commit_actions,
     pruned_adds,
@@ -354,18 +354,10 @@ class _PyDeltaReader(DataSourceReader):
         )
         self._schema = self._snap.schema
         self._adds = dict(self._snap.adds)
-        self._phys = (
-            _physical_names(self._schema)
-            if self._snap.column_mapping_mode not in ("", "none")
-            else None
-        )
+        self._phys = self._snap.physical_names
         # id mode binds per file by footer field id (physical-name
         # fallback) — the protocol's id-mode read contract
-        self._fids = (
-            _mapping_field_ids(self._schema)
-            if self._snap.column_mapping_mode == "id"
-            else None
-        )
+        self._fids = self._snap.field_ids
 
     def pushFilters(self, filters: List[Filter]) -> Iterable[Filter]:
         self._adds = pruned_adds(
@@ -590,8 +582,8 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         self._path = _required_path(options)
         self._schema = schema
         self._log = DeltaLog(self._path)
-        self._phys = None
-        self._fids = None
+        self._phys: dict = {}
+        self._fids: dict = {}
         # delta-spark parity: .option("readChangeFeed", "true") turns
         # the stream into a CHANGE feed — each microbatch carries the
         # table's columns + _change_type/_commit_version/
@@ -606,10 +598,8 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
             # DV-bearing snapshots are fine because DV commits are
             # judged per-commit in _adds_between.
             snap = self._log.snapshot(allow=BATCH_READ_FEATURES)
-            if snap.column_mapping_mode not in ("", "none"):
-                self._phys = _physical_names(snap.schema)
-                if snap.column_mapping_mode == "id":
-                    self._fids = _mapping_field_ids(snap.schema)
+            self._phys = snap.physical_names
+            self._fids = snap.field_ids
             if self._cdf and not cdf_enabled(snap.configuration):
                 raise ValueError(
                     "readChangeFeed requires "

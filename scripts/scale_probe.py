@@ -134,7 +134,8 @@ def main() -> int:
             q: round(t8[q] / t32[q], 2) for q in QUERIES if t32.get(q)
         },
     }
-    os.makedirs(os.path.dirname(args.out), exist_ok=True)
+    if os.path.dirname(args.out):
+        os.makedirs(os.path.dirname(args.out), exist_ok=True)
     with open(args.out, "w") as fh:
         json.dump(result, fh, indent=2)
     print(json.dumps(result["speedup_8_to_32"], indent=2))

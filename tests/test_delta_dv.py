@@ -1437,3 +1437,102 @@ def test_id_mode_arrow_fallback_to_physical_name(spark, tbl):
     df = spark.read.format("pydelta").load(tbl)
     rows = {r.id: r.name for r in df.collect()}
     assert rows == {1: "ann", 2: "bob", 3: "cyd", 9: "zoe"}
+
+
+# ---------------------------------------------------------------------------
+# One planner, two executors: the JVM scan (read_delta and its
+# position-bearing twin) and the Arrow per-file reader (pydelta) must
+# return the same table, and the DV join must see only DV files.
+# ---------------------------------------------------------------------------
+
+
+def _two_write_table(spark, tbl, partitioned, mapped, dv):
+    """12 rows in two appends (one file per partition per append);
+    ``dv`` deletes one row through a deletion vector."""
+    for i in range(2):
+        df = spark.createDataFrame(
+            [(i * 10 + j, f"k{j % 2}", f"s{j}") for j in range(6)],
+            "id long, k string, s string",
+        ).coalesce(1)
+        delta_py.write_delta(
+            spark,
+            df,
+            tbl,
+            mode="append" if i else "overwrite",
+            partition_by=["k"] if partitioned else None,
+            column_mapping=mapped and i == 0,
+        )
+    if dv:
+        delta_py.delete_where(spark, tbl, "id = 1")
+
+
+@pytest.mark.parametrize(
+    "partitioned,dv,mapping",
+    [
+        pytest.param(
+            p, d, m,
+            id=f"{'part' if p else 'flat'}-{'dv' if d else 'nodv'}-{m}",
+        )
+        for p in (False, True)
+        for d in (False, True)
+        for m in ("none", "name")
+    ]
+    + [pytest.param(False, False, "id", id="flat-nodv-id")],
+)
+def test_read_entry_points_agree(spark, tbl, partitioned, dv, mapping):
+    from local_lakehouse_spark.sources import pydelta_source
+    from local_lakehouse_spark.sources.delta_py import read_delta_with_positions
+
+    if mapping == "id":
+        _make_id_mapped_table(tbl)
+        n = 3
+    else:
+        _two_write_table(spark, tbl, partitioned, mapping == "name", dv)
+        n = 11 if dv else 12
+    pydelta_source.register(spark)
+    jvm = read_delta(spark, tbl)
+    _snap, positioned = read_delta_with_positions(spark, tbl)
+    arrow = spark.read.format("pydelta").load(tbl)
+    with_pos = positioned.drop("__llh_fn", "__llh_ri")
+    assert jvm.columns == with_pos.columns == arrow.columns
+    rows = sorted(jvm.collect())
+    assert len(rows) == n
+    assert sorted(with_pos.collect()) == rows
+    assert sorted(arrow.collect()) == rows
+    pairs = positioned.select("__llh_fn", "__llh_ri").collect()
+    assert len(set(pairs)) == len(pairs) == n
+
+
+def _plan_nodes(plan, kind):
+    """Nodes of a JVM logical plan whose class is ``kind``, pre-order."""
+    out = [plan] if plan.getClass().getSimpleName() == kind else []
+    children = plan.children()
+    for i in range(children.size()):
+        out += _plan_nodes(children.apply(i), kind)
+    return out
+
+
+def test_read_delta_joins_only_dv_files(spark, tmp_path):
+    from urllib.parse import unquote
+
+    tbl = str(tmp_path / "dv")
+    _two_write_table(spark, tbl, partitioned=True, mapped=False, dv=True)
+    snap = DeltaLog(tbl).snapshot(allow=BATCH_READ_FEATURES)
+    dv_files = {os.path.basename(unquote(p)) for p in snap.dv_adds}
+    assert dv_files and len(dv_files) < len(snap.adds)
+    plan = read_delta(spark, tbl)._jdf.queryExecution().optimizedPlan()
+    joins = _plan_nodes(plan, "Join")
+    assert [j.joinType().toString() for j in joins] == ["LeftAnti"]
+    scanned = set()
+    for rel in _plan_nodes(joins[0].left(), "LogicalRelation"):
+        roots = rel.relation().location().rootPaths()
+        scanned |= {
+            os.path.basename(roots.apply(i).toString())
+            for i in range(roots.size())
+        }
+    assert scanned == dv_files
+
+    plain = str(tmp_path / "plain")
+    _two_write_table(spark, plain, partitioned=True, mapped=False, dv=False)
+    text = read_delta(spark, plain)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in text and "_metadata" not in text

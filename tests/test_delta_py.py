@@ -902,6 +902,56 @@ def test_log_constraints_enforced_on_every_write_path(spark, tbl):
     assert rows[0] == 5 and rows[10] == 100
 
 
+@pytest.mark.parametrize("column_mapping", [False, True])
+def test_constraint_sees_string_partition_value_as_written(
+    spark, tbl, column_mapping
+):
+    """The CHECK gate scans the just-written files with the table
+    schema: a string partition value ``'07'`` must reach the
+    constraint as ``'07'``, not as the integer 7 a schema-less read
+    infers from the directory name."""
+    from local_lakehouse_spark.exceptions import ConstraintViolationError
+    from local_lakehouse_spark.sources.delta_py import set_properties
+
+    schema = "id long, k string"
+    write_delta(
+        spark,
+        spark.createDataFrame([(1, "10")], schema),
+        tbl,
+        partition_by=["k"],
+        column_mapping=column_mapping,
+    )
+    set_properties(
+        tbl, {"delta.constraints.two_chars": "length(k) = 2"},
+        allow_constraint_keys=True,
+    )
+    write_delta(
+        spark, spark.createDataFrame([(2, "07")], schema), tbl, mode="append"
+    )
+    with pytest.raises(ConstraintViolationError, match="two_chars"):
+        write_delta(
+            spark, spark.createDataFrame([(3, "7")], schema), tbl, mode="append"
+        )
+    rows = sorted((r.id, r.k) for r in read_delta(spark, tbl).collect())
+    assert rows == [(1, "10"), (2, "07")]
+
+
+def test_constraint_sees_omitted_column_as_null(spark, tbl):
+    """An append that omits a constrained column: the gate sees the
+    column as NULL, as every reader will, and NULL passes a CHECK."""
+    from local_lakehouse_spark.sources.delta_py import set_properties
+
+    write_delta(spark, spark.createDataFrame([(1, 5)], "id long, v long"), tbl)
+    set_properties(
+        tbl, {"delta.constraints.pos": "v > 0"}, allow_constraint_keys=True
+    )
+    write_delta(
+        spark, spark.createDataFrame([(2,)], "id long"), tbl, mode="append"
+    )
+    rows = sorted(tuple(r) for r in read_delta(spark, tbl).collect())
+    assert rows == [(1, 5), (2, None)]
+
+
 def test_set_properties_refuses_raw_constraint_keys(spark, tbl):
     from local_lakehouse_spark.exceptions import UnsupportedOperationError
     from local_lakehouse_spark.sources.delta_py import set_properties
