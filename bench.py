@@ -367,6 +367,9 @@ def main() -> int:
         "extended_pass_accepted": ext_pass_accepted,
         "extended_passes": n_extended_passes,
         "sf": sf_num,
+        # the parallelism the figures were measured at
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     if failed:
         out["failed"] = failed  # value=None above marks the total invalid

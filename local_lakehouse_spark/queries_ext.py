@@ -5880,7 +5880,6 @@ def y15(spark, sf):
     Oracle: the same aggregate off raw lineitem — compaction must
     never change a single row."""
     import hashlib
-    import json as _json
     import os
     import tempfile
 
@@ -5915,11 +5914,7 @@ def y15(spark, sf):
     log = delta_py.DeltaLog(tbl)
     if log.history()[0]["operation"] != "OPTIMIZE":
         raise AssertionError("y15 head commit is not OPTIMIZE")
-    commit = os.path.join(
-        tbl, "_delta_log", f"{post.version:020d}.json"
-    )
-    for line in open(commit):
-        a = _json.loads(line)
+    for a in log.read_commit(post.version):
         for kind in ("add", "remove"):
             if kind in a and a[kind].get("dataChange") is not False:
                 raise AssertionError(
@@ -6679,8 +6674,6 @@ def y23(spark, sf):
     the hourly rollup of exactly the two appended subsets
     (event_id % 4 IN (1, 2))."""
     import hashlib
-    import json as _json
-    import os
 
     from .sources import delta_py, pydelta_source
 
@@ -6690,9 +6683,9 @@ def y23(spark, sf):
     snap = log.snapshot(allow=delta_py.BATCH_READ_FEATURES)
     if not snap.dv_adds:
         raise AssertionError("y23 staging lost its deletion vectors")
-    with open(os.path.join(log.log_dir, f"{3:020d}.json")) as fh:
-        v3 = [_json.loads(ln) for ln in fh if ln.strip()]
-    v3_removes = [a["remove"] for a in v3 if "remove" in a]
+    v3_removes = [
+        a["remove"] for a in log.read_commit(3) if "remove" in a
+    ]
     if not v3_removes or any(
         r.get("dataChange", True) for r in v3_removes
     ):
@@ -7150,19 +7143,13 @@ def y27(spark, sf):
     duplication); staging mutates exactly once (version gate).
     Oracle: the same delete/update/append expressed relationally
     over supplier."""
-    import json as json_mod
-    import os
-
     from .sources import delta_py
 
     tbl = _stage_cdf_table(spark, sf)
+    log = delta_py.DeltaLog(tbl)
 
     def commit_has_cdc(v: int) -> bool:
-        fname = os.path.join(tbl, "_delta_log", f"{v:020d}.json")
-        with open(fname) as f:
-            return any(
-                "cdc" in json_mod.loads(ln) for ln in f if ln.strip()
-            )
+        return any("cdc" in a for a in log.read_commit(v))
 
     if not (commit_has_cdc(2) and commit_has_cdc(3)):
         raise AssertionError("y27 DML commits recorded no change data")
@@ -7554,7 +7541,6 @@ def y32(spark, sf):
     same obligations (monotonicity, commitInfo-first, time-travel
     resolution through stamps)."""
     import hashlib
-    import json as _json
     import os
     import tempfile
 
@@ -7586,9 +7572,7 @@ def y32(spark, sf):
     log = delta_py.DeltaLog(tbl)
     stamps = {}
     for v in (1, 2, 3):
-        fname = os.path.join(tbl, "_delta_log", f"{v:020d}.json")
-        with open(fname) as fh:
-            first = _json.loads(next(ln for ln in fh if ln.strip()))
+        first = log.read_commit(v)[0]
         ict = (first.get("commitInfo") or {}).get("inCommitTimestamp")
         if not isinstance(ict, int):
             raise AssertionError(

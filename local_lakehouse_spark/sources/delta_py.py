@@ -45,8 +45,9 @@ implements the subset the reference exercises
   (dataChange=false OPTIMIZE bin-packing), ``set_properties``
   (TBLPROPERTIES) with ``delta.appendOnly`` and
   ``delta.constraints.*`` enforcement, TIMESTAMP AS OF resolution,
-  and an append-only CDC fast-path probe
-  (``appended_files_between``).
+  and one commit-range classifier (``commit_changes``: what each
+  commit of a version range changed) behind the change feed, the
+  ``table_changes`` append-only fast path and the streaming source.
 
 Remaining documented limits (loud refusals, not silent gaps):
 writes into column-mapped layouts, streaming replay of mapped
@@ -74,7 +75,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field, replace
-from typing import Optional
+from typing import Iterator, Optional
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -980,17 +981,14 @@ class DeltaLog:
     def history(self) -> list[dict]:
         """commitInfo row per version, newest first (DeltaTable.history)."""
         out = []
-        for v in self.versions():
-            fname = os.path.join(self.log_dir, f"{v:020d}.json")
-            info = {}
-            with open(fname) as f:
-                for line in f:
-                    action = json.loads(line) if line.strip() else {}
-                    if "commitInfo" in action:
-                        info = action["commitInfo"]
-                        break
-            out.append({"version": v, **info})
-        return sorted(out, key=lambda r: -r["version"])
+        for v in reversed(self.versions()):
+            infos = [
+                a["commitInfo"]
+                for a in self.read_commit(v)
+                if "commitInfo" in a
+            ]
+            out.append({"version": v, **(infos[0] if infos else {})})
+        return out
 
 
 # ---------------------------------------------------------------------------
@@ -3410,6 +3408,122 @@ def _write_cdc_files(
     return out
 
 
+def _surviving_versions(log: DeltaLog, first: int) -> list[int]:
+    """The log's commit versions. Refuses when ``first`` — the first
+    commit a change read replays — was expired: replay walks
+    surviving commit JSONs only, so starting below the earliest one
+    would return a silent partial answer (delta-spark refuses the
+    same way)."""
+    vs = log.versions()
+    if vs and first < vs[0]:
+        raise DoesNotExistError(
+            f"changes of {log.path} cannot start at version {first}: "
+            f"the earliest surviving commit is {vs[0]} (older commits "
+            "were expired by delta.logRetentionDuration metadata "
+            "cleanup)"
+        )
+    return vs
+
+
+def first_change_version(
+    log: DeltaLog,
+    version: Optional[int],
+    timestamp: Optional[object],
+    default: int,
+) -> int:
+    """The first commit a change read covers (delta-spark's
+    startingVersion / startingTimestamp, exclusive with each other):
+    ``version``, else the EARLIEST commit at-or-after ``timestamp`` on
+    the canonicalized-monotone commit times TIMESTAMP AS OF uses, else
+    ``default``. Refuses a commit that was expired."""
+    if timestamp is not None:
+        if version is not None:
+            raise ValueError(
+                "pass startingVersion or startingTimestamp, not both"
+            )
+        version = log.version_from_timestamp(_ts_ms(timestamp))
+    elif version is None:
+        version = default
+    _surviving_versions(log, version)
+    return version
+
+
+@dataclass
+class CommitChange:
+    """What one commit did to the table's rows, as its log actions
+    record it (Delta Lake, VLDB 2020: the log and its ``dataChange``
+    flag are the one record of each commit): its change data files
+    (``cdc``) and its ``dataChange`` adds and removes.
+    ``dataChange=false`` actions (OPTIMIZE / REORG PURGE repacks, the
+    row-tracking backfill) move the same rows and are left out."""
+
+    log: DeltaLog
+    version: int
+    cdc: list[dict]
+    adds: list[dict]
+    removes: list[dict]
+
+    @property
+    def _dv_added(self) -> bool:
+        return any(a.get("deletionVector") for a in self.adds)
+
+    @property
+    def changes_rows(self) -> bool:
+        """The append-only rule: a commit changes existing rows when it
+        removes a file or adds one carrying a deletion vector (rows of
+        a live file deleted). Otherwise its adds ARE its changes."""
+        return bool(self.removes) or self._dv_added
+
+    def derived(self) -> tuple[list[dict], list[tuple[dict, dict]]]:
+        """Inserted adds and deleted ``(remove, prior add)`` pairs of a
+        commit that wrote no change data files. The prior add (the
+        file's add at the previous version, replayed only here)
+        carries the deletion vector a derived delete anti-joins, so
+        rows deleted earlier never re-surface. A deletion vector on an
+        add hides its change, so that commit refuses loudly
+        (delta-spark's "change data was not recorded" contract)."""
+        if self._dv_added:
+            raise UnsupportedOperationError(
+                f"version {self.version} of {self.log.path} changed "
+                "rows via deletion vectors but recorded no change data "
+                "— delta.enableChangeDataFeed was not active for that "
+                "commit, so its changes cannot be replayed"
+            )
+        prior = (
+            self.log.snapshot(
+                self.version - 1, allow=BATCH_READ_FEATURES
+            ).adds
+            if self.removes and self.version > 0
+            else {}
+        )
+        return self.adds, [
+            (r, prior.get(r["path"]) or {}) for r in self.removes
+        ]
+
+
+def commit_changes(
+    log: DeltaLog, start: int, end: Optional[int]
+) -> Iterator[CommitChange]:
+    """The commits in ``(start, end]`` (``end`` None: the latest) that
+    carry data changes (cdc files, ``dataChange`` adds or removes), in
+    version order, each read once through ``DeltaLog.read_commit``;
+    refuses when a commit the range needs was expired. The one
+    reading of a version range: the change feed (batch and stream),
+    the ``table_changes`` append-only fast path and the append-only
+    stream all classify commits here."""
+    for v in _surviving_versions(log, start + 1):
+        if v <= start or (end is not None and v > end):
+            continue
+        acts = log.read_commit(v)
+        adds, removes = (
+            [a[k] for a in acts if k in a and a[k].get("dataChange", True)]
+            for k in ("add", "remove")
+        )
+        cdc = [a["cdc"] for a in acts if "cdc" in a]
+        if cdc or adds or removes:
+            yield CommitChange(log, v, cdc, adds, removes)
+
+
 def read_change_feed(
     spark: SparkSession,
     path: str,
@@ -3422,16 +3536,16 @@ def read_change_feed(
     delta-spark's startingVersion/endingVersion): the table's columns
     plus ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``.
 
-    Per commit: ``cdc`` actions, when present, are authoritative; a
-    commit WITHOUT them derives inserts from dataChange adds and
-    deletes from dataChange removes — the removed file is read back
-    (it exists until VACUUM), with the deletion vector it carried in
-    the PREVIOUS version anti-joined out, so rows deleted earlier
-    never re-surface as deletes. dataChange=false rearrangements
-    (OPTIMIZE / REORG PURGE) contribute nothing. A commit that
-    changed rows via DVs but wrote no change data (CDF was off at
-    commit time) refuses loudly — delta-spark's "change data was not
-    recorded" contract.
+    Per commit (``commit_changes``): ``cdc`` actions, when present,
+    are authoritative; a commit WITHOUT them derives inserts from
+    dataChange adds and deletes from dataChange removes — the removed
+    file is read back (it exists until VACUUM), with the deletion
+    vector it carried in the PREVIOUS version anti-joined out, so
+    rows deleted earlier never re-surface as deletes. dataChange=false
+    rearrangements (OPTIMIZE / REORG PURGE) contribute nothing. A
+    commit that changed rows via DVs but wrote no change data (CDF
+    was off at commit time) refuses loudly
+    (``CommitChange.derived``).
 
     Scale: O(changed files), never a snapshot diff. Three POOLED
     readers (cdc / derived-insert / derived-delete), each one
@@ -3444,22 +3558,11 @@ def read_change_feed(
     from pyspark.sql import functions as F
 
     log = DeltaLog(path)
-    vs = log.versions()
-    # Timestamp bounds (delta-spark's startingTimestamp /
-    # endingTimestamp, exclusive with the version bounds): the start
-    # resolves to the EARLIEST commit at-or-after, the end to the
-    # LATEST commit at-or-before — both on the canonicalized-monotone
-    # commit times TIMESTAMP AS OF uses.
-    if starting_timestamp is not None:
-        if starting_version not in (None, 0):
-            raise ValueError(
-                "pass startingVersion or startingTimestamp, not both"
-            )
-        starting_version = log.version_from_timestamp(
-            _ts_ms(starting_timestamp)
-        )
-    elif starting_version is None:
-        starting_version = 0
+    # 0 is the default, so an explicit startingTimestamp overrides it
+    start = first_change_version(
+        log, starting_version or None, starting_timestamp, default=0
+    )
+    # endingTimestamp resolves to the LATEST commit at-or-before
     if ending_timestamp is not None:
         if ending_version is not None:
             raise ValueError(
@@ -3467,19 +3570,6 @@ def read_change_feed(
             )
         ending_version = log.version_at_timestamp(
             _ts_ms(ending_timestamp)
-        )
-    if ending_version is None:
-        ending_version = vs[-1] if vs else -1
-    # Only surviving commit JSONs can be replayed; after
-    # cleanup_metadata expired part of the requested range a silent
-    # partial feed would be WRONG data — refuse like delta-spark does
-    # when startingVersion predates the earliest available commit.
-    if vs and starting_version < vs[0]:
-        raise DoesNotExistError(
-            f"change feed of {path} cannot start at version "
-            f"{starting_version}: the earliest surviving commit is "
-            f"{vs[0]} (older commits were expired by "
-            "delta.logRetentionDuration metadata cleanup)"
         )
     snap = log.snapshot(ending_version, allow=BATCH_READ_FEATURES)
     if not cdf_enabled(snap.configuration):
@@ -3492,59 +3582,26 @@ def read_change_feed(
     ins_group: list[tuple[str, int, int]] = []
     del_group: list[tuple[str, int, int]] = []
     dv_deletes: list[tuple[dict, int, int]] = []
-    for v in vs:
-        if v < starting_version or v > ending_version:
-            continue
-        fname = os.path.join(log.log_dir, f"{v:020d}.json")
-        with open(fname) as f:
-            acts = [json.loads(ln) for ln in f if ln.strip()]
+    for ch in commit_changes(log, start - 1, snap.version):
+        v = ch.version
         ts = log.commit_timestamp(v)
-        cdc = [a["cdc"] for a in acts if "cdc" in a]
-        if cdc:
-            for c in cdc:
-                cdc_group.append(
-                    (os.path.join(path, unquote(c["path"])), v, ts)
-                )
+        if ch.cdc:
+            cdc_group += [
+                (os.path.join(path, unquote(c["path"])), v, ts)
+                for c in ch.cdc
+            ]
             continue
-        adds = [a["add"] for a in acts if "add" in a]
-        removes = [a["remove"] for a in acts if "remove" in a]
-        if any(
-            a.get("deletionVector") and a.get("dataChange", True)
-            for a in adds
-        ):
-            raise UnsupportedOperationError(
-                f"version {v} of {path} changed rows via deletion "
-                "vectors but recorded no change data — "
-                "delta.enableChangeDataFeed was not active for that "
-                "commit, so its changes cannot be replayed"
-            )
-        for a in adds:
-            if a.get("dataChange", True):
-                ins_group.append(
-                    (os.path.join(path, unquote(a["path"])), v, ts)
+        adds, deletes = ch.derived()
+        ins_group += [
+            (os.path.join(path, unquote(a["path"])), v, ts) for a in adds
+        ]
+        for r, prior in deletes:
+            if prior.get("deletionVector"):
+                dv_deletes.append((dict(prior), v, ts))
+            else:
+                del_group.append(
+                    (os.path.join(path, unquote(r["path"])), v, ts)
                 )
-        if any(r.get("dataChange", True) for r in removes):
-            prev = (
-                log.snapshot(v - 1, allow=BATCH_READ_FEATURES)
-                if v > 0
-                else None
-            )
-            for r in removes:
-                if not r.get("dataChange", True):
-                    continue
-                prev_add = (prev.adds if prev else {}).get(
-                    r["path"]
-                ) or {}
-                if prev_add.get("deletionVector"):
-                    dv_deletes.append((dict(prev_add), v, ts))
-                else:
-                    del_group.append(
-                        (
-                            os.path.join(path, unquote(r["path"])),
-                            v,
-                            ts,
-                        )
-                    )
 
     meta_cols = (CDF_TYPE_COL, "_commit_version", "_commit_timestamp")
 
@@ -3635,64 +3692,25 @@ def read_change_feed(
     return out
 
 
-def appended_files_between(
-    path: str, start: int, end: Optional[int] = None
-) -> Optional[list[str]]:
-    """CDC fast-path probe: if EVERY commit in ``(start, end]`` only
-    appends data — add actions with ``dataChange=true`` and no
-    deletion vector; ``dataChange=false`` rearrangements
-    (OPTIMIZE/REORG) and metadata-only commits are fine — return the
-    appended relative paths. Any data-changing remove or DV commit
-    returns None (caller falls back to the snapshot diff).
-
-    This is the Delta CDF answer for append-only ranges: the changes
-    ARE the added files, read directly as inserts — O(new data),
-    never two full snapshot reads diffed. At 100 TB the difference
-    between \"scan yesterday's partition\" and \"scan the table
-    twice\"."""
-    log = DeltaLog(path)
-    vs = log.versions()
-    if end is None:
-        end = vs[-1] if vs else -1
-    out: list[str] = []
-    for v in vs:
-        if v <= start or v > end:
-            continue
-        fname = os.path.join(log.log_dir, f"{v:020d}.json")
-        with open(fname) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                a = json.loads(line)
-                r = a.get("remove")
-                if r is not None and r.get("dataChange", True):
-                    return None
-                add = a.get("add")
-                if add is None:
-                    continue
-                if add.get("deletionVector"):
-                    return None
-                if add.get("dataChange") is False:
-                    continue  # compaction/purge re-pack: same rows
-                out.append(add["path"])
-    return out
-
-
 def appended_changes(
     spark: SparkSession, path: str, start: int, end: Optional[int]
 ) -> Optional[DataFrame]:
     """Change rows of an append-only range ``(start, end]`` (``end``
-    None: the latest version): the files appended_files_between
-    returns, scanned as inserts (the table's logical columns +
-    ``_change_type``). None when the range changed existing rows (the
-    caller diffs snapshots instead)."""
+    None: the latest version): the files its commits added, scanned
+    as inserts (the table's logical columns + ``_change_type``) —
+    O(new data), Delta CDF's own answer for append commits, never two
+    snapshots diffed. None when a commit of the range changed
+    existing rows (``CommitChange.changes_rows``; the caller diffs
+    snapshots instead); DoesNotExistError when one was expired."""
     from pyspark.sql import functions as F
 
-    appended = appended_files_between(path, start, end)
-    if appended is None:
-        return None
-    snap = DeltaLog(path).snapshot(end, allow=BATCH_READ_FEATURES)
+    log = DeltaLog(path)
+    appended: list[str] = []
+    for ch in commit_changes(log, start, end):
+        if ch.changes_rows:
+            return None
+        appended += [a["path"] for a in ch.adds]
+    snap = log.snapshot(end, allow=BATCH_READ_FEATURES)
     change_type = F.lit("insert").alias(CDF_TYPE_COL)
     if not appended:
         return spark.createDataFrame([], snap.schema).select("*", change_type)

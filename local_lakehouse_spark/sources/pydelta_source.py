@@ -56,7 +56,8 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from typing import TYPE_CHECKING, Iterable, List, Sequence
+from typing import TYPE_CHECKING, Iterable, List, Optional, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import types as T
 
@@ -84,6 +85,7 @@ from .delta_py import (
     FEATURE_DELETION_VECTORS,
     PROTOCOL,
     WHOLE_TABLE,
+    CommitChange,
     ConcurrentModificationError,
     DeltaLog,
     _HIVE_NULL,
@@ -91,7 +93,10 @@ from .delta_py import (
     _check_writer_support,
     _meta_action,
     _physical_type,
+    cdf_enabled,
     commit_actions,
+    commit_changes,
+    first_change_version,
     pruned_adds,
     row_tracking_enabled,
 )
@@ -373,8 +378,6 @@ class _PyDeltaReader(DataSourceReader):
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        from urllib.parse import unquote
-
         if not self._adds:
             # zero files (empty table or everything pruned): the API
             # requires ≥1 partition, so emit one that yields nothing
@@ -574,11 +577,10 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
     the same physical->logical translation as batch reads (round
     7); DV-bearing snapshots stream whenever the replayed RANGE is
     append-only (the mutations live in history the stream never
-    reads)."""
+    reads). Commits are classified by ``delta_py.commit_changes``,
+    the reader every change read of a version range shares."""
 
     def __init__(self, options: dict, schema: T.StructType):
-        from .delta_py import cdf_enabled
-
         self._path = _required_path(options)
         self._schema = schema
         self._log = DeltaLog(self._path)
@@ -592,11 +594,12 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         self._cdf = (
             str(options.get("readchangefeed", "false")).lower() == "true"
         )
-        if self._log.versions():
+        vs = self._log.versions()
+        if vs:
             # Capability gate: unknown reader features refuse loudly
             # here. Column mapping is translated per batch (below);
             # DV-bearing snapshots are fine because DV commits are
-            # judged per-commit in _adds_between.
+            # judged per commit (CommitChange.changes_rows).
             snap = self._log.snapshot(allow=BATCH_READ_FEATURES)
             self._phys = snap.physical_names
             self._fids = snap.field_ids
@@ -611,38 +614,18 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         self._skip_change = (
             str(options.get("skipchangecommits", "false")).lower() == "true"
         )
+        # replay from just before the first commit to stream; by
+        # default that is the one after the latest at query start
         sv = options.get("startingversion")
-        st = options.get("startingtimestamp")
-        if sv is not None and st is not None:
-            raise ValueError(
-                "pass startingVersion or startingTimestamp, not both"
+        self._initial = (
+            first_change_version(
+                self._log,
+                int(sv) if sv is not None else None,
+                options.get("startingtimestamp"),
+                default=vs[-1] + 1 if vs else 0,
             )
-        if sv is not None:
-            # replay from just before startingVersion
-            self._initial = int(sv) - 1
-            vs = self._log.versions()
-            # replay walks surviving commit JSONs only — a start
-            # below the earliest one would SILENTLY skip the expired
-            # range (same contract as batch read_change_feed: refuse
-            # like delta-spark instead of returning partial data)
-            if vs and int(sv) < vs[0]:
-                raise ValueError(
-                    f"startingVersion {sv} predates the earliest "
-                    f"surviving commit {vs[0]} of {self._path} "
-                    "(older commits were expired by "
-                    "delta.logRetentionDuration metadata cleanup)"
-                )
-        elif st is not None:
-            from .delta_py import _ts_ms
-
-            # earliest commit at-or-after the timestamp (delta-spark's
-            # streaming startingTimestamp)
-            self._initial = (
-                self._log.version_from_timestamp(_ts_ms(st)) - 1
-            )
-        else:
-            vs = self._log.versions()
-            self._initial = vs[-1] if vs else -1
+            - 1
+        )
 
     def initialOffset(self) -> dict:
         return {"version": self._initial}
@@ -651,158 +634,75 @@ class _PyDeltaStreamReader(DataSourceStreamReader):
         vs = self._log.versions()
         return {"version": vs[-1] if vs else -1}
 
-    def _adds_between(self, start: int, end: int):
-        from urllib.parse import unquote
+    def _part(self, path: str, values: Optional[dict], **consts) -> dict:
+        """One input partition: a data file and the constant columns
+        (partition values, CDF metadata) its rows carry."""
+        return {
+            "file": os.path.join(self._path, unquote(path)),
+            "parts": {**(values or {}), **consts},
+        }
 
-        out = []
-        for v in self._log.versions():
-            if v <= start or v > end:
-                continue
-            actions = self._log.read_commit(v)
-            # A commit that CHANGES existing data — removes with
-            # dataChange=true, or a deletion vector attached to an
-            # already-live file — cannot be replayed incrementally
-            # (re-emitting the add would duplicate/resurrect rows).
-            # delta-spark's contract: fail the stream, unless
-            # skipChangeCommits skips the whole commit. Removes with
-            # dataChange=false (OPTIMIZE / REORG PURGE rearrangements)
-            # are transparent: same rows, new packing — delta-spark
-            # streams straight past them and so do we.
-            removes = any(
-                (a.get("remove") or {}).get("dataChange", True)
-                for a in actions
-                if "remove" in a
-            )
-            dv = any(
-                (a.get("add") or {}).get("deletionVector")
-                for a in actions
-                if (a.get("add") or {}).get("dataChange", True)
-            )
-            if removes or dv:
-                if self._skip_change:
-                    continue
-                what = "remove" if removes else "deletion-vector"
-                raise ValueError(
-                    f"pydelta stream: version {v} contains a {what} "
-                    "action; this source replays appends only — pass "
-                    ".option('skipChangeCommits', 'true') to skip "
-                    "data-changing commits (delta-spark parity)"
-                )
-            for action in actions:
-                if "add" in action:
-                    a = action["add"]
-                    if a.get("dataChange") is False:
-                        continue  # compaction rewrite: same rows
-                    out.append(
-                        {
-                            "file": os.path.join(
-                                self._path, unquote(a["path"])
-                            ),
-                            "parts": dict(a.get("partitionValues") or {}),
-                        }
-                    )
-        return out
-
-    def _changes_between(self, start: int, end: int):
-        """CDF microbatch planning: one partition per change FILE —
-        cdc files carry their _change_type column; derived inserts /
-        deletes get it (plus _commit_version/_commit_timestamp) as
-        partition-value constants, and a derived delete of a DV-
-        bearing file ships the PRIOR deletion vector so only live
-        rows surface as deletes. All row work happens in executors."""
+    def _change_files(self, ch: CommitChange) -> list:
+        """CDF planning of one commit: its cdc files carry their
+        _change_type column; derived inserts / deletes get it (plus
+        _commit_version/_commit_timestamp) as partition-value
+        constants, and a derived delete of a DV-bearing file ships the
+        PRIOR deletion vector so only live rows surface as deletes."""
         from datetime import datetime, timezone
-        from urllib.parse import unquote
 
-        out = []
-        for v in self._log.versions():
-            if v <= start or v > end:
-                continue
-            actions = self._log.read_commit(v)
-            ts = self._log.commit_timestamp(v)
-            meta = {
-                "_commit_version": str(v),
-                "_commit_timestamp": datetime.fromtimestamp(
-                    ts / 1000, tz=timezone.utc
-                ).strftime("%Y-%m-%d %H:%M:%S.%f")
-                + "Z",
+        meta = {
+            "_commit_version": str(ch.version),
+            "_commit_timestamp": datetime.fromtimestamp(
+                self._log.commit_timestamp(ch.version) / 1000,
+                tz=timezone.utc,
+            ).strftime("%Y-%m-%d %H:%M:%S.%f")
+            + "Z",
+        }
+        if ch.cdc:
+            return [self._part(c["path"], None, **meta) for c in ch.cdc]
+        adds, deletes = ch.derived()
+        return [
+            self._part(
+                a["path"], a.get("partitionValues"), **meta,
+                _change_type="insert",
+            )
+            for a in adds
+        ] + [
+            {
+                **self._part(
+                    r["path"], prior.get("partitionValues"), **meta,
+                    _change_type="delete",
+                ),
+                "dv": prior.get("deletionVector"),
             }
-            cdc = [a["cdc"] for a in actions if "cdc" in a]
-            if cdc:
-                out.extend(
-                    {
-                        "file": os.path.join(
-                            self._path, unquote(c["path"])
-                        ),
-                        "parts": dict(meta),
-                    }
-                    for c in cdc
-                )
-                continue
-            adds = [a["add"] for a in actions if "add" in a]
-            removes = [a["remove"] for a in actions if "remove" in a]
-            if any(
-                a.get("deletionVector") and a.get("dataChange", True)
-                for a in adds
-            ):
-                raise ValueError(
-                    f"pydelta change stream: version {v} changed rows "
-                    "via deletion vectors but recorded no change data "
-                    "— delta.enableChangeDataFeed was not active for "
-                    "that commit"
-                )
-            for a in adds:
-                if not a.get("dataChange", True):
-                    continue
-                out.append(
-                    {
-                        "file": os.path.join(
-                            self._path, unquote(a["path"])
-                        ),
-                        "parts": {
-                            **(a.get("partitionValues") or {}),
-                            **meta,
-                            "_change_type": "insert",
-                        },
-                    }
-                )
-            if any(r.get("dataChange", True) for r in removes):
-                prev = (
-                    self._log.snapshot(
-                        v - 1, allow=BATCH_READ_FEATURES
-                    )
-                    if v > 0
-                    else None
-                )
-                for r in removes:
-                    if not r.get("dataChange", True):
-                        continue
-                    prev_add = (prev.adds if prev else {}).get(
-                        r["path"]
-                    ) or {}
-                    out.append(
-                        {
-                            "file": os.path.join(
-                                self._path, unquote(r["path"])
-                            ),
-                            "parts": {
-                                **(
-                                    prev_add.get("partitionValues")
-                                    or {}
-                                ),
-                                **meta,
-                                "_change_type": "delete",
-                            },
-                            "dv": prev_add.get("deletionVector"),
-                        }
-                    )
-        return out
+            for r, prior in deletes
+        ]
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        plan = (
-            self._changes_between(start["version"], end["version"])
-            if self._cdf
-            else self._adds_between(start["version"], end["version"])
-        )
+        """One partition per file of the commits in (start, end]: each
+        commit's change files (readChangeFeed), else its appended
+        files. All row work happens in executors."""
+        plan: list = []
+        for ch in commit_changes(
+            self._log, start["version"], end["version"]
+        ):
+            if self._cdf:
+                plan += self._change_files(ch)
+            elif not ch.changes_rows:
+                plan += [
+                    self._part(a["path"], a.get("partitionValues"))
+                    for a in ch.adds
+                ]
+            elif not self._skip_change:
+                # re-emitting the adds of a data-CHANGING commit would
+                # duplicate or resurrect rows (delta-spark's contract)
+                what = "remove" if ch.removes else "deletion-vector"
+                raise ValueError(
+                    f"pydelta stream: version {ch.version} contains a "
+                    f"{what} action; this source replays appends only "
+                    "— pass .option('skipChangeCommits', 'true') to "
+                    "skip data-changing commits (delta-spark parity)"
+                )
         return [InputPartition(p) for p in plan]
 
     def read(self, partition: InputPartition):

@@ -308,6 +308,64 @@ def test_streaming_change_feed(spark, tbl, tmp_path):
         )
 
 
+def test_batch_and_stream_change_feeds_agree(spark, tbl, tmp_path):
+    """The change feed has two executors by design: pooled JVM frames
+    (read_change_feed) and per-file Arrow partitions (the
+    readChangeFeed stream). Both classify the range through
+    commit_changes and must return the same change rows for a cdc
+    commit, a derived insert and derived deletes that include a
+    DV-bearing file."""
+    from local_lakehouse_spark.sources.pydelta_source import register
+
+    register(spark)
+    _cdf_table(spark, tbl, n=6)  # v0 create, v1 property
+    delete_where(spark, tbl, "id = 1")  # v2: DV + cdc
+    row = "id long, s string, grp int"
+    write_delta(
+        spark, spark.createDataFrame([(50, "x", 0)], row), tbl,
+        mode="append",
+    )  # v3: derived insert
+    prior = DeltaLog(tbl).snapshot(allow=delta_py.BATCH_READ_FEATURES)
+    write_delta(
+        spark, spark.createDataFrame([(60, "y", 1)], row), tbl,
+        mode="overwrite",
+    )  # v4: derived deletes
+    v4 = _commit_actions(tbl, 4)
+    removed = [a["remove"]["path"] for a in v4 if "remove" in a]
+    assert any(prior.adds[p].get("deletionVector") for p in removed)
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("pydelta")
+        .option("readChangeFeed", "true")
+        .option("startingVersion", 2)
+        .load(tbl)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    cols = ["id", "s", "grp", "_change_type", "_commit_version"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(cols).collect())
+
+    batch = rows(read_change_feed(spark, tbl, 2, 4))
+    assert batch == rows(spark.read.parquet(out))
+    assert sorted((r[0], r[3], r[4]) for r in batch) == [
+        (0, "delete", 4),
+        (1, "delete", 2),
+        (2, "delete", 4),
+        (3, "delete", 4),
+        (4, "delete", 4),
+        (5, "delete", 4),
+        (50, "delete", 4),
+        (50, "insert", 3),
+        (60, "insert", 4),
+    ]
+
+
 def test_timestamp_bounds(spark, tbl):
     """startingTimestamp resolves to the earliest commit at-or-after,
     endingTimestamp to the latest at-or-before (delta-spark's CDF

@@ -2492,10 +2492,11 @@ def test_cluster_by_refuses_mapped_partition_column(spark, tbl):
 
 def test_cdf_refuses_expired_starting_version(spark, tbl):
     """After cleanup_metadata expires part of the requested range the
-    change feed REFUSES (delta-spark's behavior) instead of silently
-    returning a partial feed."""
+    change feed and the table_changes fast path REFUSE (delta-spark's
+    behavior) instead of silently returning a partial feed."""
     from local_lakehouse_spark.exceptions import DoesNotExistError
     from local_lakehouse_spark.sources.delta_py import (
+        appended_changes,
         read_change_feed,
         set_properties,
     )
@@ -2524,6 +2525,68 @@ def test_cdf_refuses_expired_starting_version(spark, tbl):
     # starting at the earliest surviving commit still reads fine
     out = read_change_feed(spark, tbl, starting_version=surviving[0])
     assert out.count() >= 1
+    # the table_changes fast path refuses the same expired range
+    # instead of returning the appends of the surviving commits only
+    with pytest.raises(DoesNotExistError, match="earliest surviving"):
+        appended_changes(spark, tbl, 0, None)
+    fast = appended_changes(spark, tbl, surviving[0] - 1, None)
+    assert [(r.id, r._change_type) for r in fast.collect()] == [
+        (4, "insert")
+    ]
+
+
+def test_append_only_rule_reads_past_row_tracking_backfill(
+    spark, tbl, tmp_path
+):
+    """Enabling row tracking re-adds every live file with
+    dataChange=false, a DV-bearing one included: that commit changes
+    no rows. The table_changes fast path and the append-only pydelta
+    stream judge it by one rule, so both read past it and return the
+    same appended rows."""
+    from local_lakehouse_spark.sources.delta_py import (
+        appended_changes,
+        delete_where,
+        set_properties,
+    )
+    from local_lakehouse_spark.sources.pydelta_source import register
+
+    df = spark.createDataFrame(
+        [(i, "a") for i in range(6)], "id long, s string"
+    ).coalesce(1)
+    write_delta(spark, df, tbl)  # v0
+    delete_where(spark, tbl, "id = 0")  # v1: a deletion vector
+    set_properties(tbl, {"delta.enableRowTracking": "true"})  # v2
+    write_delta(
+        spark,
+        spark.createDataFrame([(10, "b"), (11, "c")], "id long, s string"),
+        tbl,
+        mode="append",
+    )  # v3
+    backfill = DeltaLog(tbl).read_commit(2)
+    assert any(
+        a["add"].get("deletionVector") and a["add"]["dataChange"] is False
+        for a in backfill
+        if "add" in a
+    )
+    fast = appended_changes(spark, tbl, 1, None)
+    assert fast is not None
+    got = sorted((r.id, r.s) for r in fast.collect())
+    assert got == [(10, "b"), (11, "c")]
+    register(spark)
+    out = str(tmp_path / "out")
+    q = (
+        spark.readStream.format("pydelta")
+        .option("startingVersion", 2)
+        .load(tbl)
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    streamed = spark.read.parquet(out).collect()
+    assert sorted((r.id, r.s) for r in streamed) == got
 
 
 def test_column_defaults(unity, spark, tmp_path):
