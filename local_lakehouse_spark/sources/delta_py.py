@@ -55,19 +55,22 @@ tables, and purge/compact of mapped tables. Every DELTA path of the
 package runs on this module; there is no JVM Delta source.
 
 Scale notes: data files are written DISTRIBUTED by Spark (the move
-into place is a per-file rename, metadata cost only); reads hand
-Spark the full file list + schema so scan parallelism, predicate
-pushdown, and partition-dir derivation (``basePath``) all behave
-exactly as a native Delta scan would. Every JVM-side read of data
-files — the readers, DML scans, rewrites, the change feed and the
-constraint gate — is planned from the snapshot by three helpers:
-``_file_scan`` (file list + scan schema + ``basePath``),
+into place is a per-file rename, metadata cost only); reads plan
+from the log, which is the file index: each scanned file's size and
+modification time come from its action, so no read lists or stats a
+file, while scan parallelism, predicate pushdown, and partition-dir
+derivation (``basePath``) behave exactly as a native Delta scan's.
+Every JVM-side read of data files — the readers, DML scans,
+rewrites, the change feed and the constraint gate — is planned from
+the snapshot by three helpers:
+``_file_scan`` (the log's files + scan schema + ``basePath``),
 ``_drop_deleted`` (row positions + the deletion-vector anti-join)
 and ``_to_logical`` (the column-mapping physical -> logical rename).
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -75,6 +78,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass, field, replace
+from types import SimpleNamespace
 from typing import Iterator, Optional
 from urllib.parse import quote, unquote
 
@@ -259,10 +263,6 @@ class Snapshot:
     @property
     def configuration(self) -> dict:
         return dict(self.metadata.get("configuration") or {})
-
-    def files(self, base: str, rels) -> list[str]:
-        """Absolute paths of ``rels`` (add-action paths), sorted."""
-        return [os.path.join(base, unquote(p)) for p in sorted(rels)]
 
     @property
     def column_mapping_mode(self) -> str:
@@ -1370,27 +1370,106 @@ def _deleted_positions_df(
 # ---------------------------------------------------------------------------
 
 
+# Hadoop's local-filesystem block size (``fs.local.block.size``): what
+# a listing of a local data file would report.
+_LOCAL_BLOCK_SIZE = 32 << 20
+
+@functools.lru_cache(maxsize=None)
+def _jvm_scan(gateway) -> SimpleNamespace:
+    """The JVM class handles _file_scan calls, resolved once per py4j
+    gateway: resolving a ``jvm.org.apache...`` chain costs one round
+    trip per name segment, a held handle none."""
+    jvm = gateway.jvm
+    ds = jvm.org.apache.spark.sql.execution.datasources
+    return SimpleNamespace(
+        gateway=gateway,
+        path=jvm.org.apache.hadoop.fs.Path,
+        status=jvm.org.apache.hadoop.fs.FileStatus,
+        cache=ds.FileStatusCache,
+        index=ds.InMemoryFileIndex,
+        relation=ds.HadoopFsRelation,
+        parquet=ds.parquet.ParquetFileFormat,
+        utils=jvm.org.apache.spark.api.python.PythonUtils,
+        some=jvm.scala.Some,
+        none=jvm.scala.Option.empty(),
+    )
+
+
 def _file_scan(
     spark: SparkSession,
     snap: Snapshot,
     base: str,
-    paths: list,
+    actions,
     extra_fields=(),
 ) -> DataFrame:
-    """The one parquet scan over Delta data files: ``paths``
-    (absolute) bound to ``snap.scan_schema`` plus ``extra_fields``
-    (the materialized row-id columns), so nothing is inferred from a
-    footer or a directory name. ``basePath`` anchors hive partition-
-    column derivation and is set only on a partitioned table, so
-    absolute add paths (shallow clones) scan cleanly from outside the
-    table dir. The scan carries PHYSICAL names; _to_logical renames."""
+    """The one parquet scan over Delta data files; the log is the file
+    index. ``actions`` (add, remove or cdc actions; ``path`` quoted,
+    relative to ``base`` or absolute) bring each file's ``size`` and
+    ``modificationTime``. They seed a FileStatusCache client that the
+    InMemoryFileIndex reads instead of listing, so no listing job runs
+    and no file is stat-ed, except one ``os.stat`` per action that
+    lacks them (a remove, a part file not yet committed). The index
+    roots are the data files themselves, so a later ``refresh()`` of a
+    cached plan re-stats exactly these files and never picks up a
+    tombstoned one. The relation is bound to ``snap.scan_schema`` plus
+    ``extra_fields`` (materialized row-id columns, ``_change_type``),
+    so nothing is inferred from a footer or a directory name;
+    ``basePath`` anchors hive partition-column derivation and is set
+    only on a partitioned table, so absolute add paths (shallow
+    clones) scan cleanly from outside the table dir. This is the
+    HadoopFsRelation ``spark.read.schema(s).parquet(*paths)`` builds,
+    without its glob, existence check and listing. The scan carries
+    PHYSICAL names; _to_logical renames."""
+    from pyspark.sql.classic.dataframe import DataFrame as JvmFrame
+
+    h = _jvm_scan(spark.sparkContext._gateway)
+    js = spark._jsparkSession
     schema = snap.scan_schema
     if extra_fields:
         schema = T.StructType(list(schema.fields) + list(extra_fields))
-    reader = spark.read.schema(schema)
-    if snap.partition_columns:
-        reader = reader.option("basePath", base)
-    return reader.parquet(*paths)
+    cache = h.cache.getOrCreate(js)
+    roots = []
+    for rel, a in sorted({a["path"]: a for a in actions}.items()):
+        local = os.path.abspath(os.path.join(base, unquote(rel)))
+        size, mtime = a.get("size"), a.get("modificationTime")
+        if size is None or mtime is None:
+            st = os.stat(local)
+            size, mtime = st.st_size, st.st_mtime_ns // 1_000_000
+        root = h.path("file:" + local)
+        leaf = h.gateway.new_array(h.status, 1)
+        leaf[0] = h.status(size, False, 1, _LOCAL_BLOCK_SIZE, mtime, root)
+        cache.putLeafFiles(root, leaf)
+        roots.append(root)
+    opts = h.utils.toScalaMap(
+        {"basePath": base} if snap.partition_columns else {}
+    )
+    index = h.index(
+        js,
+        h.utils.toSeq(roots),
+        opts,
+        h.some(js.parseDataType(schema.json())),
+        cache,
+        h.none,
+        h.none,
+    )
+    # the index holds its files now: drop this client's entries so
+    # the session-wide cache does not grow with every read
+    cache.invalidateAll()
+    jpart = index.partitionSchema()
+    part = {f["name"].lower() for f in json.loads(jpart.json())["fields"]}
+    data = T.StructType(
+        [f for f in schema.fields if f.name.lower() not in part]
+    )
+    relation = h.relation(
+        index,
+        jpart,
+        js.parseDataType(data.json()).asNullable(),
+        h.none,
+        h.parquet(),
+        opts,
+        js,
+    )
+    return JvmFrame(js.baseRelationToDataFrame(relation), spark)
 
 
 def _drop_deleted(scan: DataFrame, dv_adds: dict, path: str) -> DataFrame:
@@ -1543,12 +1622,12 @@ def read_delta(
     if not snap.adds:
         return spark.createDataFrame([], schema or snap.schema)
     dv_adds = snap.dv_adds
-    plain = [p for p in snap.adds if p not in dv_adds]
+    plain = [a for p, a in snap.adds.items() if p not in dv_adds]
     parts: list[DataFrame] = []
     if plain:
-        parts.append(_file_scan(spark, snap, path, snap.files(path, plain)))
+        parts.append(_file_scan(spark, snap, path, plain))
     if dv_adds:
-        dv_scan = _file_scan(spark, snap, path, snap.files(path, dv_adds))
+        dv_scan = _file_scan(spark, snap, path, dv_adds.values())
         parts.append(
             _drop_deleted(dv_scan, dv_adds, path).drop("__llh_fn", "__llh_ri")
         )
@@ -1577,26 +1656,34 @@ def _move_parts(tmp: str, path: str) -> list[tuple[str, dict]]:
     basenames, not paths) and refuses colliding-basename tables, so a
     partitioned write must never create one."""
     out = []
-    for root, _dirs, names in os.walk(tmp):
-        for name in names:
-            if not name.endswith(".parquet") or name.startswith("."):
-                continue
-            uniq = f"part-{uuid.uuid4().hex}.parquet"
-            src = os.path.join(root, name)
-            rel = os.path.join(
-                os.path.dirname(os.path.relpath(src, tmp)), uniq
-            ).lstrip(os.sep)
-            parts = {}
-            for seg in rel.split(os.sep)[:-1]:
-                if "=" in seg:
-                    k, _, v = seg.partition("=")
-                    parts[k] = unquote(v)
-            dest = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(src, dest)
-            out.append((rel.replace(os.sep, "/"), parts))
+    for src in _part_files(tmp):
+        uniq = f"part-{uuid.uuid4().hex}.parquet"
+        rel = os.path.join(
+            os.path.dirname(os.path.relpath(src, tmp)), uniq
+        ).lstrip(os.sep)
+        parts = {}
+        for seg in rel.split(os.sep)[:-1]:
+            if "=" in seg:
+                k, _, v = seg.partition("=")
+                parts[k] = unquote(v)
+        dest = os.path.join(path, rel)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.replace(src, dest)
+        out.append((rel.replace(os.sep, "/"), parts))
     shutil.rmtree(tmp, ignore_errors=True)
     return out
+
+
+def _part_files(tmp: str) -> list[str]:
+    """Absolute paths of the parquet part files a Spark write left
+    under ``tmp`` (hidden ``.crc`` files and ``_SUCCESS`` skipped),
+    sorted."""
+    return sorted(
+        os.path.join(root, name)
+        for root, _dirs, names in os.walk(tmp)
+        for name in names
+        if name.endswith(".parquet") and not name.startswith(".")
+    )
 
 
 def _add_action(path: str, rel: str, parts: dict) -> dict:
@@ -2513,12 +2600,14 @@ def _enforce_constraints_on_tmp(
     metadata the commit publishes: tmp is scanned with its schema
     (partition values keep their declared types — a string key
     ``'07'`` is never read back as the integer 7) and projected to
-    logical names, the names constraint expressions speak."""
+    logical names, the names constraint expressions speak. The part
+    files are in no log yet, so _file_scan stats each one."""
     conf = snap.configuration if snap is not None else {}
     if not any(k.startswith("delta.constraints.") for k in conf):
         return
     try:
-        df = _to_logical(_file_scan(spark, snap, tmp, [tmp]), snap.schema)
+        written = [{"path": quote(p, safe="/=")} for p in _part_files(tmp)]
+        df = _to_logical(_file_scan(spark, snap, tmp, written), snap.schema)
         _check_log_constraints(conf, df, path)
     except Exception:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -2767,7 +2856,7 @@ def _grown_dvs(
     rels = pruned_adds(snap, _predicate_conjuncts(predicate)[0])
     if not rels:
         return {}, []  # no file's range can match: metadata-only no-op
-    scan = _file_scan(spark, snap, path, snap.files(path, rels))
+    scan = _file_scan(spark, snap, path, [snap.adds[r] for r in rels])
     hits = (
         _to_logical(
             _drop_deleted(scan, {}, path), snap.schema, "__llh_fn", "__llh_ri"
@@ -3072,7 +3161,7 @@ def read_delta_with_positions(
             }
         )
         return snap, empty
-    scan = _file_scan(spark, snap, path, snap.files(path, snap.adds))
+    scan = _file_scan(spark, snap, path, snap.adds.values())
     live = _drop_deleted(scan, snap.dv_adds, path)
     return snap, _to_logical(live, snap.schema, "__llh_fn", "__llh_ri")
 
@@ -3137,7 +3226,7 @@ def _rewrite_scan(
         spark,
         snap,
         path,
-        snap.files(path, rels),
+        [snap.adds[r] for r in rels],
         [T.StructField(c, T.LongType()) for c in mat or ()],
     )
     if not mat and not dv_adds:
@@ -3194,7 +3283,7 @@ def read_delta_with_row_ids(
         spark,
         snap,
         path,
-        snap.files(path, snap.adds),
+        snap.adds.values(),
         [T.StructField(c, T.LongType()) for c in mat or ()],
     )
     scan = _drop_deleted(raw, snap.dv_adds, path)
@@ -3268,7 +3357,7 @@ def apply_row_changes(
         # are recorded as delete+insert pairs (the rewrite's own
         # representation); update_where records update_pre/postimage.
         rels = {base_to_rel[row.file_name] for row in built}
-        scan = _file_scan(spark, snap, path, snap.files(path, rels))
+        scan = _file_scan(spark, snap, path, [snap.adds[r] for r in rels])
         view = _to_logical(
             _drop_deleted(scan, {}, path), snap.schema, "__llh_fn", "__llh_ri"
         )
@@ -3383,27 +3472,21 @@ def _write_cdc_files(
     changes.write.mode("overwrite").parquet(tmp)
     os.makedirs(os.path.join(path, _CDC_DIR), exist_ok=True)
     out: list[dict] = []
-    for root, _dirs, names in os.walk(tmp):
-        for name in sorted(names):
-            if not name.endswith(".parquet") or name.startswith("."):
-                continue
-            src = os.path.join(root, name)
-            if pq.read_metadata(src).num_rows == 0:
-                continue
-            rel = f"{_CDC_DIR}/cdc-{uuid.uuid4().hex}.snappy.parquet"
-            os.replace(src, os.path.join(path, rel))
-            out.append(
-                {
-                    "cdc": {
-                        "path": quote(rel, safe="/="),
-                        "partitionValues": {},
-                        "size": os.path.getsize(
-                            os.path.join(path, rel)
-                        ),
-                        "dataChange": False,
-                    }
+    for src in _part_files(tmp):
+        if pq.read_metadata(src).num_rows == 0:
+            continue
+        rel = f"{_CDC_DIR}/cdc-{uuid.uuid4().hex}.snappy.parquet"
+        os.replace(src, os.path.join(path, rel))
+        out.append(
+            {
+                "cdc": {
+                    "path": quote(rel, safe="/="),
+                    "partitionValues": {},
+                    "size": os.path.getsize(os.path.join(path, rel)),
+                    "dataChange": False,
                 }
-            )
+            }
+        )
     shutil.rmtree(tmp, ignore_errors=True)
     return out
 
@@ -3578,37 +3661,35 @@ def read_change_feed(
             "delta.enableChangeDataFeed=true; change feed reads "
             "require the CDF table property"
         )
-    cdc_group: list[tuple[str, int, int]] = []
-    ins_group: list[tuple[str, int, int]] = []
-    del_group: list[tuple[str, int, int]] = []
+    # (action, version, timestamp) per scanned file and commit; a
+    # derived delete scans the file's prior add, which carries the
+    # size and modification time a remove action may lack
+    cdc_group: list[tuple[dict, int, int]] = []
+    ins_group: list[tuple[dict, int, int]] = []
+    del_group: list[tuple[dict, int, int]] = []
     dv_deletes: list[tuple[dict, int, int]] = []
     for ch in commit_changes(log, start - 1, snap.version):
         v = ch.version
         ts = log.commit_timestamp(v)
         if ch.cdc:
-            cdc_group += [
-                (os.path.join(path, unquote(c["path"])), v, ts)
-                for c in ch.cdc
-            ]
+            cdc_group += [(c, v, ts) for c in ch.cdc]
             continue
         adds, deletes = ch.derived()
-        ins_group += [
-            (os.path.join(path, unquote(a["path"])), v, ts) for a in adds
-        ]
+        ins_group += [(a, v, ts) for a in adds]
         for r, prior in deletes:
             if prior.get("deletionVector"):
                 dv_deletes.append((dict(prior), v, ts))
             else:
-                del_group.append(
-                    (os.path.join(path, unquote(r["path"])), v, ts)
-                )
+                del_group.append((prior or r, v, ts))
 
     meta_cols = (CDF_TYPE_COL, "_commit_version", "_commit_timestamp")
 
     def _attach(df: DataFrame, group: list) -> DataFrame:
-        basenames = [os.path.basename(p) for p, _v, _t in group]
-        uniq_paths = sorted({p for p, _v, _t in group})
-        if len({os.path.basename(p) for p in uniq_paths}) != len(
+        basenames = [
+            os.path.basename(unquote(a["path"])) for a, _v, _t in group
+        ]
+        uniq_paths = {a["path"] for a, _v, _t in group}
+        if len({os.path.basename(unquote(p)) for p in uniq_paths}) != len(
             uniq_paths
         ):
             raise UnsupportedOperationError(
@@ -3636,14 +3717,13 @@ def read_change_feed(
 
     frames: list[DataFrame] = []
     if cdc_group:
-        # change data files are unpartitioned and carry _change_type:
-        # a direct read, not a data-file scan
-        cdc_schema = T.StructType(
-            list(snap.scan_schema.fields)
-            + [T.StructField(CDF_TYPE_COL, T.StringType())]
-        )
-        df = spark.read.schema(cdc_schema).parquet(
-            *sorted({p for p, _v, _t in cdc_group})
+        # change data files carry _change_type after the table columns
+        df = _file_scan(
+            spark,
+            snap,
+            path,
+            [c for c, _v, _t in cdc_group],
+            [T.StructField(CDF_TYPE_COL, T.StringType())],
         )
         frames.append(
             _to_logical(_attach(df, cdc_group), snap.schema, *meta_cols)
@@ -3651,17 +3731,13 @@ def read_change_feed(
     for group, ctype in ((ins_group, "insert"), (del_group, "delete")):
         if not group:
             continue
-        scan = _file_scan(
-            spark, snap, path, sorted({p for p, _v, _t in group})
-        )
+        scan = _file_scan(spark, snap, path, [a for a, _v, _t in group])
         df = _attach(scan, group).withColumn(CDF_TYPE_COL, F.lit(ctype))
         frames.append(_to_logical(df, snap.schema, *meta_cols))
     for prev_add, v, ts in dv_deletes:
         # a dataChange remove of a DV-bearing file deletes its LIVE
         # rows: anti-join the positions its previous DV had marked
-        scan = _file_scan(
-            spark, snap, path, snap.files(path, [prev_add["path"]])
-        )
+        scan = _file_scan(spark, snap, path, [prev_add])
         live = (
             _drop_deleted(scan, {prev_add["path"]: prev_add}, path)
             .drop("__llh_fn", "__llh_ri")
@@ -3705,16 +3781,16 @@ def appended_changes(
     from pyspark.sql import functions as F
 
     log = DeltaLog(path)
-    appended: list[str] = []
+    appended: list[dict] = []
     for ch in commit_changes(log, start, end):
         if ch.changes_rows:
             return None
-        appended += [a["path"] for a in ch.adds]
+        appended += ch.adds
     snap = log.snapshot(end, allow=BATCH_READ_FEATURES)
     change_type = F.lit("insert").alias(CDF_TYPE_COL)
     if not appended:
         return spark.createDataFrame([], snap.schema).select("*", change_type)
-    scan = _file_scan(spark, snap, path, snap.files(path, appended))
+    scan = _file_scan(spark, snap, path, appended)
     return _to_logical(scan, snap.schema, change_type)
 
 

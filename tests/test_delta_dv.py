@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from urllib.parse import unquote
 
 import numpy as np
 import pytest
@@ -1503,6 +1505,149 @@ def test_read_entry_points_agree(spark, tbl, partitioned, dv, mapping):
     assert len(set(pairs)) == len(pairs) == n
 
 
+# two rows per file: 40 files, above
+# spark.sql.sources.parallelPartitionDiscovery.threshold (32), where a
+# listed read runs a distributed listing job
+_MANY_ROWS = 80
+
+
+def _listed_scan(spark, snap, base, actions, extra_fields=()):
+    """The scan _file_scan replaced: Spark's DataFrameReader over the
+    same files, schema and basePath, listing every file itself."""
+    schema = T.StructType(list(snap.scan_schema.fields) + list(extra_fields))
+    reader = spark.read.schema(schema)
+    if snap.partition_columns:
+        reader = reader.option("basePath", base)
+    return reader.parquet(
+        *sorted(os.path.join(base, unquote(a["path"])) for a in actions)
+    )
+
+
+def _small_files(spark, rows_per_file, write):
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", str(rows_per_file))
+    try:
+        write()
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+
+
+@pytest.fixture(scope="module")
+def many_file_table(spark, tmp_path_factory):
+    """(partitioned, mapping) -> a table of two-row files; its latest
+    version deletes ``id = 1`` through a deletion vector and
+    the version before it has none. The partition value ``a:b c``
+    needs escaping in a directory name and again in the log."""
+    built = {}
+
+    def get(partitioned, mapping):
+        if (partitioned, mapping) not in built:
+            tbl = str(tmp_path_factory.mktemp("many") / "t")
+            df = spark.createDataFrame(
+                [(i, "a:b c" if i % 2 else "x", f"s{i}")
+                 for i in range(_MANY_ROWS)],
+                "id long, k string, s string",
+            )
+            _small_files(spark, 2, lambda: delta_py.write_delta(
+                spark, df, tbl,
+                partition_by=["k"] if partitioned else None,
+                column_mapping=mapping != "none",
+            ))
+            if mapping == "id":  # the written footers carry field ids
+                log = DeltaLog(tbl)
+                snap = log.snapshot(allow=BATCH_READ_FEATURES)
+                conf = {**snap.configuration, "delta.columnMapping.mode": "id"}
+                meta = {**snap.metadata, "configuration": conf}
+                log.commit(snap.version + 1, [{"metaData": meta}])
+            delta_py.delete_where(spark, tbl, "id = 1")
+            built[(partitioned, mapping)] = tbl
+        return built[(partitioned, mapping)]
+
+    return get
+
+
+@pytest.mark.parametrize("mapping", ["none", "name", "id"])
+@pytest.mark.parametrize("dv", [False, True], ids=["nodv", "dv"])
+@pytest.mark.parametrize("partitioned", [False, True], ids=["flat", "part"])
+def test_log_file_index_matches_listed_scan(
+    spark, many_file_table, monkeypatch, partitioned, dv, mapping
+):
+    """_file_scan, seeded from the log, plans and returns what Spark's
+    own listed read of the same files does: rows, columns, file names
+    and row positions, and the optimized plan."""
+    tbl = many_file_table(partitioned, mapping)
+    version = DeltaLog(tbl).snapshot(allow=BATCH_READ_FEATURES).version
+    version -= 0 if dv else 1
+    snap = DeltaLog(tbl).snapshot(version, allow=BATCH_READ_FEATURES)
+    assert len(snap.adds) > 32 and bool(snap.dv_adds) == dv
+
+    def positions(scan):
+        return sorted(
+            scan.select(
+                "_metadata.file_name", "_metadata.row_index", *scan.columns
+            ).collect()
+        )
+
+    def plan(df):
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+", "#", re.sub(r"Location: [^,]*", "", text))
+
+    scans, reads = [], []
+    for build in (delta_py._file_scan, _listed_scan):
+        monkeypatch.setattr(delta_py, "_file_scan", build)
+        scans.append(build(spark, snap, tbl, snap.adds.values()))
+        reads.append(read_delta(spark, tbl, version=version))
+    assert scans[0].columns == scans[1].columns
+    assert positions(scans[0]) == positions(scans[1])
+    assert reads[0].columns == reads[1].columns == ["id", "k", "s"]
+    rows = sorted(reads[0].collect())
+    assert len(rows) == _MANY_ROWS - dv
+    assert rows == sorted(reads[1].collect())
+    assert plan(reads[0]) == plan(reads[1])
+
+
+def test_catalog_delta_read_launches_no_job(unity, spark, tmp_path):
+    """Building a catalog read of a 40-file Delta table runs no Spark
+    job (the log stands in for the listing); a cached read refreshed
+    after a DELETE keeps only live rows; the change feed scans actions
+    that carry no ``size``."""
+    from local_lakehouse_spark import FileType
+
+    df = spark.createDataFrame([(i, i % 3) for i in range(40)], "id long, g long")
+    d = str(tmp_path / "d")
+    _small_files(spark, 1, lambda: unity.create_as_table(
+        df, "unity", "default", "d", file_type=FileType.DELTA, location=d))
+    assert len(DeltaLog(d).snapshot().adds) == 40
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-only", "build the DataFrame")
+    q = unity.sql("SELECT g, count(*) AS n FROM unity.default.d GROUP BY g")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("plan-only") == []
+    assert sorted(q.collect()) == [(0, 14), (1, 13), (2, 13)]
+
+    unity.sql("DELETE FROM unity.default.d WHERE id < 10")
+    live = unity.sql("SELECT id FROM unity.default.d").cache()
+    assert live.count() == 30
+    spark.catalog.refreshByPath(d)
+    assert sorted(r.id for r in live.collect()) == list(range(10, 40))
+    live.unpersist()
+
+    cdf = str(tmp_path / "cdf")
+    delta_py.write_delta(spark, df.limit(4).coalesce(1), cdf)
+    log0 = os.path.join(cdf, "_delta_log", f"{0:020d}.json")
+    with open(log0) as f:
+        acts = [json.loads(ln) for ln in f if ln.strip()]
+    for a in acts:
+        a.get("add", {}).pop("size", None)
+    with open(log0, "w") as f:
+        f.write("".join(json.dumps(a) + "\n" for a in acts))
+    delta_py.set_properties(cdf, {"delta.enableChangeDataFeed": "true"})
+    delta_py.write_delta(spark, df.limit(1), cdf, mode="overwrite")
+    feed = delta_py.read_change_feed(spark, cdf, 2, 2)
+    assert sorted((r.id, r._change_type) for r in feed.collect()) == [
+        (0, "delete"), (0, "insert"), (1, "delete"), (2, "delete"), (3, "delete"),
+    ]
+
+
 def _plan_nodes(plan, kind):
     """Nodes of a JVM logical plan whose class is ``kind``, pre-order."""
     out = [plan] if plan.getClass().getSimpleName() == kind else []
@@ -1513,8 +1658,6 @@ def _plan_nodes(plan, kind):
 
 
 def test_read_delta_joins_only_dv_files(spark, tmp_path):
-    from urllib.parse import unquote
-
     tbl = str(tmp_path / "dv")
     _two_write_table(spark, tbl, partitioned=True, mapped=False, dv=True)
     snap = DeltaLog(tbl).snapshot(allow=BATCH_READ_FEATURES)

@@ -193,3 +193,22 @@ def test_streaming_read_on_bare_session(bare_session, tmp_path):
     stream = read_events_stream(bare_session, str(stage))
     assert stream.isStreaming
     assert dict(stream.dtypes)["ts"] == "timestamp"
+
+
+def test_fixture_read_infers_once(spark, tmp_path):
+    """A fixture file's schema is inferred by its first read only; a
+    rewrite of the file (new size and mtime) is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert Q.read_fixture(spark, path).columns == ["a"]
+    sc = spark.sparkContext
+    sc.setJobGroup("fixture-plan", "build the DataFrame")
+    df = Q.read_fixture(spark, path)
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("fixture-plan") == []
+    assert sorted(r.a for r in df.collect()) == [1, 2]
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), path)
+    assert Q.read_fixture(spark, path).collect() == [(3, "x")]
