@@ -23,6 +23,7 @@ from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import io as _io
 from . import sqlnames as _sqlnames
@@ -45,7 +46,7 @@ from .models import (
     WriteMode,
 )
 from .session import get_spark
-from .types_map import spark_schema_to_uc_columns
+from .types_map import schemas_equal, spark_schema_to_uc_columns
 from .utils import to_file_type, to_schema_evolution, to_table_type, to_write_mode
 
 
@@ -505,12 +506,20 @@ class LakehouseClient:
 
             delta_py.restore(self._require_spark(), path, version)
             return
-        fmt = _io._FORMAT_NAME[tbl.file_type]
-        part_cols = [c.name for c in tbl.partition_columns()]
-        if not part_cols and _io._is_single_file(path):
-            _io._write_single_file(df, fmt, path)
-        else:
-            _io._rewrite_table_dir(df, fmt, path, partition_by=part_cols or None)
+        self._rewrite_contents(tbl, df)
+        # the version's own schema comes back with its data, as Delta's
+        # RESTORE restores the schema too
+        self._sync_columns(tbl, df.schema)
+
+    def _sync_columns(self, tbl: Table, written: StructType) -> None:
+        """Set the catalog columns of ``tbl`` to the schema a write
+        committed, when they differ."""
+        cols = spark_schema_to_uc_columns(
+            written, [c.name for c in tbl.partition_columns()]
+        )
+        if not schemas_equal(cols, tbl.columns):
+            tbl.columns = cols
+            self.metastore.overwrite_table(tbl)
 
     def validate_table(
         self,
@@ -1403,20 +1412,20 @@ class LakehouseClient:
             validate=lambda result: self._check_constraints(result, tbl),
             schema_evolution=schema_evolution,
         )
-        if schema_evolution and hasattr(merger, "execute"):
+        if schema_evolution:
             # post-execute schema reconciliation into the metastore,
-            # the same contract write_table keeps (client.py:394-399)
+            # the same contract write_table keeps (client.py:394-399).
+            # The columns come from the schema the merge committed: a
+            # read would bind to the catalog's old columns.
             orig_execute = merger.execute
 
             def _execute_and_sync() -> None:
                 orig_execute()
-                evolved = self.read_table(catalog, schema, name)
-                fresh = self.get_table(catalog, schema, name)
-                fresh.columns = spark_schema_to_uc_columns(
-                    evolved.schema,
-                    [c.name for c in fresh.partition_columns()],
-                )
-                self.metastore.overwrite_table(fresh)
+                if merger.written_schema is not None:
+                    self._sync_columns(
+                        self.get_table(catalog, schema, name),
+                        merger.written_schema,
+                    )
 
             merger.execute = _execute_and_sync  # type: ignore[method-assign]
         return merger

@@ -15,7 +15,10 @@ natively over Parquet tables using an atomic directory-swap rewrite.
 
 Scale notes (100 TB design):
 - Reads are plain ``spark.read`` → full predicate pushdown + partition
-  pruning; nothing materializes on the driver.
+  pruning; nothing materializes on the driver. A catalog read binds the
+  scan to the catalog's columns, so building it runs no schema-inference
+  job; only ``register_as_table`` (no columns yet) and a time-travel
+  read of a retained PARQUET/ORC version infer from the files.
 - ``replace_where``/merge rewrites are expressed as DataFrame plans
   (anti-join / filter + union) executed distributed, then committed by
   directory rename — the Spark-native analog of delta-rs's rewrite.
@@ -36,6 +39,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .exceptions import (
     DoesNotExistError,
@@ -48,6 +52,7 @@ from .types_map import (
     schemas_equal,
     spark_schema_to_uc_columns,
     uc_columns_to_spark_schema,
+    uc_type_to_spark_type,
 )
 
 HAVE_DELTA = False  # no JVM Delta source; kept for callers that report it
@@ -85,6 +90,15 @@ def read_format_path(
 ) -> DataFrame:
     """Read files at ``path`` as ``file_type`` into a (lazy) DataFrame.
 
+    ``columns`` (the catalog entry's) bind the scan schema for every
+    format that takes one: PARQUET, ORC, CSV, JSON and AVRO. Spark then
+    reads no footer to infer a schema, and hive partition values parse
+    as the catalog's types (a string partition ``k=07`` reads back as
+    ``'07'``). Only a read without catalog columns infers the schema
+    from the files: ``register_as_table`` (``columns=None``), and
+    ``_retained_columns`` for a time-travel read of a PARQUET/ORC
+    version.
+
     Parity: format dispatch of /root/reference/uchelper/dataframe.py:197-226.
     """
     from .session import harden_runtime
@@ -95,22 +109,15 @@ def read_format_path(
         from .sources import delta_py
 
         return delta_py.read_delta(spark, path)
-    if file_type == FileType.PARQUET:
-        df = spark.read.parquet(path)
-        # Pin hive-partition column types from the catalog instead of
-        # trusting Spark's partition-value inference.
-        # Parity: dataframe.py:205-213.
-        if columns:
-            part_cols = [c for c in columns if c.partition_index is not None]
-            for c in part_cols:
-                from .types_map import uc_type_to_spark_type
-
-                df = df.withColumn(c.name, F.col(c.name).cast(uc_type_to_spark_type(c)))
-            # Restore catalog column order.
-            names = [c.name for c in sorted(columns, key=lambda c: c.position)]
-            if set(names) == set(df.columns):
-                df = df.select(*names)
-        return df
+    if file_type in (FileType.PARQUET, FileType.ORC):
+        # Parity: dataframe.py:205-213 pins hive partition types from the
+        # catalog; here the whole catalog schema does, so nothing infers.
+        fmt = _FORMAT_NAME[file_type]
+        if not columns:
+            return spark.read.format(fmt).load(path)
+        schema = uc_columns_to_spark_schema(columns)
+        # Spark puts partition columns last; select restores catalog order.
+        return spark.read.schema(schema).format(fmt).load(path).select(*schema.names)
     if file_type == FileType.CSV:
         # Schema-enforced read when the catalog has columns, else infer.
         # Parity: dataframe.py:215-220.
@@ -125,8 +132,6 @@ def read_format_path(
         if columns:
             reader = reader.schema(uc_columns_to_spark_schema(columns))
         return reader.json(path)
-    if file_type == FileType.ORC:
-        return spark.read.orc(path)
     if file_type == FileType.TEXT:
         return spark.read.text(path)
     if file_type == FileType.AVRO:
@@ -216,12 +221,31 @@ def read_table(
             f"(commit-log timestamps); {table.full_name} is "
             f"{table.file_type.value}"
         )
+    columns = table.columns or None
     if version is not None:
-        location = "file://" + snapshot_path(
-            location.removeprefix("file://"), version
-        )
-    return read_format_path(
-        spark, table.file_type, location, table.columns or None
+        location = snapshot_path(location.removeprefix("file://"), version)
+        if table.file_type in (FileType.PARQUET, FileType.ORC):
+            columns = _retained_columns(spark, table, location)
+    return read_format_path(spark, table.file_type, location, columns)
+
+
+def _retained_columns(spark: SparkSession, table: Table, location: str) -> list[Column]:
+    """Columns of the retained PARQUET/ORC version at ``location``.
+
+    A version keeps the schema it was written with, which a later
+    schema change may have left behind, so its data columns come from
+    its files (one footer-inference job; a current read never pays it).
+    Partition columns keep their catalog types: inference would read a
+    string partition ``k=07`` as the integer 7. Columns the catalog
+    knows come in catalog order, the others after them.
+    """
+    parts = {c.name: uc_type_to_spark_type(c) for c in table.partition_columns()}
+    pos = {c.name: c.position for c in table.columns or []}
+    files = spark.read.format(_FORMAT_NAME[table.file_type]).load(location).schema
+    fields = sorted(files.fields, key=lambda f: pos.get(f.name, len(pos)))
+    return spark_schema_to_uc_columns(
+        T.StructType([T.StructField(f.name, parts.get(f.name, f.dataType)) for f in fields]),
+        list(parts),
     )
 
 
@@ -605,11 +629,17 @@ def _write_parquet(
     # OVERWRITE
     if schema_evolution == SchemaEvolution.STRICT:
         check_schemas_equal(df_cols, table.columns)
+    schema_changed = not schemas_equal(df_cols, table.columns)
     if single_file:
         _write_single_file(df, "parquet", path)
-    elif part_cols:
+    elif part_cols and not (
+        schema_evolution == SchemaEvolution.OVERWRITE and schema_changed
+    ):
         # Only touched partitions replaced — dynamic partition
         # overwrite, parity dataframe.py:388 + client.py:372 warning.
+        # A schema overwrite replaces the whole table instead (Delta's
+        # overwriteSchema): untouched partitions would keep files of
+        # the old schema that the new catalog columns cannot read.
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -617,10 +647,8 @@ def _write_parquet(
             .parquet(path)
         )
     else:
-        _rewrite_table_dir(df, "parquet", path)
-    if schema_evolution == SchemaEvolution.STRICT:
-        return None
-    return None if schemas_equal(df_cols, table.columns) else df_cols
+        _rewrite_table_dir(df, "parquet", path, partition_by=part_cols or None)
+    return df_cols if schema_changed else None
 
 
 def _write_flat(

@@ -27,6 +27,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .exceptions import MergeAmbiguityError, UnsupportedOperationError
 from .io import (
@@ -90,6 +91,10 @@ class SparkMerger:
         self._not_matched: list[tuple[str, Optional[dict], Optional[str]]] = []
         self._not_matched_by_source: list[tuple[str, Optional[dict], Optional[str]]] = []
         self._evolve = False
+        # Schema the last execute() committed, when it can change the
+        # table's columns (DELTA, PARQUET); the client reconciles the
+        # catalog from it after a schema-evolving merge.
+        self.written_schema: Optional[T.StructType] = None
 
     def with_schema_evolution(self) -> "SparkMerger":
         """delta-spark's ``withSchemaEvolution()``: source columns
@@ -445,21 +450,21 @@ class SparkMerger:
                     # untouched rows passed the gate at their own
                     # write time; only the new/rewritten rows need it
                     self._validate(appended)
-                delta_py.apply_row_changes(
+                self.written_schema = delta_py.apply_row_changes(
                     self._spark, path, snap, dead, appended,
                     operation="MERGE",
                     operation_parameters={"predicate": self._condition},
-                )
+                ).schema
                 return
             # empty table: nothing to DV — plain overwrite
             result = self._result_plan()
             if self._validate is not None:
                 self._validate(result)
-            delta_py.write_delta(
+            self.written_schema = delta_py.write_delta(
                 self._spark, result, path,
                 mode="overwrite", partition_by=part_cols or None,
                 operation="MERGE",
-            )
+            ).schema
             return
         if self._table.file_type == FileType.ICEBERG:
             # merge-on-read MERGE, the Delta-DV shape on Iceberg
@@ -535,6 +540,7 @@ class SparkMerger:
             _write_single_file(result, "parquet", path)
         else:
             _rewrite_table_dir(result, "parquet", path, partition_by=part_cols or None)
+        self.written_schema = result.schema
 
 
 def merge_table(

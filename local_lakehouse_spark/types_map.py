@@ -165,9 +165,11 @@ def uc_columns_to_spark_schema(columns: list[Column]) -> T.StructType:
 
 
 def schemas_equal(left: list[Column], right: list[Column]) -> bool:
-    """Same length; per position-sorted column: same name, data_type, and
-    for DECIMAL same precision+scale. Nullability and partition_index are
-    NOT compared. Parity: /root/reference/uchelper/dataframe.py:144-159.
+    """Same length; per position-sorted column: same name, data_type, for
+    DECIMAL same precision+scale, and for ARRAY/STRUCT/MAP the same
+    element types (from ``type_text``, when both sides have one).
+    Nullability and partition_index are NOT compared. Parity:
+    /root/reference/uchelper/dataframe.py:144-159.
     """
     if len(left) != len(right):
         return False
@@ -178,6 +180,14 @@ def schemas_equal(left: list[Column], right: list[Column]) -> bool:
             return False
         if a.data_type == DataType.DECIMAL and (
             a.type_precision != b.type_precision or a.type_scale != b.type_scale
+        ):
+            return False
+        if (
+            a.data_type in (DataType.ARRAY, DataType.STRUCT, DataType.MAP)
+            and a.type_text
+            and b.type_text
+            and parse_type_text(a.type_text).simpleString()
+            != parse_type_text(b.type_text).simpleString()
         ):
             return False
     return True

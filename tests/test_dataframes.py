@@ -4,6 +4,8 @@ Modeled on /root/reference/tests/test_dataframes.py (write→read
 equality oracle + independent-reader secondary oracle + negative
 guard tests + merge clause matrix)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -178,6 +180,12 @@ def test_schema_evolution_merge_append(unity, random_df, tmp_path):
     assert "extra" in back.columns
     cols = {c.name for c in unity.get_table("unity", "default", "t").columns}
     assert "extra" in cols
+    # the read follows catalog order; pre-evolution rows read NULL
+    catalog = unity.get_table("unity", "default", "t").columns
+    assert back.columns == [c.name for c in sorted(catalog, key=lambda c: c.position)]
+    assert back.columns == df.columns + ["extra"]
+    extra = dict(back.select("id", "extra").collect())
+    assert extra == {**{i: None for i in range(5)}, **{i: "x" for i in range(10, 13)}}
 
 
 def test_schema_evolution_overwrite(unity, random_df, tmp_path):
@@ -190,6 +198,116 @@ def test_schema_evolution_overwrite(unity, random_df, tmp_path):
     got = unity.get_table("unity", "default", "t")
     types = {c.name: c.data_type for c in got.columns}
     assert types["ints"] == DataType.STRING  # LONG→STRING style flip
+
+
+def test_strict_write_rejects_nested_type_change(unity, spark, tmp_path):
+    """STRICT compares nested element types: the catalog columns bind
+    every read, so files of another element type would be unreadable."""
+    unity.create_as_table(
+        spark.createDataFrame([(1, [1, 2])], "id long, a array<int>"),
+        "unity", "default", "nt", location=_loc(tmp_path, "nt"),
+    )
+    with pytest.raises(SchemaMismatchError):
+        unity.write_table(
+            spark.createDataFrame([(2, ["x"])], "id long, a array<string>"),
+            "unity", "default", "nt", mode="overwrite",
+        )
+    assert rows_set(unity.read_table("unity", "default", "nt")) == [(1, [1, 2])]
+
+
+def test_schema_overwrite_replaces_partitioned_table(unity, spark, tmp_path):
+    """A schema overwrite replaces every partition (Delta's
+    overwriteSchema), so no partition keeps files of the old schema;
+    a STRICT overwrite still replaces only the partitions it writes."""
+    loc = _loc(tmp_path, "po")
+    df = spark.createDataFrame([(1, 10, 1), (2, 20, 2)], "id long, v long, p int")
+    unity.create_as_table(
+        df, "unity", "default", "po", location=loc, partition_cols=["p"]
+    )
+    schema = "id long, v string, p int"
+    unity.write_table(
+        spark.createDataFrame([(3, "c", 2)], schema), "unity", "default", "po",
+        mode="overwrite", schema_evolution="overwrite",
+    )
+    types = {c.name: c.data_type for c in unity.get_table("unity", "default", "po").columns}
+    assert types["v"] == DataType.STRING
+    assert rows_set(unity.read_table("unity", "default", "po")) == [(3, "c", 2)]
+    unity.write_table(
+        spark.createDataFrame([(4, "d", 1)], schema), "unity", "default", "po",
+        mode="overwrite",
+    )
+    assert rows_set(unity.read_table("unity", "default", "po")) == [
+        (3, "c", 2), (4, "d", 1),
+    ]
+
+
+def test_time_travel_across_schema_overwrite(unity, spark, tmp_path):
+    """A retained version reads with the schema it was written with and
+    its partition values as written; restoring it brings that schema
+    back into the catalog."""
+    loc = _loc(tmp_path, "tts")
+    unity.create_as_table(
+        spark.createDataFrame([(1, 10, "07")], "id long, v long, k string"),
+        "unity", "default", "tts", location=loc, partition_cols=["k"],
+    )
+    unity.write_table(
+        spark.createDataFrame([(2, "x", "07")], "id long, v string, k string"),
+        "unity", "default", "tts", mode="overwrite", schema_evolution="overwrite",
+    )
+    old = unity.read_table("unity", "default", "tts", version=1)
+    assert old.columns == ["id", "v", "k"]
+    assert rows_set(old) == [(1, 10, "07")]
+    unity.restore_table("unity", "default", "tts", version=1)
+    types = {c.name: c.data_type for c in unity.get_table("unity", "default", "tts").columns}
+    assert types["v"] == DataType.LONG
+    assert rows_set(unity.read_table("unity", "default", "tts")) == [(1, 10, "07")]
+
+
+def test_string_partition_values_read_back_as_written(unity, spark, tmp_path):
+    """String partition values that look numeric keep their text on
+    read, filter and replace_where ('07' and '007' are not 7)."""
+    loc = _loc(tmp_path, "sp")
+    df = spark.createDataFrame([(1, "07"), (2, "10"), (3, "007")], "id long, k string")
+    unity.create_as_table(
+        df, "unity", "default", "sp", location=loc, partition_cols=["k"]
+    )
+    assert rows_set(unity.read_table("unity", "default", "sp")) == [
+        (1, "07"), (2, "10"), (3, "007"),
+    ]
+    q = unity.sql("SELECT id FROM unity.default.sp WHERE k = '07'")
+    assert [r.id for r in q.collect()] == [1]
+    unity.write_table(
+        spark.createDataFrame([(4, "10")], "id long, k string"),
+        "unity", "default", "sp", mode="overwrite", replace_where="k = '10'",
+    )
+    assert rows_set(unity.read_table("unity", "default", "sp")) == [
+        (1, "07"), (3, "007"), (4, "10"),
+    ]
+    assert sorted(d for d in os.listdir(loc) if d.startswith("k=")) == [
+        "k=007", "k=07", "k=10",
+    ]
+
+
+@pytest.mark.parametrize("ptype", ["int", "date"])
+def test_catalog_schema_read_matches_inferred_read(unity, spark, tmp_path, ptype):
+    """Reading through the catalog columns returns the rows, names,
+    order and types of a read that infers the schema from the files
+    and casts the partition column to its catalog type."""
+    loc = _loc(tmp_path, "pt")
+    base = spark.createDataFrame(
+        [(i, f"s{i}", i % 3) for i in range(12)], "id long, s string, q int"
+    )
+    p = F.col("q") if ptype == "int" else F.date_add(F.lit("2024-02-28").cast("date"), F.col("q"))
+    df = base.select("id", p.alias("p"), "s")
+    unity.create_as_table(
+        df, "unity", "default", "pt", location=loc, partition_cols=["p"]
+    )
+    got = unity.read_table("unity", "default", "pt")
+    inferred = spark.read.parquet(loc)
+    ref = inferred.select("id", F.col("p").cast(ptype).alias("p"), "s")
+    assert got.columns == ref.columns == ["id", "p", "s"]
+    assert [f.dataType for f in got.schema] == [f.dataType for f in ref.schema]
+    assert rows_set(got) == rows_set(ref) == rows_set(df)
 
 
 def test_replace_where(unity, random_df, tmp_path):

@@ -1648,6 +1648,28 @@ def test_catalog_delta_read_launches_no_job(unity, spark, tmp_path):
     ]
 
 
+def test_catalog_parquet_read_launches_no_job(unity, spark, tmp_path):
+    """Building a catalog read of a 40-file partitioned PARQUET table
+    runs no Spark job: the catalog columns stand in for footer
+    inference."""
+    from local_lakehouse_spark import FileType
+
+    df = spark.createDataFrame([(i, i % 3) for i in range(40)], "id long, g long")
+    p = str(tmp_path / "p")
+    _small_files(spark, 1, lambda: unity.create_as_table(
+        df, "unity", "default", "p", file_type=FileType.PARQUET, location=p,
+        partition_cols=["g"]))
+    assert sum(
+        f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs
+    ) == 40
+    sc = spark.sparkContext
+    sc.setJobGroup("plan-only", "build the DataFrame")
+    q = unity.sql("SELECT g, count(*) AS n FROM unity.default.p GROUP BY g")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("plan-only") == []
+    assert sorted(q.collect()) == [(0, 14), (1, 13), (2, 13)]
+
+
 def _plan_nodes(plan, kind):
     """Nodes of a JVM logical plan whose class is ``kind``, pre-order."""
     out = [plan] if plan.getClass().getSimpleName() == kind else []
