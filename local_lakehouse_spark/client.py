@@ -683,20 +683,20 @@ class LakehouseClient:
         rewrite only what the scan reads into the new layout.
         """
         tbl = self.get_table(catalog, schema, name)
-        df = self.read_table(catalog, schema, name)
-        deleted = df.filter(predicate).count()
-        if not deleted:
-            return 0
         if tbl.file_type == FileType.DELTA:
-            # DV fast path: bitmap-only commit, zero data rewritten
+            # DV fast path: bitmap-only commit, zero data rewritten;
+            # the count is the growth of the deletion vectors
             from .sources import delta_py
 
-            delta_py.delete_where(
+            snap = delta_py.delete_where(
                 self._require_spark(),
                 _io.strip_file_scheme(tbl.storage_location or ""),
                 predicate,
             )
-        else:
+            return int(snap.operation_metrics.get("numDeletedRows", 0))
+        df = self.read_table(catalog, schema, name)
+        deleted = df.filter(predicate).count()
+        if deleted:
             self._rewrite_contents(tbl, df.filter(f"NOT ({predicate})"))
         return deleted
 
@@ -720,6 +720,25 @@ class LakehouseClient:
         rows writes 0.1% of the data. Other formats rewrite.
         """
         tbl = self.get_table(catalog, schema, name)
+        if tbl.file_type == FileType.DELTA:
+            # DV fast path: matched rows are bitmap-deleted and only
+            # their post-images append — untouched rows (already
+            # gated at their own write) are never rewritten. The
+            # gate sees exactly the post-images update_where writes
+            # (a post-image may falsify its own predicate, e.g. SET
+            # qty=-5 WHERE qty>0 under CHECK qty>=0), and the count
+            # is the growth of the deletion vectors.
+            from .sources import delta_py
+
+            names = {c.name for c in tbl.columns or []}
+            snap = delta_py.update_where(
+                self._require_spark(),
+                _io.strip_file_scheme(tbl.storage_location or ""),
+                predicate,
+                {c: e for c, e in assignments.items() if c in names},
+                validate=lambda rows: self._check_constraints(rows, tbl),
+            )
+            return int(snap.operation_metrics.get("numUpdatedRows", 0))
         df = self.read_table(catalog, schema, name)
         updated = df.filter(predicate).count()
         if not updated:
@@ -735,40 +754,6 @@ class LakehouseClient:
                 for c in df.columns
             ]
         )
-        if tbl.file_type == FileType.DELTA:
-            # DV fast path: matched rows are bitmap-deleted and only
-            # their post-images append — untouched rows (already
-            # gated at their own write) are never rewritten.
-            from .sources import delta_py
-
-            # Gate the rows update_where will actually WRITE: the
-            # post-images of pre-image-matched rows. Filtering the
-            # post-image (out.filter(predicate)) would miss updates
-            # whose new values falsify their own predicate, e.g.
-            # SET qty=-5 WHERE qty>0 under CHECK qty>=0.
-            post_images = df.filter(predicate).select(
-                *[
-                    F.expr(assignments[c])
-                    .cast(df.schema[c].dataType)
-                    .alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in df.columns
-                ]
-            )
-            self._check_constraints(post_images, tbl)
-            delta_py.update_where(
-                self._require_spark(),
-                _io.strip_file_scheme(tbl.storage_location or ""),
-                predicate,
-                {
-                    c: f"CAST(({e}) AS "
-                    f"{df.schema[c].dataType.simpleString()})"
-                    for c, e in assignments.items()
-                    if c in df.columns
-                },
-            )
-            return updated
         self._check_constraints(out, tbl)
         self._rewrite_contents(tbl, out)
         return updated

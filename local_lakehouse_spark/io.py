@@ -48,6 +48,7 @@ from .exceptions import (
 )
 from .models import Column, FileType, SchemaEvolution, Table, WriteMode
 from .types_map import (
+    check_no_type_changes,
     check_schemas_equal,
     schemas_equal,
     spark_schema_to_uc_columns,
@@ -640,6 +641,12 @@ def _write_parquet(
         # A schema overwrite replaces the whole table instead (Delta's
         # overwriteSchema): untouched partitions would keep files of
         # the old schema that the new catalog columns cannot read.
+        # For the same reason a merge evolution may add columns here
+        # but not change an existing column's type.
+        if schema_evolution == SchemaEvolution.MERGE:
+            check_no_type_changes(
+                df_cols, table.columns, "partition OVERWRITE with MERGE evolution"
+            )
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

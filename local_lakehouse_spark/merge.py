@@ -8,21 +8,28 @@ the reference tests (tests/test_dataframes.py:658-837) are:
 ``when_not_matched_by_source_update(updates=...)``,
 ``when_not_matched_by_source_delete``.
 
-This implementation is Spark-native: one full-outer join classifies
-every row as matched / not-matched-by-target / not-matched-by-source,
-each clause maps to a projection over the join, and ``execute()``
-commits the rewritten PARQUET table with an atomic directory swap;
-DELTA tables commit deletion vectors plus appended rows through the
-Python Delta log instead.
+This implementation is Spark-native and reads the target once: one
+join of a position-bearing target read with the source classifies
+every joined row by the first clause that takes it, and the small
+classified result is persisted for the commit. From it come the
+ambiguity check, the dead target positions and the appended rows.
+DELTA tables commit the dead positions as deletion vectors plus the
+appended rows through the Python Delta log, Iceberg tables as a
+position-delete file plus the appended rows, and PARQUET tables as
+an atomic rewrite: the target minus the dead positions, plus the
+appended rows.
 
-Scale notes: the join shuffles on the merge keys exactly like Delta's
-own MERGE; small sources are broadcast automatically by AQE. No
-driver-side row handling anywhere.
+Scale notes: the join keeps the target on its streamed side, so a
+small source broadcasts and the target is never shuffled; only the
+touched rows are cached. No row passes through the driver except the
+dead positions, one touched file at a time, when a DELTA commit builds
+its deletion vectors.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,13 +45,6 @@ from .io import (
     strip_file_scheme,
 )
 from .models import FileType, Table
-
-
-def _union_all(dfs: list[DataFrame]) -> DataFrame:
-    out = dfs[0]
-    for df in dfs[1:]:
-        out = out.unionByName(df)
-    return out
 
 
 def default_merge_condition(table: Table, source_alias: str, target_alias: str) -> str:
@@ -103,15 +103,18 @@ class SparkMerger:
         self._evolve = True
         return self
 
-    def _new_source_fields(self) -> list:
-        target_cols = {
-            c.name for c in (self._table.columns or [])
-        }
-        return [
-            f
-            for f in self._source.schema.fields
-            if f.name not in target_cols
-        ]
+    def _with_new_columns(self, target: DataFrame) -> DataFrame:
+        """``target`` plus a NULL column per source column it lacks:
+        under schema evolution old rows read the new columns as NULL."""
+        if not self._evolve:
+            return target
+        return target.withColumns(
+            {
+                f.name: F.lit(None).cast(f.dataType)
+                for f in self._source.schema.fields
+                if f.name not in target.columns
+            }
+        )
 
     # -- clause builders (names match delta-rs / reference tests) ----------
 
@@ -145,288 +148,181 @@ class SparkMerger:
 
     # -- execution ----------------------------------------------------------
 
-    def _result_plan(self) -> DataFrame:
-        """Build the merged DataFrame: full-outer join + per-class projection."""
-        target = read_table(self._spark, self._table)
-        if self._evolve:
-            # evolution for log-less (PARQUET) targets: the rewrite
-            # carries the new columns, existing rows surface NULL
-            for f in self._source.schema.fields:
-                if f.name not in target.columns:
-                    target = target.withColumn(
-                        f.name, F.lit(None).cast(f.dataType)
-                    )
-        out_cols = target.columns
-        s, t = self._s, self._t
-
-        tgt = target.withColumn("__t_present", F.lit(True)).alias(t)
-        src = self._source.withColumn("__s_present", F.lit(True)).alias(s)
-        joined = tgt.join(src, F.expr(self._condition), "full_outer")
-
-        t_present = F.col(f"{t}.__t_present").isNotNull()
-        s_present = F.col(f"{s}.__s_present").isNotNull()
-
-        def proj(prefix: str) -> list:
-            return [F.col(f"{prefix}.{c}").alias(c) for c in out_cols]
-
-        def apply_updates(updates: dict[str, str]) -> list:
-            cols = []
-            for c in out_cols:
-                if c in updates:
-                    cols.append(F.expr(updates[c]).alias(c))
-                else:
-                    cols.append(F.col(f"{t}.{c}").alias(c))
-            return cols
-
-        branches: list[DataFrame] = []
-
-        # Matched rows: first clause whose predicate holds wins
-        # (delta-rs evaluates clauses in order; we implement the common
-        # single-clause-per-class case plus ordered predicates).
-        if self._matched:
-            # 1:1 guaranteed here: execute() raises MergeAmbiguityError
-            # when a target row has multiple source matches and matched
-            # clauses exist, so joined matched rows don't fan out.
-            matched = joined.filter(t_present & s_present)
-            remaining = matched
-            for kind, updates, predicate in self._matched:
-                subset = remaining.filter(F.expr(predicate)) if predicate else remaining
-                if kind == "update_all":
-                    branches.append(subset.select(*proj(s)))
-                elif kind == "update":
-                    branches.append(subset.select(*apply_updates(updates or {})))
-                elif kind == "delete":
-                    pass  # drop
-                if predicate:
-                    remaining = remaining.filter(~F.expr(predicate) | F.expr(predicate).isNull())
-                else:
-                    remaining = remaining.limit(0)
-            branches.append(remaining.select(*proj(t)))  # untouched matched rows
-        else:
-            # No matched clauses → matched target rows pass through
-            # unchanged. Use a semi-join (one row per target row) so a
-            # target row matched by SEVERAL source rows — legal without
-            # matched clauses — is not duplicated by the outer join.
-            branches.append(
-                tgt.join(src, F.expr(self._condition), "left_semi")
-                .select(*proj(t))
-            )
-
-        # Source-only rows (not matched by target): insert clauses.
-        src_only = joined.filter(s_present & ~t_present)
-        remaining = src_only
-        for kind, updates, predicate in self._not_matched:
-            subset = remaining.filter(F.expr(predicate)) if predicate else remaining
-            if kind == "insert_all":
-                branches.append(subset.select(*proj(s)))
-            elif kind == "insert":
-                branches.append(
-                    subset.select(
-                        *[
-                            F.expr(updates[c]).alias(c) if c in (updates or {})
-                            else F.lit(None).cast(dict(target.dtypes)[c]).alias(c)
-                            for c in out_cols
-                        ]
-                    )
-                )
-            if predicate:
-                remaining = remaining.filter(~F.expr(predicate) | F.expr(predicate).isNull())
-            else:
-                remaining = remaining.limit(0)
-        # untouched source-only rows are NOT inserted (merge semantics)
-
-        # Target-only rows (not matched by source).
-        tgt_only = joined.filter(t_present & ~s_present)
-        remaining = tgt_only
-        for kind, updates, predicate in self._not_matched_by_source:
-            subset = remaining.filter(F.expr(predicate)) if predicate else remaining
-            if kind == "update":
-                branches.append(subset.select(*apply_updates(updates or {})))
-            elif kind == "delete":
-                pass  # drop
-            if predicate:
-                remaining = remaining.filter(~F.expr(predicate) | F.expr(predicate).isNull())
-            else:
-                remaining = remaining.limit(0)
-        branches.append(remaining.select(*proj(t)))  # untouched target-only rows
-
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
-
-    def _check_ambiguous_matches(self) -> None:
-        """Delta-parity guard: if any target row is matched by more
-        than one source row while matched-clauses exist, the
-        update/delete is nondeterministic — raise instead of silently
-        duplicating the target row (ADVICE r1). One existence-check
-        join with an early-out limit(1); the target row identity is a
-        plan-local monotonic id (never persisted)."""
-        target = read_table(self._spark, self._table).withColumn(
-            "__t_id", F.monotonically_increasing_id()
-        )
-        dup = (
-            target.alias(self._t)
-            .join(self._source.alias(self._s), F.expr(self._condition), "inner")
-            .groupBy("__t_id")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise MergeAmbiguityError(
-                f"MERGE into {self._table.full_name}: {int(dup[0]['__n'])} "
-                "source rows matched a single target row under condition "
-                f"{self._condition!r}; matched-clause updates/deletes would "
-                "be nondeterministic (Delta raises the same error)"
-            )
-
-    def _dv_change_set(
+    @contextmanager
+    def _change_set(
         self, target: DataFrame
-    ) -> tuple[DataFrame, Optional[DataFrame]]:
-        """Decompose the merge into its ROW-LEVEL change set over a
-        position-bearing target read (read_delta_with_positions):
-        (dead_positions, appended_rows). A target row hit by an
-        update/delete clause contributes its (file, position) to the
-        deletion vectors; updates and inserts contribute their
-        post-image rows to the append. Untouched rows contribute
-        NOTHING — they stay in their files, which is the whole point
-        of a DV merge. Clause ordering/first-match-wins semantics are
-        identical to _result_plan's."""
+    ) -> Iterator[tuple[DataFrame, Optional[DataFrame]]]:
+        """The merge's row-level change set over a position-bearing
+        target read (the table's columns, then ``__llh_fn`` file and
+        ``__llh_ri`` row position): ``(dead, appended)``. ``dead``
+        (file_name, row_index) holds every target row an update or
+        delete clause hits; ``appended`` the post-images of updates
+        and inserts (None when no clause writes rows). Untouched rows
+        contribute NOTHING: they stay in their files.
+
+        This is the one clause interpreter, and it reads the target
+        ONCE: one join with the source, source-side (inner, or left
+        outer with NOT MATCHED BY SOURCE clauses) so a small source
+        broadcasts and the target is never shuffled. Per joined row
+        one CASE picks the first clause of its class (matched / not
+        matched by source) whose predicate holds, and one projection
+        evaluates that clause's post-image. The classified rows
+        (touched rows, plus every matched row) are persisted: the
+        ambiguity check, the dead positions and the appended rows all
+        read them. With NOT MATCHED clauses the source is persisted
+        with a row id, and the rows to insert are the source rows
+        whose id no matched row carries. Raises MergeAmbiguityError,
+        like Delta, when matched clauses exist and a target row
+        matches more than one source row, whether or not a clause
+        predicate holds for them."""
         out_cols = [
             c for c in target.columns if c not in ("__llh_fn", "__llh_ri")
         ]
         s, t = self._s, self._t
-        tgt = target.withColumn("__t_present", F.lit(True)).alias(t)
-        src = self._source.withColumn("__s_present", F.lit(True)).alias(s)
-        joined = tgt.join(src, F.expr(self._condition), "full_outer")
-        t_present = F.col(f"{t}.__t_present").isNotNull()
-        s_present = F.col(f"{s}.__s_present").isNotNull()
         target_types = dict(target.dtypes)
-
-        def proj(prefix: str) -> list:
-            return [F.col(f"{prefix}.{c}").alias(c) for c in out_cols]
-
-        def apply_updates(updates: dict[str, str]) -> list:
-            return [
-                F.expr(updates[c]).alias(c)
-                if c in updates
-                else F.col(f"{t}.{c}").alias(c)
-                for c in out_cols
-            ]
-
-        def pos(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col(f"{t}.__llh_fn").alias("file_name"),
-                F.col(f"{t}.__llh_ri").alias("row_index"),
-            )
-
-        dead: list[DataFrame] = []
-        appended: list[DataFrame] = []
-
-        if self._matched:
-            remaining = joined.filter(t_present & s_present)
-            for kind, updates, predicate in self._matched:
-                subset = (
-                    remaining.filter(F.expr(predicate))
-                    if predicate
-                    else remaining
-                )
-                dead.append(pos(subset))  # update rewrites = delete+append
-                if kind == "update_all":
-                    appended.append(subset.select(*proj(s)))
-                elif kind == "update":
-                    appended.append(
-                        subset.select(*apply_updates(updates or {}))
-                    )
-                if predicate:
-                    remaining = remaining.filter(
-                        ~F.expr(predicate) | F.expr(predicate).isNull()
-                    )
-                else:
-                    remaining = remaining.limit(0)
-
-        remaining = joined.filter(s_present & ~t_present)
-        for kind, updates, predicate in self._not_matched:
-            subset = (
-                remaining.filter(F.expr(predicate)) if predicate else remaining
-            )
-            if kind == "insert_all":
-                appended.append(subset.select(*proj(s)))
-            elif kind == "insert":
-                appended.append(
-                    subset.select(
-                        *[
-                            F.expr(updates[c]).alias(c)
-                            if c in (updates or {})
-                            else F.lit(None).cast(target_types[c]).alias(c)
-                            for c in out_cols
-                        ]
-                    )
-                )
-            if predicate:
-                remaining = remaining.filter(
-                    ~F.expr(predicate) | F.expr(predicate).isNull()
-                )
-            else:
-                remaining = remaining.limit(0)
-
-        remaining = joined.filter(t_present & ~s_present)
-        for kind, updates, predicate in self._not_matched_by_source:
-            subset = (
-                remaining.filter(F.expr(predicate)) if predicate else remaining
-            )
-            dead.append(pos(subset))
-            if kind == "update":
-                appended.append(subset.select(*apply_updates(updates or {})))
-            if predicate:
-                remaining = remaining.filter(
-                    ~F.expr(predicate) | F.expr(predicate).isNull()
-                )
-            else:
-                remaining = remaining.limit(0)
-
-        dead_df = (
-            _union_all(dead)
-            if dead
-            else self._spark.createDataFrame(
-                [], "file_name string, row_index bigint"
-            )
+        cached: list[DataFrame] = []
+        source = self._source
+        if self._not_matched:
+            source = source.withColumn(
+                "__sid", F.monotonically_increasing_id()
+            ).persist()
+            cached.append(source)
+        joined = target.alias(t).join(
+            source.withColumn("__s_present", F.lit(True)).alias(s),
+            F.expr(self._condition),
+            "left_outer" if self._not_matched_by_source else "inner",
         )
-        return dead_df, _union_all(appended) if appended else None
+        matched = f"{s}.__s_present IS NOT NULL"
+
+        def image(kind: str, updates: Optional[dict], c: str) -> str:
+            if kind == "delete":
+                return "NULL"
+            if kind in ("update_all", "insert_all"):
+                return f"{s}.{_q(c)}"
+            if c in (updates or {}):
+                return f"({updates[c]})"  # type: ignore[index]
+            if kind == "insert":
+                return f"CAST(NULL AS {target_types[c]})"
+            return f"{t}.{_q(c)}"
+
+        def classify(
+            rows: DataFrame, classes: list, *carry: str
+        ) -> tuple[DataFrame, Optional[str]]:
+            """``rows`` classified in one projection: ``carry``,
+            ``__c``, the index of the first clause of ``classes``
+            [(class condition, clauses)] that takes the row (NULL:
+            none does), and each column's post-image under that
+            clause; and the SQL test that ``__c`` names a clause that
+            writes a row (all but deletes; None: no clause does). The
+            projection is SQL text: one call builds it, however many
+            clauses and columns there are."""
+            clauses = [
+                (f"({cls}) AND ({p})" if p else cls, kind, updates)
+                for cls, group in classes
+                for kind, updates, p in group
+            ]
+            emit = [
+                str(i) for i, (_c, kind, _u) in enumerate(clauses)
+                if kind != "delete"
+            ]
+            return rows.selectExpr(
+                *carry,
+                _case([(cond, str(i)) for i, (cond, _k, _u) in enumerate(clauses)])
+                + " AS __c",
+                *[
+                    _case([(cond, image(k, u, c)) for cond, k, u in clauses])
+                    + f" AS {_q(c)}"
+                    for c in (out_cols if emit else ())
+                ],
+            ), (f"__c IN ({', '.join(emit)})" if emit else None)
+
+        classified, emits = classify(
+            joined,
+            [(matched, self._matched), (f"NOT ({matched})", self._not_matched_by_source)],
+            f"{t}.__llh_fn AS file_name",
+            f"{t}.__llh_ri AS row_index",
+            f"{matched} AS __m",
+            *([f"{s}.__sid"] if self._not_matched else []),
+        )
+        keep = "__c IS NOT NULL"
+        if self._matched or self._not_matched:
+            keep += " OR __m"
+        classified = classified.filter(keep).persist()
+        cached.append(classified)
+        try:
+            if self._matched:
+                dup = (
+                    classified.filter("__m")
+                    .groupBy("file_name", "row_index")
+                    .count()
+                    .filter("count > 1")
+                    .limit(1)
+                    .collect()
+                )
+                if dup:
+                    raise MergeAmbiguityError(
+                        f"MERGE into {self._table.full_name}: "
+                        f"{int(dup[0]['count'])} source rows matched a "
+                        "single target row under condition "
+                        f"{self._condition!r}; matched-clause "
+                        "updates/deletes would be nondeterministic "
+                        "(Delta raises the same error)"
+                    )
+            # every clause of a target row updates or deletes it
+            dead = classified.filter("__c IS NOT NULL").select(
+                "file_name", "row_index"
+            )
+            appended = [
+                classified.filter(emits).select(*out_cols)
+            ] if emits else []
+            if self._not_matched:
+                unmatched = source.join(
+                    classified.filter("__m").select("__sid"),
+                    "__sid",
+                    "left_anti",
+                ).alias(s)
+                inserts, emits = classify(
+                    unmatched, [("TRUE", self._not_matched)]
+                )
+                if emits:
+                    appended.append(inserts.filter(emits).select(*out_cols))
+            rows = _union(appended)
+            part_cols = [c.name for c in self._table.partition_columns()]
+            if rows is not None and part_cols:
+                # one writer per partition value (delta-spark's
+                # merge.repartitionBeforeWrite): one file per touched
+                # partition, not one per partition per join task
+                rows = rows.repartition(*part_cols)
+            if rows is not None and self._validate is not None:
+                # untouched rows passed the gate at their own write
+                self._validate(rows)
+            yield dead, rows
+        finally:
+            for df in cached:
+                df.unpersist()
 
     def execute(self) -> None:
-        """Materialize the merge and commit atomically, preserving the
-        table's storage layout (single file stays single file).
+        """Classify the rows once (_change_set) and commit the change
+        set atomically, preserving the table's storage layout.
 
-        DELTA tables take the DV path (delta-spark's low-shuffle
-        merge): touched rows are marked dead in their files' deletion
-        vectors and only rewritten/inserted rows append as new files —
-        a merge touching 0.1% of a 100 TB table commits bitmaps plus
-        0.1% of the data, never a table rewrite. PARQUET tables (no
-        log, no DV protocol) keep the full-rewrite commit."""
-        if self._matched:
-            self._check_ambiguous_matches()
+        DELTA tables commit it as deletion vectors plus appended rows
+        (delta-spark's low-shuffle merge); Iceberg as a position-delete
+        file plus appended rows, one snapshot. A merge touching 0.1%
+        of a 100 TB table commits bitmaps plus 0.1% of the data, never
+        a table rewrite. PARQUET tables (no log, no DV protocol) keep
+        the full rewrite: the target anti-joined with the dead
+        positions, plus the appended rows, swapped in atomically.
+        Only the appended rows pass the ``validate`` gate."""
         path = strip_file_scheme(self._table.storage_location or "")
         part_cols = [c.name for c in self._table.partition_columns()]
         if self._table.file_type == FileType.DELTA:
             from .sources import delta_py
 
-            if self._evolve:
-                # withSchemaEvolution: a metadata-only mergeSchema
-                # commit BEFORE the positional read, so the evolved
-                # columns flow through the DV change set like any
-                # other (old files read them as NULL; column-mapped
-                # tables get fresh ids/physical names)
-                delta_py.evolve_delta_schema(
-                    self._spark, path, list(self._source.schema.fields)
-                )
-            snap_probe = delta_py.DeltaLog(path).snapshot(
-                allow=delta_py.BATCH_READ_FEATURES
+            snap, target = delta_py.read_delta_with_positions(
+                self._spark, path
             )
             if (
-                snap_probe.configuration.get(
+                snap.configuration.get(
                     "delta.appendOnly", ""
                 ).lower() == "true"
                 and (self._matched or self._not_matched_by_source)
@@ -438,55 +334,60 @@ class SparkMerger:
                     "(delta.appendOnly=true): MERGE update/delete "
                     "clauses are not allowed (insert-only merges are)"
                 )
-            if snap_probe.adds:
-                # DV MERGE handles column-mapped tables too (round
-                # 7): the positional read surfaces logical names and
-                # apply_row_changes renames appends back to physical.
-                snap, target = delta_py.read_delta_with_positions(
-                    self._spark, path
-                )
-                dead, appended = self._dv_change_set(target)
-                if self._validate is not None and appended is not None:
-                    # untouched rows passed the gate at their own
-                    # write time; only the new/rewritten rows need it
-                    self._validate(appended)
-                self.written_schema = delta_py.apply_row_changes(
-                    self._spark, path, snap, dead, appended,
+            # the evolved schema commits only once the change set is
+            # known to be unambiguous
+            target = self._with_new_columns(target)
+            with self._change_set(target) as (dead, appended):
+                if self._evolve and delta_py.evolve_delta_schema(
+                    self._spark, path, list(self._source.schema.fields)
+                ):
+                    # a metadata-only mergeSchema commit (fresh ids
+                    # and physical names on column-mapped tables);
+                    # the positions were read at the version below it
+                    evolved = delta_py.DeltaLog(path).snapshot(
+                        allow=delta_py.BATCH_READ_FEATURES
+                    )
+                    if evolved.version != snap.version + 1:
+                        raise delta_py.ConcurrentModificationError(
+                            f"MERGE into {path}: the table changed "
+                            "while its schema evolved; retry the merge"
+                        )
+                    snap = evolved
+                if snap.adds:
+                    # DV MERGE handles column-mapped tables too: the
+                    # positional read surfaces logical names and
+                    # apply_row_changes renames appends back to
+                    # physical.
+                    self.written_schema = delta_py.apply_row_changes(
+                        self._spark, path, snap, dead, appended,
+                        operation="MERGE",
+                        operation_parameters={"predicate": self._condition},
+                    ).schema
+                    return
+                # empty table: nothing to DV — plain overwrite
+                self.written_schema = delta_py.write_delta(
+                    self._spark, _rows(appended, target), path,
+                    mode="overwrite", partition_by=part_cols or None,
                     operation="MERGE",
-                    operation_parameters={"predicate": self._condition},
                 ).schema
-                return
-            # empty table: nothing to DV — plain overwrite
-            result = self._result_plan()
-            if self._validate is not None:
-                self._validate(result)
-            self.written_schema = delta_py.write_delta(
-                self._spark, result, path,
-                mode="overwrite", partition_by=part_cols or None,
-                operation="MERGE",
-            ).schema
             return
         if self._table.file_type == FileType.ICEBERG:
-            # merge-on-read MERGE, the Delta-DV shape on Iceberg
-            # (round 9): the change set's dead rows become a
-            # position-delete file and the rewritten/inserted rows
-            # new data files, committed as ONE 'overwrite' snapshot
-            # (apply_iceberg_row_changes) — untouched rows stay in
-            # their files, so a merge touching 0.1% of a 100 TB
-            # table commits positions + 0.1% of the data.
+            # merge-on-read MERGE, the Delta-DV shape on Iceberg: the
+            # dead rows become a position-delete file and the
+            # rewritten/inserted rows new data files, committed as ONE
+            # 'overwrite' snapshot (apply_iceberg_row_changes).
             from .sources import iceberg_py
 
             meta = iceberg_py.table_metadata(path)
             iceberg_py._require_v2(meta, "MERGE INTO")
+            schema = iceberg_py.iceberg_schema_to_spark(
+                iceberg_py._current_schema(meta)
+            )
             if self._evolve:
-                known = {
-                    f["name"]
-                    for f in iceberg_py._current_schema(meta)["fields"]
-                }
                 fresh = [
                     f.name
                     for f in self._source.schema.fields
-                    if f.name not in known
+                    if f.name not in schema.names
                 ]
                 if fresh:
                     raise UnsupportedOperationError(
@@ -498,49 +399,88 @@ class SparkMerger:
             scan, data_files, _pos = iceberg_py._positional_scan(
                 self._spark, meta, path
             )
-            if scan is None:  # empty table: plain overwrite-create
-                result = self._result_plan()
-                if self._validate is not None:
-                    self._validate(result)
-                iceberg_py.write_iceberg(
-                    self._spark, result, path, mode="overwrite"
+            if scan is None:
+                target = self._spark.createDataFrame(
+                    [], schema.add("__llh_fn", "string").add("__llh_ri", "long")
                 )
-                return
-            schema_cols = [
-                f.name
-                for f in iceberg_py.iceberg_schema_to_spark(
-                    iceberg_py._current_schema(meta)
-                ).fields
-            ]
-            target = scan.select(
-                *[F.col(c) for c in schema_cols],
-                F.col("__fn").alias("__llh_fn"),
-                F.col("__ri").alias("__llh_ri"),
-            )
-            dead, appended = self._dv_change_set(target)
-            if self._validate is not None and appended is not None:
-                self._validate(appended)
-            dead = dead.select(
-                F.col("file_name"), F.col("row_index")
-            )
-            iceberg_py.apply_iceberg_row_changes(
-                self._spark,
-                path,
-                meta,
-                data_files,
-                dead,
-                appended,
-                operation="overwrite",
-            )
+            else:
+                target = scan.select(
+                    *schema.names,
+                    F.col("__fn").alias("__llh_fn"),
+                    F.col("__ri").alias("__llh_ri"),
+                )
+            with self._change_set(target) as (dead, appended):
+                if scan is None:  # empty table: plain overwrite-create
+                    iceberg_py.write_iceberg(
+                        self._spark, _rows(appended, target), path,
+                        mode="overwrite",
+                    )
+                    return
+                iceberg_py.apply_iceberg_row_changes(
+                    self._spark,
+                    path,
+                    meta,
+                    data_files,
+                    dead,
+                    appended,
+                    operation="overwrite",
+                )
             return
-        result = self._result_plan()
-        if self._validate is not None:
-            self._validate(result)
-        if not part_cols and _is_single_file(path):
-            _write_single_file(result, "parquet", path)
-        else:
-            _rewrite_table_dir(result, "parquet", path, partition_by=part_cols or None)
-        self.written_schema = result.schema
+        # PARQUET: the rewrite carries any evolved columns
+        target = self._with_new_columns(
+            read_table(self._spark, self._table)
+        ).withColumns(
+            {
+                "__llh_fn": F.col("_metadata.file_path"),
+                "__llh_ri": F.col("_metadata.row_index"),
+            }
+        )
+        with self._change_set(target) as (dead, appended):
+            kept = target.join(
+                dead.withColumnsRenamed(
+                    {"file_name": "__llh_fn", "row_index": "__llh_ri"}
+                ),
+                ["__llh_fn", "__llh_ri"],
+                "left_anti",
+            )
+            result = _rows(appended, kept)
+            if not part_cols and _is_single_file(path):
+                _write_single_file(result, "parquet", path)
+            else:
+                _rewrite_table_dir(
+                    result, "parquet", path, partition_by=part_cols or None
+                )
+            self.written_schema = result.schema
+
+
+def _case(branches: list[tuple[str, str]]) -> str:
+    """``CASE WHEN cond THEN value ... END``: the value of the first
+    branch whose condition holds (NULL when none does)."""
+    if not branches:
+        return "CAST(NULL AS INT)"
+    return "CASE " + " ".join(f"WHEN {c} THEN {v}" for c, v in branches) + " END"
+
+
+def _q(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _union(frames: list[DataFrame]) -> Optional[DataFrame]:
+    """The union (by name) of ``frames``; None when there are none."""
+    if not frames:
+        return None
+    out = frames[0]
+    for df in frames[1:]:
+        out = out.unionByName(df)
+    return out
+
+
+def _rows(appended: Optional[DataFrame], target: DataFrame) -> DataFrame:
+    """The table's rows after the merge: ``target``'s rows (positions
+    dropped) plus ``appended``."""
+    kept = target.drop("__llh_fn", "__llh_ri")
+    return kept if appended is None else kept.unionByName(appended)
 
 
 def merge_table(
@@ -558,17 +498,20 @@ def merge_table(
     to AND-equality over stored default merge columns, aliases default
     s/t. Returns a chainable merger.
 
-    ``validate`` runs over the merged result plan before the PARQUET
-    commit (the client passes its CHECK-constraint gate). The DELTA
-    path returns delta-spark's own merger, which enforces Delta's
-    native constraints itself.
+    ``validate`` (the client's CHECK-constraint gate) runs over the
+    rows the merge writes, the updated and inserted rows, before any
+    format commits; untouched rows passed it at their own write.
 
     ``schema_evolution`` (delta-spark's ``withSchemaEvolution()``):
     source columns ABSENT from the target relax the exact-schema
     gate — overlapping columns still type-check — and evolve the
     target schema (nullable) at execute() time; existing rows read
     the new columns back as NULL."""
-    from .types_map import check_schemas_equal, spark_schema_to_uc_columns
+    from .types_map import (
+        check_no_type_changes,
+        check_schemas_equal,
+        spark_schema_to_uc_columns,
+    )
 
     if table.file_type not in (
         FileType.DELTA,
@@ -579,32 +522,16 @@ def merge_table(
             f"MERGE is only supported for DELTA, PARQUET, and ICEBERG "
             f"tables, not {table.file_type.value}"
         )
+    source_cols = spark_schema_to_uc_columns(source.schema)
     if schema_evolution:
         # overlapping columns must type-match exactly; new columns
         # ride along and evolve the target at execute() time
-        from .exceptions import SchemaMismatchError
-
-        t_types = {
-            c.name: (c.data_type, c.type_precision, c.type_scale)
-            for c in (table.columns or [])
-        }
-        mismatched = [
-            c.name
-            for c in spark_schema_to_uc_columns(source.schema)
-            if c.name in t_types
-            and (c.data_type, c.type_precision, c.type_scale)
-            != t_types[c.name]
-        ]
-        if mismatched:
-            raise SchemaMismatchError(
-                "MERGE withSchemaEvolution: overlapping columns "
-                f"{mismatched} do not match the table types"
-            )
+        check_no_type_changes(
+            source_cols, table.columns, "MERGE withSchemaEvolution"
+        )
     else:
         # Exact schema match, parity dataframe.py:473.
-        check_schemas_equal(
-            spark_schema_to_uc_columns(source.schema), table.columns
-        )
+        check_schemas_equal(source_cols, table.columns)
     if condition is None:
         condition = default_merge_condition(table, source_alias, target_alias)
 

@@ -5735,8 +5735,8 @@ def y12(spark, sf):
     """Row-level DELETE producing deletion vectors — OUR writer this
     time (delta_py.delete_where, the delta-spark `DELETE FROM` /
     `DeltaTable.delete` analog): one filtered scan finds matching
-    positions, per-file RoaringBitmaps are built and written IN
-    EXECUTORS (applyInPandas per file), and the commit is
+    positions, a JVM groupBy gathers them per file for the driver to
+    build and write the RoaringBitmaps, and the commit is
     remove+re-add of untouched data files under a protocol upgrade —
     zero data rewritten, which at 100 TB is the whole point.
     CONTRACTS: after the delete the snapshot must carry nonempty DVs

@@ -79,7 +79,7 @@ import time
 import uuid
 from dataclasses import dataclass, field, replace
 from types import SimpleNamespace
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -251,6 +251,11 @@ class Snapshot:
     # appId -> version of the latest ``txn`` action (the protocol's
     # transaction identifiers; idempotent streaming sinks read them)
     txns: dict = field(default_factory=dict)
+    # delta-spark's commitInfo ``operationMetrics`` of the row-level
+    # DML that returned this snapshot (delete_where: numDeletedRows,
+    # update_where: numUpdatedRows); empty on a snapshot read from
+    # the log, or when the DML matched nothing and committed nothing
+    operation_metrics: dict = field(default_factory=dict)
 
     @property
     def schema(self) -> T.StructType:
@@ -1111,19 +1116,37 @@ def partition_keep(
 ) -> bool:
     """Conservative partition test: False only when the TYPED
     comparison proves the file holds no matching row."""
-    tv_file = typed_partition_value(pv, dtype)
-    tv_lit = typed_partition_value(value, dtype)
-    if tv_file is None or tv_lit is None:
+    return _range_keep(pv, pv, op, value, dtype)
+
+
+def _range_keep(
+    lo: object, hi: object, op: str, value: object, dtype: T.DataType | None
+) -> bool:
+    """Conservative range test: False only when values in [lo, hi]
+    provably fail ``col <op> value``, compared as the column's type
+    (stats say ``2024-01-01T00:00:00`` where a literal may say
+    ``2024-01-01 00:00:00``). A bound or literal that does not parse
+    (``'2024-1-1'``, a date to Spark's cast), or a non-string literal
+    against a string or boolean column, keeps the file."""
+    tn = dtype.typeName() if dtype is not None else "string"
+    if tn in ("string", "char", "varchar", "boolean") and not isinstance(
+        value, str
+    ):
+        return True
+    if tn == "boolean" and str(value).lower() not in ("true", "false"):
+        return True
+    lo, hi, lit = (typed_partition_value(v, dtype) for v in (lo, hi, value))
+    if lo is None or hi is None or lit is None:
         return True
     try:
         return {
-            "=": tv_file == tv_lit,
-            "<": tv_file < tv_lit,
-            "<=": tv_file <= tv_lit,
-            ">": tv_file > tv_lit,
-            ">=": tv_file >= tv_lit,
+            "=": lo <= lit <= hi,
+            "<": lo < lit,
+            "<=": lo <= lit,
+            ">": hi > lit,
+            ">=": hi >= lit,
         }.get(op, True)
-    except TypeError:
+    except TypeError:  # e.g. a zone-aware bound, a naive literal
         return True
 
 
@@ -1139,8 +1162,8 @@ def candidate_files(
     stats and partitionValues; equal to the logical name unless the
     table is column-mapped). Files without stats for the column, and
     null (``__HIVE_DEFAULT_PARTITION__``) partition values, are kept:
-    skipping must never drop a possible match. Partition values are
-    compared typed (partition_keep)."""
+    skipping must never drop a possible match. Partition values and
+    min/max stats are compared typed (_range_keep)."""
     out = []
     phys = snap.physical_names
     dtypes = {phys.get(f.name, f.name): f.dataType for f in snap.schema.fields}
@@ -1156,23 +1179,9 @@ def candidate_files(
         stats = json.loads(add.get("stats") or "{}")
         lo = (stats.get("minValues") or {}).get(col)
         hi = (stats.get("maxValues") or {}).get(col)
-        if lo is None or hi is None:
-            out.append(rel)
-            continue
-        try:
-            keep = {
-                "=": lo <= value <= hi,
-                "<": lo < value,
-                "<=": lo <= value,
-                ">": hi > value,
-                ">=": hi >= value,
-            }.get(op, True)
-        except TypeError:
-            # incomparable literal vs JSON-stat type (e.g. datetime
-            # vs ISO string): keep the file — skipping is an
-            # optimization, never the correctness mechanism
-            keep = True
-        if keep:
+        if lo is None or hi is None or _range_keep(
+            lo, hi, op, value, dtypes.get(col)
+        ):
             out.append(rel)
     return out
 
@@ -2836,14 +2845,20 @@ def _predicate_conjuncts(predicate: str) -> tuple[list[tuple], bool]:
     return out, complete
 
 
-def _grown_dvs(
-    spark: SparkSession, snap: Snapshot, path: str, predicate: str
-) -> tuple[dict, list]:
-    """Shared machinery of DV-based DELETE/UPDATE: per file touched
-    by ``predicate``, the union of its existing DV and the newly
-    matching positions. Scans the RAW files (existing DVs are unioned
-    into the bitmap, so re-marking an already-deleted row is a
-    no-op).
+def _dml_hits(
+    spark: SparkSession,
+    snap: Snapshot,
+    path: str,
+    predicate: str,
+    live: bool,
+) -> Optional[DataFrame]:
+    """The rows of a DV DELETE/UPDATE: the table's (logical) columns
+    plus ``__llh_fn``/``__llh_ri`` of every row ``predicate`` matches,
+    or None when no file can match. ``live=False`` scans the RAW files
+    (rows already deleted may match again: unioning them into their
+    DV is a no-op, and the scan skips the DV anti-join); ``live=True``
+    anti-joins the existing DVs, for callers that need the rows'
+    values.
 
     The scan is STATS-PRUNED first: every top-level ``col op
     literal`` conjunct of the predicate drops files whose min/max
@@ -2855,19 +2870,12 @@ def _grown_dvs(
 
     rels = pruned_adds(snap, _predicate_conjuncts(predicate)[0])
     if not rels:
-        return {}, []  # no file's range can match: metadata-only no-op
-    scan = _file_scan(spark, snap, path, [snap.adds[r] for r in rels])
-    hits = (
-        _to_logical(
-            _drop_deleted(scan, {}, path), snap.schema, "__llh_fn", "__llh_ri"
-        )
-        .filter(F.expr(predicate))
-        .select(
-            F.col("__llh_fn").alias("file_name"),
-            F.col("__llh_ri").alias("row_index"),
-        )
-    )
-    return _grown_dvs_from_hits(spark, snap, path, hits)
+        return None  # no file's range can match: metadata-only no-op
+    scan = _file_scan(spark, snap, path, rels.values())
+    dv_adds = {r: a for r, a in rels.items() if live and a.get("deletionVector")}
+    return _to_logical(
+        _drop_deleted(scan, dv_adds, path), snap.schema, "__llh_fn", "__llh_ri"
+    ).filter(F.expr(predicate))
 
 
 def _grown_dvs_from_hits(
@@ -2875,13 +2883,20 @@ def _grown_dvs_from_hits(
 ) -> tuple[dict, list]:
     """Grow per-file deletion vectors from a (file_name, row_index)
     DataFrame of newly dead positions: per touched file, the union of
-    its existing DV and the new positions, as (base_to_rel map,
-    [(file_name, descriptor)]). Bitmaps are built and their DV files
-    written IN EXECUTORS (applyInPandas, one group per file — assumes
-    executors share the table filesystem, true for any shared-store
-    deployment); only descriptor-sized rows reach the driver. Files
-    whose DV did not grow (every position already deleted) are
-    filtered out, so a no-op input yields an empty list."""
+    its existing DV and the new positions. Returns (base_to_rel map,
+    [(file_name, descriptor, rows newly deleted)]) sorted by file.
+
+    The bitmaps are built and their DV files written ON THE DRIVER: a
+    JVM ``groupBy(file_name)`` gathers each file's sorted positions
+    and ``toLocalIterator`` hands them over a partition at a time, so
+    the driver holds one touched file's positions at a time — the
+    same order of memory as the decoded DVs the read path broadcasts.
+    No Python worker starts and no closure is pickled. Files whose DV
+    did not grow (every position already deleted) write nothing, so
+    a no-op input yields an empty list."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
     from . import delta_dv
 
     base_to_rel = {os.path.basename(unquote(r)): r for r in snap.adds}
@@ -2890,37 +2905,24 @@ def _grown_dvs_from_hits(
             f"Delta table at {path} has colliding data-file basenames; "
             "positional delete would mix files"
         )
-    old_dvs = {
-        os.path.basename(unquote(r)): a.get("deletionVector")
-        for r, a in snap.adds.items()
-    }
-
-    def build(key, pdf):
-        import json as _json
-
-        import numpy as _np
-        import pandas as _pd
-
-        fn = key[0]
-        idx = pdf["row_index"].to_numpy(dtype=_np.int64)
-        old = old_dvs.get(fn)
-        if old is not None:
-            idx = _np.union1d(idx, delta_dv.load_dv_indices(old, path))
-        desc = delta_dv.write_dv_file(path, idx)
-        return _pd.DataFrame(
-            {"file_name": [fn], "descriptor": [_json.dumps(desc)]}
+    per_file = hits.groupBy("file_name").agg(
+        F.sort_array(F.collect_list("row_index")).alias("positions")
+    )
+    built = []
+    for row in per_file.toLocalIterator():
+        old = snap.adds[base_to_rel[row.file_name]].get("deletionVector")
+        idx = np.union1d(
+            np.asarray(row.positions, dtype=np.int64),
+            delta_dv.load_dv_indices(old, path)
+            if old
+            else np.empty(0, np.int64),
         )
-
-    built = hits.groupBy("file_name").applyInPandas(
-        build, "file_name string, descriptor string"
-    ).collect()
-    built = [
-        r
-        for r in built
-        if json.loads(r.descriptor)["cardinality"]
-        != int((old_dvs.get(r.file_name) or {}).get("cardinality") or 0)
-    ]
-    return base_to_rel, sorted(built, key=lambda r: r.file_name)
+        grown = len(idx) - int((old or {}).get("cardinality") or 0)
+        if grown:
+            built.append(
+                (row.file_name, delta_dv.write_dv_file(path, idx), grown)
+            )
+    return base_to_rel, sorted(built, key=lambda b: b[0])
 
 
 def _dv_commit_actions(
@@ -2948,10 +2950,9 @@ def _dv_commit_actions(
                 }
             }
         )
-    for row in built:
-        rel = base_to_rel[row.file_name]
+    for file_name, desc, _grown in built:
+        rel = base_to_rel[file_name]
         old_add = snap.adds[rel]
-        desc = json.loads(row.descriptor)
         actions.append(
             {
                 "remove": {
@@ -2989,18 +2990,30 @@ def delete_where(
     Existing DVs are unioned in (deleting an already-deleted row is
     a no-op — repeated DELETEs of the same predicate commit
     nothing), and the commit reads the files it touches: losing a
-    version race retries only past commits disjoint from them."""
+    version race retries only past commits disjoint from them.
+
+    The returned snapshot's ``operation_metrics["numDeletedRows"]``
+    (also in the commit's ``commitInfo``) counts the rows deleted:
+    the growth of the DV cardinalities, so no second scan counts
+    them."""
     log = DeltaLog(path)
     # Column-mapped tables are fully supported here: the predicate
-    # scan translates physical names (_grown_dvs) and the commit
+    # scan translates physical names (_dml_hits) and the commit
     # only grows bitmaps — no data file is written at all.
     snap = log.snapshot(allow=BATCH_READ_FEATURES)
     _check_writer_support(snap, path)
     if not snap.adds:
         return snap
-    base_to_rel, built = _grown_dvs(spark, snap, path, predicate)
+    hits = _dml_hits(spark, snap, path, predicate, live=False)
+    if hits is None:
+        return snap
+    base_to_rel, built = _grown_dvs_from_hits(
+        spark, snap, path,
+        hits.selectExpr("__llh_fn AS file_name", "__llh_ri AS row_index"),
+    )
     if not built:
         return snap  # predicate matched nothing new: no commit
+    metrics = {"numDeletedRows": str(sum(b[2] for b in built))}
     now_ms = int(time.time() * 1000)
     actions = _dv_commit_actions(snap, base_to_rel, built, now_ms)
     if cdf_enabled(snap.configuration):
@@ -3023,12 +3036,16 @@ def delete_where(
                 "timestamp": now_ms,
                 "operation": "DELETE",
                 "operationParameters": {"predicate": predicate},
+                "operationMetrics": metrics,
                 "engineInfo": "local-lakehouse-spark delta_py",
             }
         }
     )
     version = commit_actions(log, snap, actions, reads=touched_paths(actions))
-    return log.snapshot(version, allow=BATCH_READ_FEATURES)
+    return replace(
+        log.snapshot(version, allow=BATCH_READ_FEATURES),
+        operation_metrics=metrics,
+    )
 
 
 def update_where(
@@ -3036,6 +3053,7 @@ def update_where(
     path: str,
     predicate: str,
     assignments: dict,
+    validate: Optional[Callable[[DataFrame], None]] = None,
 ) -> Snapshot:
     """UPDATE ... SET ... WHERE via deletion vectors — delta-spark's
     DV-enabled UPDATE: matched rows are marked deleted in their
@@ -3045,17 +3063,20 @@ def update_where(
     commit. At 100 TB an update touching 0.1% of rows writes 0.1% of
     the data instead of rewriting every touched file.
 
-    The new rows come from the DV-AWARE live read (read_delta), so
-    rows a previous delete removed can never resurrect as updated
-    copies. Like delete_where, an UPDATE whose predicate matches no
-    live row commits nothing — phrase predicates to exclude already-
-    updated rows (e.g. ``qty > 45 AND flag <> 'X'``) and re-runs are
-    true no-ops."""
+    One DV-AWARE scan finds the matched live rows and their
+    positions, so rows a previous delete removed can never resurrect
+    as updated copies. Like delete_where, an UPDATE whose predicate
+    matches no live row commits nothing — phrase predicates to
+    exclude already-updated rows (e.g. ``qty > 45 AND flag <> 'X'``)
+    and re-runs are true no-ops. ``validate`` (the client's
+    CHECK-constraint gate) runs over the post-images before anything
+    is written. The returned snapshot's
+    ``operation_metrics["numUpdatedRows"]`` counts the rows updated."""
     from pyspark.sql import functions as F
 
     log = DeltaLog(path)
     # Column-mapped tables are supported end to end: the DV build
-    # translates physical names (_grown_dvs) and the post-images are
+    # translates physical names (_dml_hits) and the post-images are
     # renamed logical -> physical right before the data write.
     snap = log.snapshot(allow=BATCH_READ_FEATURES)
     _check_writer_support(snap, path)
@@ -3077,46 +3098,63 @@ def update_where(
         raise UnsupportedOperationError(
             f"UPDATE may not assign IDENTITY columns {sorted(idents)}"
         )
-    base_to_rel, built = _grown_dvs(spark, snap, path, predicate)
-    if not built:
+    hits = _dml_hits(spark, snap, path, predicate, live=True)
+    if hits is None:
         return snap
-    # rewritten rows: live matched rows with assignments applied,
-    # appended as new files (Spark writes them distributed). The read
-    # is PINNED to the snapshot the DVs were grown from — reading
-    # LATEST would let a concurrent append's predicate-matching rows
-    # leak into the post-images with no DV on their originals
-    # (duplicates after commit_actions' disjoint-file retry).
-    updated = (
-        read_delta(spark, path, version=snap.version)
-        .filter(F.expr(predicate))
-        .withColumns(
-            {col: F.expr(expr) for col, expr in assignments.items()}
+    # ONE scan: the matched live rows, with their positions, are
+    # persisted; the DV build, the post-images and the CDF pre-images
+    # all read them. The read is PINNED to the snapshot the DVs grow
+    # from — reading LATEST would let a concurrent append's matching
+    # rows leak into the post-images with no DV on their originals.
+    hits = hits.persist()
+    try:
+        matched = hits.drop("__llh_fn", "__llh_ri")
+        # an assignment takes its column's type (delta-spark casts
+        # UPDATE SET values to the target column the same way)
+        updated = matched.withColumns(
+            {
+                col: F.expr(expr).cast(snap.schema[col].dataType)
+                for col, expr in assignments.items()
+            }
         )
-    )
-    # delta-spark UPDATE recomputes generated columns: an assignment
-    # to a generation INPUT must refresh the derived value, never
-    # carry the stale one forward.
-    updated = _apply_generated(updated, snap.schema, path, recompute=True)
-    cdc_actions: list[dict] = []
-    if cdf_enabled(snap.configuration):
-        # CDF: pre-images are the live matched rows, post-images the
-        # same rows with assignments (and generated recompute) applied
-        pre = (
-            read_delta(spark, path, version=snap.version)
-            .filter(F.expr(predicate))
-            .withColumn(CDF_TYPE_COL, F.lit("update_preimage"))
+        # delta-spark UPDATE recomputes generated columns: an
+        # assignment to a generation INPUT must refresh the derived
+        # value, never carry the stale one forward.
+        updated = _apply_generated(
+            updated, snap.schema, path, recompute=True
         )
-        post = updated.withColumn(CDF_TYPE_COL, F.lit("update_postimage"))
-        cdc_actions = _write_cdc_files(
-            spark, path, snap, pre.unionByName(post)
+        if validate is not None:
+            validate(updated)
+        base_to_rel, built = _grown_dvs_from_hits(
+            spark, snap, path,
+            hits.selectExpr("__llh_fn AS file_name", "__llh_ri AS row_index"),
         )
-    if snap.physical_names:
-        updated = _to_physical(updated, snap.schema)
-    tmp = path + f".__delta_tmp_{uuid.uuid4().hex}"
-    writer = updated.write.mode("overwrite")
-    if snap.partition_columns:
-        writer = writer.partitionBy(*snap.partition_columns)
-    writer.parquet(tmp)
+        if not built:
+            return snap
+        metrics = {"numUpdatedRows": str(sum(b[2] for b in built))}
+        cdc_actions: list[dict] = []
+        if cdf_enabled(snap.configuration):
+            # CDF: pre-images are the live matched rows, post-images
+            # the same rows with assignments (and generated
+            # recompute) applied
+            pre = matched.withColumn(
+                CDF_TYPE_COL, F.lit("update_preimage")
+            )
+            post = updated.withColumn(
+                CDF_TYPE_COL, F.lit("update_postimage")
+            )
+            cdc_actions = _write_cdc_files(
+                spark, path, snap, pre.unionByName(post)
+            )
+        if snap.physical_names:
+            updated = _to_physical(updated, snap.schema)
+        tmp = path + f".__delta_tmp_{uuid.uuid4().hex}"
+        writer = updated.write.mode("overwrite")
+        if snap.partition_columns:
+            writer = writer.partitionBy(*snap.partition_columns)
+        writer.parquet(tmp)
+    finally:
+        hits.unpersist()
     _enforce_constraints_on_tmp(spark, snap, tmp, path)
     moved = _move_parts(tmp, path)
     now_ms = int(time.time() * 1000)
@@ -3131,12 +3169,16 @@ def update_where(
                 "timestamp": now_ms,
                 "operation": "UPDATE",
                 "operationParameters": {"predicate": predicate},
+                "operationMetrics": metrics,
                 "engineInfo": "local-lakehouse-spark delta_py",
             }
         }
     )
     version = commit_actions(log, snap, actions, reads=touched_paths(actions))
-    return log.snapshot(version, allow=BATCH_READ_FEATURES)
+    return replace(
+        log.snapshot(version, allow=BATCH_READ_FEATURES),
+        operation_metrics=metrics,
+    )
 
 
 def read_delta_with_positions(
@@ -3315,10 +3357,10 @@ def apply_row_changes(
     deletion vectors, and ``new_rows`` (if any) append as new files.
     This is the shared machinery of DV-backed MERGE: a merge touching
     0.1% of a 100 TB table commits bitmaps for the touched files plus
-    0.1% of the data — never a table rewrite. ``new_rows`` is
-    materialized BEFORE the DV build so both read the pre-change
-    snapshot. Always commits (MERGE parity: a no-op merge still lands
-    a history row)."""
+    0.1% of the data — never a table rewrite. Both inputs are read
+    twice (the DV build, then the data write), so they should come
+    from one persisted change set, as SparkMerger's do. Always commits
+    (MERGE parity: a no-op merge still lands a history row)."""
     from pyspark.sql import functions as F
 
     _check_writer_support(snap, path)
@@ -3356,7 +3398,7 @@ def apply_row_changes(
         # semi-join the positions being marked deleted. MERGE changes
         # are recorded as delete+insert pairs (the rewrite's own
         # representation); update_where records update_pre/postimage.
-        rels = {base_to_rel[row.file_name] for row in built}
+        rels = {base_to_rel[b[0]] for b in built}
         scan = _file_scan(spark, snap, path, [snap.adds[r] for r in rels])
         view = _to_logical(
             _drop_deleted(scan, {}, path), snap.schema, "__llh_fn", "__llh_ri"

@@ -204,3 +204,28 @@ def check_schemas_equal(df_cols: list[Column], table_cols: list[Column]) -> None
             f"df={[(c.name, c.data_type.value) for c in df_cols]} vs "
             f"table={[(c.name, c.data_type.value) for c in table_cols]}"
         )
+
+
+def check_no_type_changes(
+    df_cols: list[Column], table_cols: Optional[list[Column]], what: str
+) -> None:
+    """Raise SchemaMismatchError when a column present on both sides
+    changes its type: the rule of every schema evolution that keeps
+    existing files (a MERGE evolution, a dynamic partition overwrite),
+    whose old files could no longer be read as the new type. Added
+    columns pass."""
+    t_types = {
+        c.name: (c.data_type, c.type_precision, c.type_scale)
+        for c in (table_cols or [])
+    }
+    mismatched = [
+        c.name
+        for c in df_cols
+        if c.name in t_types
+        and (c.data_type, c.type_precision, c.type_scale) != t_types[c.name]
+    ]
+    if mismatched:
+        raise SchemaMismatchError(
+            f"{what}: overlapping columns {mismatched} do not match the "
+            "table types"
+        )

@@ -241,6 +241,35 @@ def test_schema_overwrite_replaces_partitioned_table(unity, spark, tmp_path):
     ]
 
 
+def test_merge_evolution_partition_overwrite_refuses_type_change(
+    unity, spark, tmp_path
+):
+    """A MERGE-evolution OVERWRITE of a partitioned PARQUET table
+    replaces only the partitions it writes, so it may add a column but
+    not change a column's type: the untouched partition keeps files of
+    the old type, which the new catalog type could not read."""
+    loc = _loc(tmp_path, "pm")
+    df = spark.createDataFrame([(1, 10, 1), (2, 20, 2)], "id long, v long, p int")
+    unity.create_as_table(
+        df, "unity", "default", "pm", location=loc, partition_cols=["p"]
+    )
+    with pytest.raises(SchemaMismatchError):
+        unity.write_table(
+            spark.createDataFrame([(3, "c", 2)], "id long, v string, p int"),
+            "unity", "default", "pm", mode="overwrite", schema_evolution="merge",
+        )
+    assert rows_set(unity.read_table("unity", "default", "pm")) == [
+        (1, 10, 1), (2, 20, 2),
+    ]
+    unity.write_table(
+        spark.createDataFrame([(3, 30, 2, "w")], "id long, v long, p int, w string"),
+        "unity", "default", "pm", mode="overwrite", schema_evolution="merge",
+    )
+    assert rows_set(unity.read_table("unity", "default", "pm").select(
+        "id", "v", "p", "w"
+    )) == [(1, 10, 1, None), (3, 30, 2, "w")]
+
+
 def test_time_travel_across_schema_overwrite(unity, spark, tmp_path):
     """A retained version reads with the schema it was written with and
     its partition values as written; restoring it brings that schema

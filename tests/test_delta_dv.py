@@ -1670,6 +1670,142 @@ def test_catalog_parquet_read_launches_no_job(unity, spark, tmp_path):
     assert sorted(q.collect()) == [(0, 14), (1, 13), (2, 13)]
 
 
+def _jobs_and_scans(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its Spark job count
+    and the file scans its SQL executions ran, as (execution id, scan
+    node) pairs: a scan node counts in an execution only when its
+    "number of files read" was reported there, so a cached relation
+    read again is not a scan."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList(max(0, store.executionsCount() - 50), 50)
+    scans = set()
+    for k in range(execs.size()):
+        e = execs.apply(k)
+        if e.description() != group:
+            continue
+        values = store.executionMetrics(e.executionId())
+        for j in range(e.metrics().size()):
+            m = e.metrics().apply(j)
+            if m.name() == "number of files read" and values.get(
+                m.accumulatorId()
+            ).isDefined():
+                scans.add((e.executionId(), m.accumulatorId()))
+    return len(sc.statusTracker().getJobIdsForGroup(group)), scans
+
+
+def test_dv_dml_and_merge_work_once(unity, spark, tmp_path):
+    """Row-level DML on a small DELTA table stays within its job
+    budget: a DV DELETE runs the one hit scan plus the bitmap gather
+    (2 jobs; 4-5 while a count scan and a Python worker built the
+    bitmaps), and an upsert MERGE reads the target once (10 jobs, one
+    scan; 12 jobs and four scans while the ambiguity check and each
+    write re-ran the join)."""
+    from local_lakehouse_spark import FileType
+
+    df = spark.createDataFrame(
+        [(i, i % 3, float(i)) for i in range(20)], "id long, g long, v double"
+    ).repartition(4)
+    unity.create_as_table(
+        df, "unity", "default", "w", file_type=FileType.DELTA,
+        location=str(tmp_path / "w"),
+    )
+    assert unity.delete_from("unity", "default", "w", "id = 7") == 1
+    jobs, _ = _jobs_and_scans(
+        spark, "dv-delete",
+        lambda: unity.delete_from("unity", "default", "w", "g = 1"),
+    )
+    assert jobs <= 3
+    src = spark.createDataFrame([(2, 9, 9.0), (100, 1, 1.0)], "id long, g long, v double")
+    jobs, scans = _jobs_and_scans(
+        spark, "upsert",
+        lambda: unity.merge_table(src, "unity", "default", "w", condition="t.id = s.id")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute(),
+    )
+    assert jobs <= 11
+    assert len(scans) == 1
+    assert sorted(r.id for r in unity.read_table("unity", "default", "w").collect()) == [
+        0, 2, 3, 5, 6, 8, 9, 11, 12, 14, 15, 17, 18, 100,
+    ]
+
+
+def test_dv_dml_counts_match_a_recount(unity, spark, tmp_path):
+    """delete_from and update_rows on DELTA return the rows they
+    changed, counted from the growth of the deletion vectors: equal to
+    a recount, with a matching row already deleted, and 0 for a
+    repeat. The counts land in the commit's operationMetrics."""
+    from local_lakehouse_spark import FileType
+
+    df = spark.createDataFrame(
+        [(i, i % 3) for i in range(12)], "id long, g long"
+    ).coalesce(1)
+    loc = str(tmp_path / "c")
+    unity.create_as_table(
+        df, "unity", "default", "c", file_type=FileType.DELTA, location=loc
+    )
+    assert unity.delete_from("unity", "default", "c", "id = 0") == 1
+
+    def recount(predicate):
+        return unity.read_table("unity", "default", "c").filter(predicate).count()
+
+    n = recount("g = 0")
+    assert n == 3
+    assert unity.update_rows("unity", "default", "c", {"id": "id + 100"}, "g = 0") == n
+    assert recount("id >= 100") == n
+    n = recount("g < 2")
+    assert n == 7
+    assert unity.delete_from("unity", "default", "c", "g < 2") == n
+    assert unity.delete_from("unity", "default", "c", "g < 2") == 0
+    assert recount("true") == 4
+    metrics = [
+        h.get("operationMetrics") for h in DeltaLog(loc).history()[:3]
+    ]
+    assert metrics == [
+        {"numDeletedRows": "7"}, {"numUpdatedRows": "3"}, {"numDeletedRows": "1"},
+    ]
+
+
+@pytest.mark.parametrize(
+    "dml, expected",
+    [
+        (lambda s, p: delta_py.delete_where(s, p, "tn <= '2024-01-01 00:00:00'"), [2]),
+        (lambda s, p: delta_py.delete_where(s, p, "d >= '2024-1-1'"), []),
+        (lambda s, p: delta_py.update_where(s, p, "d >= '2024-1-1'", {"id": "id + 100"}),
+         [101, 102]),
+    ],
+    ids=["timestamp_ntz", "date-delete", "date-update"],
+)
+def test_dv_dml_stats_pruning_is_typed(spark, tmp_path, dml, expected):
+    """The stats pruner compares dates and timestamps as values: the
+    JSON stats write ``2024-01-01T00:00:00`` and a literal may say
+    ``'2024-01-01 00:00:00'`` or ``'2024-1-1'`` (which Spark's cast
+    reads as a date), and no matching file may be skipped."""
+    import datetime
+
+    p = str(tmp_path / "typed")
+    delta_py.write_delta(
+        spark,
+        spark.createDataFrame(
+            [
+                (1, datetime.datetime(2024, 1, 1), datetime.date(2024, 1, 1)),
+                (2, datetime.datetime(2024, 6, 1, 12), datetime.date(2024, 6, 1)),
+            ],
+            "id long, tn timestamp_ntz, d date",
+        ).coalesce(1),
+        p,
+    )
+    dml(spark, p)
+    assert sorted(r.id for r in delta_py.read_delta(spark, p).collect()) == expected
+
+
 def _plan_nodes(plan, kind):
     """Nodes of a JVM logical plan whose class is ``kind``, pre-order."""
     out = [plan] if plan.getClass().getSimpleName() == kind else []

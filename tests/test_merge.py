@@ -567,3 +567,106 @@ def test_merge_schema_evolution_delta_column_mapped(
     assert delta_py.read_delta(spark, loc, version=0).columns == [
         "id", "v",
     ]
+
+
+# ---------------------------------------------------------------------------
+# MERGE semantics on every format with deletes outstanding
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(params=["DELTA", "ICEBERG"])
+def deleted_target(request, unity, spark, tmp_path):
+    """Table ``unity.default.t`` in one data file holding ids 1..4,
+    with id 4 already deleted by a deletion vector (DELTA) or a
+    position delete (ICEBERG)."""
+    from local_lakehouse_spark.models import FileType
+    from local_lakehouse_spark.sources import iceberg_py
+
+    loc = str(tmp_path / "dt")
+    df = spark.createDataFrame(
+        [(i, chr(ord("a") + i), 10 * i) for i in range(1, 5)], schema=SCHEMA
+    ).coalesce(1)
+    unity.create_as_table(
+        df, "unity", "default", "t",
+        file_type=FileType[request.param], location=loc,
+    )
+    if request.param == "DELTA":
+        assert unity.delete_from("unity", "default", "t", "id = 4") == 1
+    else:
+        iceberg_py.delete_iceberg_where(spark, loc, "id = 4")
+    assert _rows(unity) == [(1, "b", 10), (2, "c", 20), (3, "d", 30)]
+    return unity
+
+
+def test_merge_ambiguity_in_file_with_deletes(deleted_target, spark):
+    """Two source rows matching one target row of a file that already
+    carries deletes raise, with or without a matched-clause predicate
+    that holds for them, and leave the table as it was; without
+    matched clauses the duplicates are legal."""
+    from local_lakehouse_spark.exceptions import MergeAmbiguityError
+
+    src = spark.createDataFrame(
+        [(1, "x", 1), (1, "y", 2), (9, "z", 90)], schema=SCHEMA
+    )
+    for predicate in (None, "s.n > 1000"):
+        with pytest.raises(MergeAmbiguityError):
+            (
+                deleted_target.merge_table(
+                    src, "unity", "default", "t", condition="s.id = t.id"
+                )
+                .when_matched_update_all(predicate=predicate)
+                .when_not_matched_insert_all()
+                .execute()
+            )
+        assert _rows(deleted_target) == [(1, "b", 10), (2, "c", 20), (3, "d", 30)]
+    (
+        deleted_target.merge_table(src, "unity", "default", "t", condition="s.id = t.id")
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    assert _rows(deleted_target) == [
+        (1, "b", 10), (2, "c", 20), (3, "d", 30), (9, "z", 90),
+    ]
+
+
+def test_merge_ambiguity_against_deleted_row_is_not_a_match(deleted_target, spark):
+    """Source duplicates of a row that a delete already removed match
+    nothing: they insert, and the deleted row stays deleted."""
+    src = spark.createDataFrame([(4, "x", 1), (4, "y", 2)], schema=SCHEMA)
+    (
+        deleted_target.merge_table(src, "unity", "default", "t", condition="s.id = t.id")
+        .when_matched_update_all()
+        .when_not_matched_insert_all()
+        .execute()
+    )
+    assert _rows(deleted_target) == [
+        (1, "b", 10), (2, "c", 20), (3, "d", 30), (4, "x", 1), (4, "y", 2),
+    ]
+
+
+def test_dv_merge_not_matched_by_source_sees_every_file(unity, spark, tmp_path):
+    """A NOT MATCHED BY SOURCE clause reaches rows in files the source
+    never matches."""
+    path = _delta_target(unity, spark, tmp_path, n=10, files=3)
+    src = spark.createDataFrame([(0, "A", 0.5)], "id long, k string, v double")
+    (
+        unity.merge_table(src, "unity", "default", "dvm")
+        .when_matched_update_all()
+        .when_not_matched_by_source_update({"v": "t.v + 100"}, predicate="t.id >= 8")
+        .when_not_matched_by_source_delete(predicate="t.id BETWEEN 4 AND 5")
+        .execute()
+    )
+    from local_lakehouse_spark.sources.delta_py import (
+        BATCH_READ_FEATURES,
+        DeltaLog,
+    )
+
+    assert len(DeltaLog(path).snapshot(allow=BATCH_READ_FEATURES).adds) > 3
+    rows = sorted(
+        (r.id, r.k, r.v)
+        for r in unity.read_table("unity", "default", "dvm").collect()
+    )
+    assert rows == [
+        (0, "A", 0.5), (1, "b", 1.0), (2, "c", 2.0), (3, "d", 3.0),
+        (6, "g", 6.0), (7, "h", 7.0), (8, "i", 108.0), (9, "j", 109.0),
+    ]
